@@ -296,30 +296,17 @@ def write_bench_md(summary: dict, suite: dict | None = None) -> None:
         ]
     # Rewrite ONLY the generated head (scaling + per-query tables); preserve
     # every hand-curated section after the explicit sentinel — a --scaling
-    # run must not clobber the round notes / sf1 rehearsal evidence.  The
-    # sentinel is primary so renaming headings can't silently lose the tail;
-    # heading markers remain as a warned fallback.
+    # run must not clobber the round notes / sf1 rehearsal evidence.  Without
+    # the sentinel there is no safe splice point, so refuse to write.
     path = os.path.join(os.path.dirname(__file__) or ".", "BENCH.md")
     lines += [SENTINEL, ""]
-    tail = ""
-    try:
-        old = open(path).read()
-        i = old.find(SENTINEL)
-        if i != -1:
-            tail = old[i + len(SENTINEL):].lstrip("\n")
-        else:
-            print(f"bench: BENCH.md sentinel {SENTINEL!r} missing; "
-                  "falling back to heading markers", file=sys.stderr)
-            for marker in ("## Per-query latency", "## Round-", "## sf1 "):
-                i = old.find(marker)
-                if i != -1:
-                    tail = old[i:]
-                    break
-            else:
-                print("bench: no curated-tail marker found either — "
-                      "curated sections will be LOST", file=sys.stderr)
-    except OSError:
-        pass
+    with open(path) as f:
+        old = f.read()
+    i = old.find(SENTINEL)
+    if i == -1:
+        sys.exit(f"bench: BENCH.md sentinel {SENTINEL!r} missing; "
+                 "not rewriting BENCH.md")
+    tail = old[i + len(SENTINEL):].lstrip("\n")
     with open(path, "w") as f:
         f.write("\n".join(lines))
         if tail:

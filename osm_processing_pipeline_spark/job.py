@@ -62,14 +62,21 @@ def main(argv: list[str] | None = None) -> int:
         print(f"unknown query {args.query!r}; available: "
               f"{', '.join(sorted(registry.QUERIES))}", file=sys.stderr)
         return 2
+    # .count() would let Catalyst prune every column's work, so materialize
+    # through a real sink and count rows on that same execution
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation("rows")
     t0 = time.time()
-    df = registry.QUERIES[args.query](spark, args.sf_dir)
+    df = registry.QUERIES[args.query](spark, args.sf_dir) \
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
     if args.out:
         df.write.mode("overwrite").parquet(args.out)
-        n = spark.read.parquet(args.out).count()
     else:
-        n = df.count()
-    print(f"{args.query}: rows={n} wall={time.time() - t0:.2f}s", file=sys.stderr)
+        df.write.format("noop").mode("overwrite").save()
+    wall = time.time() - t0
+    print(f"{args.query}: rows={obs.get['rows']} wall={wall:.2f}s", file=sys.stderr)
     return 0
 
 

@@ -100,6 +100,10 @@ def jaccard_pairs(sets: DataFrame, key: str = "shingle",
     and shuffle-hash beyond.  ``inter_cnt >= 1`` preserves the self-join
     mode's inner semantics (a candidate pair sharing zero keys — possible
     via minhash collision — yields no row in either mode).
+
+    Candidate mode requires distinct ``(doc_id, key)`` rows:
+    ``array_intersect`` de-duplicates but ``size`` does not, so a repeated
+    key would inflate ``union_cnt`` and understate the Jaccard.
     Returns (doc_a, doc_b, *carry, inter_cnt, union_cnt, jaccard_permille)."""
     if pairs is None:
         assert not carry, "carry requires a candidate pairs frame"

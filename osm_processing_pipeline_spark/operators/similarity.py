@@ -221,7 +221,7 @@ def embedding_neardup(embeddings: DataFrame, threshold_nano: int) -> DataFrame:
 
 
 IVF_LISTS = 16
-IVF_NPROBE = 2
+IVF_NPROBE = 2         # the q39 DuckDB twin unrolls exactly two probes
 IVF_KMEANS_ITERS = 2   # fixed-count Lloyd: both engines run the identical
                        # iteration sequence, so the trained centroids twin
 
@@ -267,7 +267,7 @@ def _argmin2(cols):
 
 
 def _assign_lists(q: DataFrame, cents: list[list[int]],
-                  nprobe: int = 2) -> DataFrame:
+                  nprobe: int = IVF_NPROBE) -> DataFrame:
     """(vec_id, probes) — the ``nprobe`` nearest centroids per quantized
     vector (probes[0] is the assignment list), one exact int64 matmul per
     Arrow batch.  Identical integers to the _score_cols/_argmin2 Catalyst
@@ -359,7 +359,8 @@ def train_ivf_centroids(embeddings: DataFrame,
 
 
 def ivf_ann_top1(embeddings: DataFrame, n_lists: int = IVF_LISTS,
-                 n_chunks: int | None = None, nprobe: int = 2) -> DataFrame:
+                 n_chunks: int | None = None,
+                 nprobe: int = IVF_NPROBE) -> DataFrame:
     """IVF ANN with TRAINED centroids: fixed-count Lloyd over the corpus
     builds the ``n_lists`` inverted lists (train_ivf_centroids); every
     vector is assigned to its nearest centroid, a query probes its top-2

@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 from ..functions import cells, geometry as G
 
 
-def segment_cell_pieces(segs: DataFrame, grid: DataFrame,
-                        broadcast_grid: bool = True) -> DataFrame:
+def segment_cell_pieces(segs: DataFrame, grid: DataFrame) -> DataFrame:
     """Join road segments to grid cells they intersect.
 
     Returns one row per (segment, cell) candidate that passes the exact
@@ -39,8 +38,7 @@ def segment_cell_pieces(segs: DataFrame, grid: DataFrame,
         F.explode(cells.segment_cover(F.col("ax"), F.col("ay"),
                                       F.col("bx"), F.col("by"))),
     )
-    g = F.broadcast(grid) if broadcast_grid else grid
-    j = cand.join(g, "grid_id")
+    j = cand.join(F.broadcast(grid), "grid_id")
     args = (F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"),
             F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"))
     hit = G.seg_rect_intersects(*args)
@@ -74,37 +72,6 @@ def point_in_polygon_join(pts: DataFrame, polys: DataFrame,
     cand = polygon_candidates(pts, polys, px, py)
     return cand.filter(G.point_in_poly(F.col(px), F.col(py), F.col("edges"))) \
                .drop("_cell")
-
-
-def distance_join_segments_points(segs: DataFrame, feature_pts: DataFrame,
-                                  radius_deg: float,
-                                  fx: str = "cx", fy: str = "cy") -> DataFrame:
-    """ST_DWithin(road segment, point feature, d): segment cells x feature
-    disk cover equi-join, exact clamped-projection d^2 refine
-    (sql/road_scenery/04_scenery_hill.sql:7-26 semantics)."""
-    scov = segs.withColumn(
-        "_cell", F.explode(cells.segment_cover(F.col("ax"), F.col("ay"),
-                                               F.col("bx"), F.col("by"))))
-    fcov = feature_pts.withColumn(
-        "_cell", F.explode(cells.disk_cover_of_point(F.col(fx), F.col(fy), radius_deg)))
-    cand = scov.join(fcov, "_cell")
-    d2 = G.seg_point_dist2_deg(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"),
-                               F.col(fx), F.col(fy))
-    return cand.filter(d2 <= F.lit(radius_deg) * F.lit(radius_deg)).drop("_cell")
-
-
-def distance_join_points(pts: DataFrame, feature_pts: DataFrame,
-                         radius_deg: float,
-                         px: str = "lon", py: str = "lat",
-                         fx: str = "cx", fy: str = "cy") -> DataFrame:
-    """ST_DWithin(point, feature_point, d) via k-ring expansion + exact d^2
-    compare (no sqrt).  Ring radius ceil(d/cell) guarantees completeness."""
-    p = pts.withColumn("_cell", cells.cell_of_point(F.col(px), F.col(py)))
-    fcov = feature_pts.withColumn(
-        "_cell", F.explode(cells.disk_cover_of_point(F.col(fx), F.col(fy), radius_deg)))
-    cand = p.join(fcov, "_cell")
-    d2 = G.point_dist2_deg(F.col(px), F.col(py), F.col(fx), F.col(fy))
-    return cand.filter(d2 <= F.lit(radius_deg) * F.lit(radius_deg)).drop("_cell")
 
 
 def road_cells(segs: DataFrame) -> DataFrame:

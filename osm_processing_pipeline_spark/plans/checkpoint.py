@@ -121,15 +121,16 @@ def load_stage(spark: SparkSession, out_dir: str,
     Reads ONLY the range directories recorded in the manifest for the given
     stage/lineage — a shrunk range layout under a new lineage leaves stale
     range=N directories on disk, and a bare glob would silently read them
-    back alongside fresh output.  Falls back to the glob only when no
-    manifest records match (legacy stores)."""
+    back alongside fresh output.  Raises when no manifest record matches."""
     recs = read_manifest(out_dir)
     if stage is not None:
         recs = [r for r in recs if r["stage"] == stage]
     if lineage is not None:
         recs = [r for r in recs if r["lineage"] == lineage]
     if not recs:
-        return spark.read.parquet(os.path.join(out_dir, "range=*"))
+        raise FileNotFoundError(
+            f"no manifest record for stage={stage!r} lineage={lineage!r} "
+            f"in {out_dir}")
     rids = sorted({r["range_id"] for r in recs})
     return spark.read.parquet(
         *[os.path.join(out_dir, f"range={rid}") for rid in rids])

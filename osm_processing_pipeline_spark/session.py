@@ -8,6 +8,7 @@ on a 1000-executor cluster and scaled down via environment variables.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -71,9 +72,12 @@ def get_spark(app_name: str = "osm-spark-engine",
 
 def apply_runtime_confs(spark: SparkSession) -> None:
     """Best-effort apply runtime-settable confs to a session we didn't build
-    (the verify driver passes us its own)."""
+    (a caller may pass its own); each conf that cannot be set is reported on
+    stderr and skipped."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass
+        except Exception as e:  # noqa: BLE001
+            first = str(e).strip().split("\n", 1)[0]
+            print(f"apply_runtime_confs: could not set {k}={v}: "
+                  f"{type(e).__name__}: {first}", file=sys.stderr)

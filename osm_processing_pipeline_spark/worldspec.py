@@ -107,7 +107,6 @@ LAYERS = [
     "hills_nodes", "mountain_pass", "rivers",                  # points
 ]
 POLY_LAYERS = LAYERS[:5]
-POINT_LAYERS = LAYERS[5:]
 
 # pentagon unit directions (exact double literals, same text in SQL)
 PENT_X = [1.0, 0.30901699437494745, -0.8090169943749473,
@@ -131,7 +130,6 @@ RASTER_PX = 1024            # world is 1024x1024 px, 8 px per grid cell
 TILE_PX = 16                # => 64x64 tiles, one tile covers 2x2 grid cells
 N_TILES = RASTER_PX // TILE_PX
 PX_PER_CELL = RASTER_PX // NX
-RASTER_NODATA = -9999
 URBAN_PX_LO = int(URBAN_LO * RASTER_PX)   # 512
 URBAN_PX_HI = int(URBAN_HI * RASTER_PX)   # 576
 URBAN_POP_BOOST = 400

@@ -15,10 +15,8 @@ sys.path.insert(0, ".")
 
 from osm_processing_pipeline_spark import registry  # noqa: E402
 from osm_processing_pipeline_spark.session import get_spark  # noqa: E402
+from tests.conftest import TABLES  # noqa: E402
 from tests.util import assert_frames_exact  # noqa: E402
-
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
 
 
 def main() -> int:

@@ -6,59 +6,28 @@ Usage: python scripts/sf1_rehearsal.py q58_persona_v1_simplified [qNN ...]
        [--sf-dir /tmp/sf1] [--repeat 2]
 """
 import argparse
+import os
 import sys
 import time
 
 sys.path.insert(0, ".")
 
 from osm_processing_pipeline_spark import registry  # noqa: E402
-from osm_processing_pipeline_spark import session as S  # noqa: E402
 from osm_processing_pipeline_spark.datagen import world  # noqa: E402
+from osm_processing_pipeline_spark.session import get_spark  # noqa: E402
 
 
-def get_spark_with_ui(cores: int, shuffle_partitions: int):
-    """get_spark's exact conf set, but with the UI enabled so the REST
-    status API can report per-stage shuffle volumes."""
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName("sf1-rehearsal")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory",
-                __import__("os").environ.get("SPARK_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                str(64 * 1024 * 1024))
-    )
-    if S._tmpfs_ok():
-        builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
-    for k, v in S.RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
-def shuffle_stats(spark):
-    """(total_shuffle_write_bytes, peak_stage_write_bytes) via the REST
-    status API — the same counters the UI's stage page shows."""
-    import json
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return 0, 0
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/stages",
-                                timeout=30) as r:
-        stages = json.load(r)
-    tot = peak = 0
-    for s in stages:
-        w = s.get("shuffleWriteBytes", 0)
-        tot += w
-        peak = max(peak, w)
-    return tot, peak
+def stage_shuffle_writes(spark) -> dict[tuple[int, int], int]:
+    """{(stage_id, attempt_id): shuffle_write_bytes} for every stage the
+    SparkContext's status store holds — the counters the UI's stage page
+    shows, read without the UI or its REST API."""
+    sc = spark.sparkContext
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    stages = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        sc._jsc.sc().statusStore().stageList(
+            None, False, False, no_quantiles, None))
+    return {(s.stageId(), s.attemptId()): s.shuffleWriteBytes()
+            for s in stages}
 
 
 def main() -> int:
@@ -68,7 +37,7 @@ def main() -> int:
     ap.add_argument("--repeat", type=int, default=2)
     args = ap.parse_args()
 
-    spark = get_spark_with_ui(cores=32, shuffle_partitions=64)
+    spark = get_spark("sf1-rehearsal", shuffle_partitions=64)
     t0 = time.time()
     n = world.roads_materialized(spark, args.sf_dir).count()
     print(f"world materialized: {n} roads in {time.time()-t0:.1f}s",
@@ -76,17 +45,19 @@ def main() -> int:
 
     for name in args.queries:
         for i in range(args.repeat):
-            tot0, _ = shuffle_stats(spark)
+            before = stage_shuffle_writes(spark)
             t0 = time.time()
             df = registry.QUERIES[name](spark, args.sf_dir)
             df.write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
-            tot1, peak = shuffle_stats(spark)
-            import os
+            # this run's own stages: those the store did not hold before
+            own = [w for k, w in stage_shuffle_writes(spark).items()
+                   if k not in before]
             la = os.getloadavg()
             print(f"{name} run{i}: wall={wall:.1f}s rows_schema={len(df.columns)}c "
-                  f"shuffle_delta={(tot1-tot0)/2**30:.2f}GiB "
-                  f"peak_stage={peak/2**30:.2f}GiB loadavg={la[0]:.1f}",
+                  f"shuffle_delta={sum(own)/2**20:.1f}MiB "
+                  f"peak_stage={max(own, default=0)/2**20:.1f}MiB "
+                  f"loadavg={la[0]:.1f}",
                   flush=True)
     return 0
 

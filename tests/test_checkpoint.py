@@ -1,8 +1,10 @@
 """Checkpoint/resume: completed ranges are skipped on restart; a changed
 lineage invalidates them; resumed output is bit-identical."""
 
+import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_processing_pipeline_spark.datagen import world
@@ -87,6 +89,26 @@ def test_load_stage_ignores_stale_ranges_of_shrunk_layout(spark):
     got = CP.load_stage(spark, OUT, "pieces", lin_b)
     assert got.count() < total
     assert got.select(F.max("grid_id")).first()[0] < (NX * NY) // 2
-    # the bare glob (legacy) would have over-read — prove the stale dirs exist
+    # unfiltered, every recorded range is read — prove the stale dirs exist
     assert CP.load_stage(spark, OUT).count() > got.count()
+    shutil.rmtree(OUT, ignore_errors=True)
+
+
+def test_load_stage_without_manifest_record_raises(spark):
+    """A stage or lineage with no manifest record is an error naming both —
+    never a glob over whatever range=N directories happen to be on disk."""
+    shutil.rmtree(OUT, ignore_errors=True)
+    lin = CP.lineage_hash("ids", ["x"])
+    CP.run_stage(spark, "ids", lambda: spark.range(64), "id",
+                 CP.make_ranges(0, 64, 4), OUT, lin)
+    assert CP.load_stage(spark, OUT, "ids", lin).count() == 64
+    for stage, lineage in (("ids", "stale"), ("other", lin), ("other", None)):
+        with pytest.raises(FileNotFoundError,
+                           match=f"stage={stage!r} lineage={lineage!r}"):
+            CP.load_stage(spark, OUT, stage, lineage)
+    # stale range dirs with no manifest at all are not read either
+    os.remove(CP._manifest_path(OUT))
+    assert os.path.isdir(f"{OUT}/range=0")
+    with pytest.raises(FileNotFoundError, match="stage=None lineage=None"):
+        CP.load_stage(spark, OUT)
     shutil.rmtree(OUT, ignore_errors=True)

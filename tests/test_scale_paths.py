@@ -58,10 +58,10 @@ def test_cc_edges_dense_blob_takes_distributed_path(spark, monkeypatch):
     assert got2 == got
 
 
-def test_apply_ladder_sql_matches_loop(spark, monkeypatch):
+def test_apply_ladder_sql_matches_loop(spark):
     """_apply_ladder's one-SQL CTE chain must be column-for-column identical
-    to the per-stage selectExpr loop it replaces (SPARK_GRAFT_LADDER_LOOP=1
-    is the A/B escape hatch — keep both paths honest)."""
+    to the per-stage selectExpr loop it replaced, with and without the
+    folded ``final`` projection (q58's shape)."""
     from osm_processing_pipeline_spark.registry import _apply_ladder
 
     df = spark.createDataFrame(
@@ -69,24 +69,20 @@ def test_apply_ladder_sql_matches_loop(spark, monkeypatch):
     stages = ({"s1": "a + b", "s2": "CASE WHEN a > b THEN a ELSE b END"},
               {"s3": "s1 * s2 + id"},
               {"s4": "s3 - s1"})
-    monkeypatch.delenv("SPARK_GRAFT_LADDER_LOOP", raising=False)
-    got_sql = _apply_ladder(spark, df, stages, "_t_ladder").orderBy("id")
-    monkeypatch.setenv("SPARK_GRAFT_LADDER_LOOP", "1")
-    got_loop = _apply_ladder(spark, df, stages, "_t_ladder").orderBy("id")
-    assert got_sql.columns == got_loop.columns == [
+    loop = df
+    for stage in stages:
+        loop = loop.selectExpr("*", *[f"{e} AS {c}" for c, e in stage.items()])
+    got = _apply_ladder(spark, df, stages, "_t_ladder").orderBy("id")
+    assert got.columns == loop.columns == [
         "id", "a", "b", "s1", "s2", "s3", "s4"]
-    assert got_sql.collect() == got_loop.collect()
-    # the folded output projection (q58's shape) must match a trailing
-    # select on both paths too
+    assert got.collect() == loop.orderBy("id").collect()
+
     final = ["id", "s4 * 2 AS s4x2", "CAST(s1 AS BIGINT) AS s1_l"]
-    got_loop_f = _apply_ladder(spark, df, stages, "_t_ladder",
-                               final=final).orderBy("id")
-    monkeypatch.delenv("SPARK_GRAFT_LADDER_LOOP", raising=False)
-    got_sql_f = _apply_ladder(spark, df, stages, "_t_ladder",
-                              final=final).orderBy("id")
-    assert got_sql_f.columns == got_loop_f.columns == ["id", "s4x2", "s1_l"]
-    assert (got_sql_f.collect() == got_loop_f.collect()
-            == got_sql.selectExpr(*final).orderBy("id").collect())
+    got_f = _apply_ladder(spark, df, stages, "_t_ladder",
+                          final=final).orderBy("id")
+    want_f = loop.selectExpr(*final).orderBy("id")
+    assert got_f.columns == want_f.columns == ["id", "s4x2", "s1_l"]
+    assert got_f.collect() == want_f.collect()
 
 
 def test_ivf_arrow_kernels_match_catalyst_pair(spark):
