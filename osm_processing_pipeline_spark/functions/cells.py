@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..worldspec import CELL_DEG, NX, NY
+from ..worldspec import CELL_DEG, NX, NY, SEMI_HI, SEMI_LO
 
 
 def _clamp(c: Column, lo: int, hi: int) -> Column:
@@ -51,6 +51,21 @@ def cell_id(i: Column, j: Column) -> Column:
 def cell_of_point(lon: Column, lat: Column) -> Column:
     """Point -> cell id. Pure arithmetic; replaces h3.latlng_to_cell."""
     return cell_id(cell_i(lon), cell_j(lat))
+
+
+def rep_vertex() -> Column:
+    """A road's representative vertex: the middle element (1-based
+    ``size / 2 + 1``) of its ``vertices`` struct array — the oracles'
+    ``k = nv // 2`` row.  Every rep-point consumer (tile assignment, raster
+    sample, hill/beach/persona rural gates, admin bounds) reads this one."""
+    return F.element_at("vertices", (F.floor(F.size("vertices") / 2) + 1).cast("int"))
+
+
+def in_semi_window(lon: Column, lat: Column) -> Column:
+    """True inside the [SEMI_LO, SEMI_HI)^2 window (urban core plus its
+    ring): a road whose representative point falls here is not rural."""
+    return ((lon >= SEMI_LO) & (lon < SEMI_HI)
+            & (lat >= SEMI_LO) & (lat < SEMI_HI))
 
 
 def cell_bounds(cid: Column) -> tuple[Column, Column, Column, Column]:

@@ -108,14 +108,9 @@ def tile_assignment(roads: DataFrame, segs: DataFrame, grid: DataFrame) -> DataF
     """
     from ..functions import cells
 
-    mid = (F.floor(F.size("vertices") / 2) + 1).cast("int")  # 1-based middle
+    rv = cells.rep_vertex()
     rep = roads.select(
-        "osm_id",
-        cells.cell_of_point(
-            F.element_at(F.col("vertices"), mid)["lon"],
-            F.element_at(F.col("vertices"), mid)["lat"],
-        ).alias("rep_cell"),
-    )
+        "osm_id", cells.cell_of_point(rv["lon"], rv["lat"]).alias("rep_cell"))
     mins = (
         segment_cell_pieces(segs, grid)
         .groupBy("osm_id")

@@ -18,7 +18,7 @@ the DuckDB oracle applies the identical filter.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import worldspec as W

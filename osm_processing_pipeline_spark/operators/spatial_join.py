@@ -18,7 +18,7 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells, geometry as G

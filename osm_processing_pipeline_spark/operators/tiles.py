@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import worldspec as W
+from ..functions.cells import rep_vertex
 from .classify import road_type
 
 L = F.lit
@@ -181,8 +182,7 @@ def vector_tiles(roads: DataFrame) -> DataFrame:
     union branches consume it — without the barrier each branch re-runs
     the Arrow pass (the q44/q46 narrow-table lesson; A/B at sf0.1:
     2.0-2.6 s -> 1.2-1.5 s)."""
-    mid = (F.floor(F.size("vertices") / 2) + 1).cast("int")
-    rep = F.element_at("vertices", mid)
+    rep = rep_vertex()
     base = roads.select(
         "osm_id", "highway", "ref",
         F.expr("transform(vertices, v -> v.lon)").alias("lons"),

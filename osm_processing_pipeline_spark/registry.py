@@ -70,6 +70,445 @@ def _apply_ladder(spark: SparkSession, df: DataFrame,
     return out
 
 
+# ------------------------------------------------- shared oracle chains
+# Rule: a CTE chain or SQL fragment that two oracles use has ONE builder
+# here and every consumer calls it (compose, don't copy).  Each chain emits
+# one fixed set of CTE names.  Builder -> consumers:
+#   _reps_cte (rep vertex + rep cell)  q02 q11 q32 q44 q46 q53 q57 q58
+#   _semi_sql (semi-urban window)      q44 q53 q58
+#   _pressure_sql_ctes (cell sums)     q10 q12 q46, q27 q35 q48 via:
+#   _urban_comp_sql_ctes               q27 q35 q48
+#   _dg_sql_ctes (degradation)         q28 q46
+#   _wc_sql_ctes (WorldCover buffer)   q45 q46
+#   _cl_sql_ctes (classification)      q01 q46 q58
+#   _hadj_sql_ctes (HAdj upgrade)      q09 q46 q58
+#   _tw_sql_ctes (twistiness)          q08 q46 q58
+#   _setting_sql (road setting)        q01 q46 q58
+#   _dist_hits_cte                     q46 q58
+#   _pip_hits_cte                      q46 q58
+#   _coast_sql_ctes, _coast_hits_cte   q53 q58
+
+
+def _reps_cte() -> str:
+    """``reps``: each road's representative vertex (the middle one,
+    ``k = nv // 2``; engine ``cells.rep_vertex``) and its grid cell."""
+    cd = oracle.fl(W.CELL_DEG)
+    return f"""reps AS (
+  SELECT osm_id, lon AS rep_lon, lat AS rep_lat,
+         GREATEST(0, LEAST({W.NY - 1}, CAST(floor(lat / {cd}) AS BIGINT))) * {W.NX}
+         + GREATEST(0, LEAST({W.NX - 1}, CAST(floor(lon / {cd}) AS BIGINT)))
+           AS rep_cell
+  FROM verts WHERE k = nv // 2
+)"""
+
+
+def _semi_sql() -> str:
+    """Semi-urban window test on a ``reps`` row (engine
+    ``cells.in_semi_window``)."""
+    fl = oracle.fl
+    return (f"(rep_lon >= {fl(W.SEMI_LO)} AND rep_lon < {fl(W.SEMI_HI)} "
+            f"AND rep_lat >= {fl(W.SEMI_LO)} AND rep_lat < {fl(W.SEMI_HI)})")
+
+
+def _pressure_sql_ctes() -> str:
+    """Raster pixels, per-cell band sums (q10) and urban pressure over
+    them (q12): pixels, pixvals, cellsums, pressures."""
+    fl = oracle.fl
+    n, ppc = W.RASTER_PX, W.PX_PER_CELL
+    lo, hi = W.URBAN_PX_LO, W.URBAN_PX_HI
+    pdr = f"LEAST(pop_sum / {fl(W.POP_SAT_CELL)}, {fl(1.0)})"
+    bur = f"LEAST(built_sum / {fl(W.BUILT_SAT_CELL)}, {fl(1.0)})"
+    return f"""pixels AS (
+  SELECT px, unnest(generate_series(0, {n - 1})) AS py,
+         NULL AS _y
+  FROM (SELECT unnest(generate_series(0, {n - 1})) AS px)
+),
+pixvals AS (
+  SELECT px, py,
+         (px*37 + py*73) % 100
+           + CASE WHEN px >= {lo} AND px < {hi} AND py >= {lo} AND py < {hi}
+                  THEN {W.URBAN_POP_BOOST} ELSE 0 END AS pop,
+         (px*91 + py*17) % 50 AS built
+  FROM pixels
+),
+cellsums AS (
+  SELECT (py // {ppc}) * {W.NX} + (px // {ppc}) AS grid_id,
+         CAST(SUM(pop) AS BIGINT) AS pop_sum,
+         CAST(SUM(built) AS BIGINT) AS built_sum
+  FROM pixvals GROUP BY 1
+),
+pressures AS (
+  SELECT *, CAST(floor(pressure * {fl(1.0e6)}) AS BIGINT) AS pressure_micro
+  FROM (SELECT *, ({fl(1.0)} - ({fl(1.0)} - {pdr}) * ({fl(1.0)} - {bur}))
+                    AS pressure
+        FROM cellsums)
+)"""
+
+
+def _urban_comp_sql_ctes() -> str:
+    """Connected components of the urban cells under 4-adjacency (the
+    consumer's WITH must be RECURSIVE): the pressure chain plus urban,
+    edges, reach, comp."""
+    return f"""{_pressure_sql_ctes()},
+urban AS (SELECT grid_id FROM pressures
+          WHERE pressure >= {oracle.fl(W.PRESSURE_URBAN)}),
+edges AS (
+  SELECT a.grid_id AS a, b.grid_id AS b
+  FROM urban a JOIN urban b ON
+    (b.grid_id = a.grid_id - 1 AND a.grid_id % {W.NX} != 0) OR
+    (b.grid_id = a.grid_id + 1 AND a.grid_id % {W.NX} != {W.NX - 1}) OR
+    b.grid_id = a.grid_id - {W.NX} OR b.grid_id = a.grid_id + {W.NX}
+),
+reach(a, b) AS (
+  SELECT grid_id, grid_id FROM urban
+  UNION
+  SELECT r.a, e.b FROM reach r JOIN edges e ON e.a = r.b
+),
+comp AS (SELECT a AS grid_id, MIN(b) AS component FROM reach GROUP BY a)"""
+
+
+def _dg_sql_ctes() -> str:
+    """q28 intersection-degradation chain over verts/segs (dg_stats..dg);
+    ``dg`` holds per-way n_int, max/sum_red_ppm, total_len_um and
+    final_red_ppm."""
+    fl = oracle.fl
+    hier = " ".join(f"WHEN '{h}' THEN {r}" for h, r in W.HIERARCHY.items())
+    top = ", ".join(f"'{h}'" for h in W.DEGRADE_TOP_HW)
+    base = (f"CASE WHEN n_ways >= 4 THEN {fl(W.DEGRADE_RED['major'])} "
+            f"WHEN n_ways = 3 THEN {fl(W.DEGRADE_RED['three_way'])} "
+            f"ELSE {fl(W.DEGRADE_RED['crossing'])} END")
+    return f"""dg_stats AS (
+  SELECT node_id,
+         COUNT(DISTINCT osm_id) AS n_ways,
+         COUNT(DISTINCT highway) AS n_types,
+         MAX(CASE WHEN k > 0 AND k < nv - 1 THEN 1 ELSE 0 END) AS mid
+  FROM verts GROUP BY node_id
+),
+dg_qual AS (
+  SELECT node_id, n_ways FROM dg_stats
+  WHERE n_ways >= 2 AND (n_ways >= 3 OR n_types >= 2 OR mid = 1)
+),
+dg_nt AS (SELECT DISTINCT node_id, highway FROM verts),
+dg_ranked AS (
+  SELECT node_id, highway,
+         ROW_NUMBER() OVER (PARTITION BY node_id
+                            ORDER BY CASE highway {hier} ELSE 0 END DESC,
+                                     highway ASC) AS rn
+  FROM dg_nt
+),
+dg_top AS (
+  SELECT node_id, MAX(CASE WHEN rn = 1 THEN highway END) AS road_type_1
+  FROM dg_ranked WHERE rn <= 2 GROUP BY node_id
+),
+dg_nodes AS (
+  SELECT q.node_id,
+         CASE WHEN t.road_type_1 IN ({top}) THEN ({base}) * 2 ELSE {base} END AS red
+  FROM dg_qual q JOIN dg_top t USING (node_id)
+),
+dg_wn AS (SELECT DISTINCT osm_id, node_id FROM verts),
+dg_perway AS (
+  SELECT osm_id, COUNT(*) AS n_int,
+         MAX(CAST(round(red * {fl(W.LEN_Q)}) AS BIGINT)) AS max_red_ppm,
+         SUM(CAST(round(red * {fl(W.LEN_Q)}) AS BIGINT)) AS sum_red_ppm,
+         list_sort(list({fl(1.0)} - red)) AS omr
+  FROM dg_wn JOIN dg_nodes USING (node_id) GROUP BY osm_id
+),
+dg_len AS (
+  SELECT osm_id, SUM({og.quantize_um(og.seg_len_m())}) AS total_len_um
+  FROM segs GROUP BY osm_id
+),
+dg AS (
+  SELECT p.osm_id, p.n_int, p.max_red_ppm, p.sum_red_ppm, l.total_len_um,
+         CAST(CASE WHEN l.total_len_um >= {W.DEGRADE_LEN_UM}
+              THEN sum_red_ppm // n_int
+              ELSE CAST(round(({fl(1.0)} - list_reduce(omr, (a, b) -> a * b))
+                              * {fl(W.LEN_Q)}) AS BIGINT) END AS BIGINT)
+           AS final_red_ppm
+  FROM dg_perway p JOIN dg_len l USING (osm_id)
+)"""
+
+
+def _wc_sql_ctes() -> str:
+    """q45 WorldCover buffer chain over segs (wc_sam..wc): per-road
+    forest_px / field_px of the distinct pixels within the buffer."""
+    fl = oracle.fl
+    n, k = W.RASTER_PX, len(W.WCLASSES)
+    buf = fl(W.WC_BUF_PX / float(n))
+    step = fl(float(W.WC_SAMPLE_STEP_PX))
+    t = "(CAST(j AS DOUBLE) / CAST(m AS DOUBLE))"
+    d2 = og.seg_point_dist2("ax", "ay", "bx", "by", "pcx", "pcy")
+    return f"""wc_sam AS (
+  SELECT osm_id, ax, ay, bx, by,
+         GREATEST(1, CAST(ceil((sqrt((bx - ax) * (bx - ax)
+                                     + (by - ay) * (by - ay)) * {fl(float(n))})
+                               / {step}) AS BIGINT)) AS m
+  FROM segs
+),
+wc_pts AS (
+  SELECT osm_id, ax, ay, bx, by,
+         CAST(floor((ax + (bx - ax) * {t}) * {fl(float(n))}) AS BIGINT) AS cx,
+         CAST(floor((ay + (by - ay) * {t}) * {fl(float(n))}) AS BIGINT) AS cy
+  FROM (SELECT *, unnest(generate_series(0, m)) AS j FROM wc_sam)
+),
+wc_cand AS (
+  SELECT osm_id, ax, ay, bx, by, cx + di AS px, cy + dj AS py,
+         (CAST(cx + di AS DOUBLE) + 0.5e0) / {fl(float(n))} AS pcx,
+         (CAST(cy + dj AS DOUBLE) + 0.5e0) / {fl(float(n))} AS pcy
+  FROM wc_pts,
+       (SELECT unnest(generate_series(-2, 2)) AS di),
+       (SELECT unnest(generate_series(-2, 2)) AS dj)
+  WHERE cx + di >= 0 AND cx + di < {n} AND cy + dj >= 0 AND cy + dj < {n}
+),
+wc_pix AS (
+  SELECT DISTINCT osm_id, px, py FROM wc_cand WHERE {d2} <= {buf} * {buf}
+),
+wc AS (
+  SELECT osm_id,
+         SUM(CASE WHEN (px * {W.WC_MUL_X} + py * {W.WC_MUL_Y}) % {k} = 0
+                  THEN 1 ELSE 0 END) AS forest_px,
+         SUM(CASE WHEN (px * {W.WC_MUL_X} + py * {W.WC_MUL_Y}) % {k} IN (1, 2, 3)
+                  THEN 1 ELSE 0 END) AS field_px
+  FROM wc_pix GROUP BY osm_id
+)"""
+
+
+def _setting_sql() -> str:
+    """q01 majority-setting CASE over the cl_per sums."""
+    u, s_, ru = ("COALESCE(c.u, 0)", "COALESCE(c.s, 0)", "COALESCE(c.ru, 0)")
+    tot = f"({u} + {s_} + {ru})"
+    return (f"CASE WHEN {tot} = 0 THEN 'Rural' "
+            f"WHEN {u} * 2 >= {tot} THEN 'Urban' "
+            f"WHEN ({u} + {s_}) * 2 >= {tot} THEN 'Semi_Urban' "
+            f"ELSE 'Rural' END")
+
+
+def _hadj_sql_ctes() -> str:
+    """q09 HAdj endpoint-upgrade chain (h_types..h_per); ``h_per`` holds
+    near0, near1 and hadj_upgrade for roads with any match."""
+    fl = oracle.fl
+    d = fl(W.ENDPOINT_DIST_DEG)
+    hd2 = og.point_dist2("e.lon", "e.lat", "h.hlon", "h.hlat")
+    return f"""h_types AS (
+  SELECT osm_id AS h_osm FROM roads_base
+  WHERE ref IS NOT NULL AND (upper(ref) LIKE '%NH%' OR upper(ref) LIKE '%SH%'
+                             OR upper(ref) LIKE '%MDR%')
+),
+h_nodes AS (
+  SELECT v.osm_id AS h_osm, v.lon AS hlon, v.lat AS hlat
+  FROM verts v JOIN h_types t ON v.osm_id = t.h_osm
+),
+h_eps AS (
+  SELECT osm_id, CASE WHEN k = 0 THEN 0 ELSE 1 END AS ep, lon, lat
+  FROM verts WHERE k = 0 OR k = nv - 1
+),
+h_matches AS (
+  SELECT DISTINCT e.osm_id, e.ep
+  FROM h_eps e JOIN h_nodes h ON h.h_osm != e.osm_id
+    AND h.hlon >= e.lon - {d} AND h.hlon <= e.lon + {d}
+    AND h.hlat >= e.lat - {d} AND h.hlat <= e.lat + {d}
+  WHERE {hd2} <= {d} * {d}
+),
+h_per AS (
+  SELECT osm_id, near0, near1, near0 AND near1 AS hadj_upgrade
+  FROM (SELECT osm_id,
+               MAX(CASE WHEN ep = 0 THEN 1 ELSE 0 END) = 1 AS near0,
+               MAX(CASE WHEN ep = 1 THEN 1 ELSE 0 END) = 1 AS near1
+        FROM h_matches GROUP BY osm_id)
+)"""
+
+
+def _cl_sql_ctes() -> str:
+    """q01 classification chain: seg cell cover + per-road cell count and
+    class-length sums (emits ``seg_cells``, reusable by any cell-cover
+    consumer)."""
+    lenm = og.seg_len_m()
+    piece = og.quantize_um(f"({og.seg_rect_frac()}) * ({lenm})")
+    return f"""{og.cand_cells_ctes('segs')},
+cl_per AS (
+  SELECT c.osm_id,
+         COUNT(DISTINCT c.grid_id) AS n_cells,
+         SUM(CASE WHEN g.grid_class = 'Urban' THEN {piece} ELSE 0 END) AS u,
+         SUM(CASE WHEN g.grid_class = 'Semi_Urban' THEN {piece} ELSE 0 END) AS s,
+         SUM(CASE WHEN g.grid_class = 'Rural' THEN {piece} ELSE 0 END) AS ru
+  FROM seg_cells c JOIN grid g USING (grid_id)
+  WHERE {og.seg_rect_hit()}
+  GROUP BY c.osm_id
+)"""
+
+
+def _tw_sql_ctes() -> str:
+    """q08 twistiness chain (tw_segd..tw_p): ``tw_roll`` holds the
+    sharp/broad lengths and counts, ``tw_tot`` the total length and
+    ``tw_p`` every road's twist_permille."""
+    fl = oracle.fl
+    M, Q = fl(W.M_PER_DEG), fl(W.LEN_Q)
+    win = int(W.SUPPRESS_M * 1.0e6)
+    nconf = len(W.CONFLICT_TYPES)
+    return f"""tw_segd AS (
+  SELECT osm_id, k, nv, lon, lat, node_id,
+         (LEAD(lon) OVER w - lon) * {M} AS sdx,
+         (LEAD(lat) OVER w - lat) * {M} AS sdy,
+         LAG(lon) OVER w AS plon, LAG(lat) OVER w AS plat,
+         LEAD(lon) OVER w AS nlon, LEAD(lat) OVER w AS nlat
+  FROM verts WINDOW w AS (PARTITION BY osm_id ORDER BY k)
+),
+tw_segq AS (
+  SELECT *,
+         CASE WHEN sdx IS NULL THEN 0
+              ELSE CAST(floor(sqrt(sdx*sdx + sdy*sdy) * {Q}) AS BIGINT) END AS seg_um
+  FROM tw_segd
+),
+tw_cumv AS (
+  SELECT *,
+         COALESCE(SUM(seg_um) OVER (PARTITION BY osm_id ORDER BY k
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+  FROM tw_segq
+),
+tw_conf AS (SELECT osm_id, cum AS ccum FROM tw_cumv WHERE node_id % 97 < {nconf}),
+tw_interior AS (
+  SELECT v.osm_id,
+         (v.lon - v.plon) * {M} AS ux, (v.lat - v.plat) * {M} AS uy,
+         (v.nlon - v.lon) * {M} AS wx, (v.nlat - v.lat) * {M} AS wy,
+         (v.nlon - v.plon) * {M} AS cx_, (v.nlat - v.plat) * {M} AS cy_,
+         EXISTS (SELECT 1 FROM tw_conf c
+                 WHERE c.osm_id = v.osm_id AND abs(v.cum - c.ccum) <= {win}) AS sup
+  FROM tw_cumv v WHERE v.k >= 1 AND v.k <= v.nv - 2
+),
+tw_vm AS (
+  SELECT osm_id, sup,
+         sqrt(ux*ux + uy*uy) AS a,
+         sqrt(wx*wx + wy*wy) AS b,
+         sqrt(cx_*cx_ + cy_*cy_) AS c,
+         abs(ux*wy - uy*wx) AS area2,
+         (ux*wx + uy*wy) AS dot
+  FROM tw_interior
+),
+tw_judged AS (
+  SELECT osm_id, sup,
+         CAST(floor(((a + b) / 2.0e0) * {Q}) AS BIGINT) AS contrib_um,
+         NOT (dot > 0 AND area2 < {fl(W.SIN5)} * (a * b)) AS significant,
+         (a > 0 AND b > 0 AND area2 > 0) AS nonzero,
+         CASE WHEN area2 > 0 THEN (a * b * c) / (2.0e0 * area2) ELSE NULL END AS radius
+  FROM tw_vm
+),
+tw_flags AS (
+  SELECT osm_id, sup, contrib_um,
+         significant AND nonzero AND radius <= {fl(W.SHARP_RADIUS_M)} AS sharp,
+         significant AND nonzero AND radius <= {fl(W.BROAD_RADIUS_M)} AS broad0
+  FROM tw_judged
+),
+tw_roll AS (
+  SELECT osm_id,
+         SUM(CASE WHEN sharp AND NOT sup THEN contrib_um ELSE 0 END) AS sharp_len_um,
+         SUM(CASE WHEN broad0 AND NOT sharp AND NOT sup THEN contrib_um ELSE 0 END) AS broad_len_um,
+         SUM(CASE WHEN sharp AND NOT sup THEN 1 ELSE 0 END) AS n_sharp,
+         SUM(CASE WHEN broad0 AND NOT sharp AND NOT sup THEN 1 ELSE 0 END) AS n_broad,
+         SUM(CASE WHEN sup THEN 1 ELSE 0 END) AS n_suppressed
+  FROM tw_flags GROUP BY osm_id
+),
+tw_tot AS (SELECT osm_id, SUM(seg_um) AS total_len_um FROM tw_segq GROUP BY osm_id),
+tw_p AS (
+  SELECT r.osm_id,
+         CAST(CASE WHEN COALESCE(tt.total_len_um, 0) > 0
+              THEN ((COALESCE(tr.sharp_len_um, 0) * 2
+                     + COALESCE(tr.broad_len_um, 0)) * 1000)
+                   // GREATEST(tt.total_len_um, 1)
+              ELSE 0 END AS BIGINT) AS twist_permille
+  FROM roads_base r
+  LEFT JOIN tw_roll tr ON tr.osm_id = r.osm_id
+  LEFT JOIN tw_tot tt ON tt.osm_id = r.osm_id
+)"""
+
+
+def _pip_hits_cte(name: str, layer: str) -> str:
+    """Distinct osm_ids with ANY vertex inside a pentagon of ``layer``
+    (the q03/q46-lakes crossing-parity PIP)."""
+    cross = og.point_in_poly_crossing("v.lon", "v.lat", "e.x1", "e.y1",
+                                      "e.x2", "e.y2")
+    return f"""{name} AS (
+  SELECT DISTINCT osm_id FROM (
+    SELECT v.osm_id
+    FROM verts v
+    JOIN feats f ON f.is_poly AND f.layer = '{layer}'
+      AND v.lon >= f.cx - f.r AND v.lon <= f.cx + f.r
+      AND v.lat >= f.cy - f.r AND v.lat <= f.cy + f.r
+    JOIN feat_edges e ON e.feature_id = f.feature_id
+    GROUP BY v.osm_id, v.k, v.lon, v.lat, f.feature_id
+    HAVING SUM({cross}) % 2 = 1
+  )
+)"""
+
+
+def _dist_hits_cte(name: str, layer: str, dist: float) -> str:
+    """Distinct osm_ids with any segment within ``dist`` of a point
+    feature of ``layer`` (the q04-style distance join)."""
+    fl = oracle.fl
+    dd = fl(dist)
+    sd2 = og.seg_point_dist2("s.ax", "s.ay", "s.bx", "s.by", "f.cx", "f.cy")
+    return f"""{name} AS (
+  SELECT DISTINCT s.osm_id
+  FROM segs s JOIN feats f ON f.layer = '{layer}'
+    AND f.cx >= LEAST(s.ax, s.bx) - {dd} AND f.cx <= GREATEST(s.ax, s.bx) + {dd}
+    AND f.cy >= LEAST(s.ay, s.by) - {dd} AND f.cy <= GREATEST(s.ay, s.by) + {dd}
+  WHERE {sd2} <= {dd} * {dd}
+)"""
+
+
+def _coast_sql_ctes() -> str:
+    """q53 coastline dimension: the fixed polyline + its dilated cell
+    cover (coast, coast_cells_i, coast_cells)."""
+    fl = oracle.fl
+    W_ = W
+    n_, cd = W_.NX, fl(W_.CELL_DEG)
+    r = W_.BEACH_DIST_DEG
+    yk = (f"({fl(W_.COAST_Y_BASE)} + CAST((k * {W_.COAST_Y_MUL}) "
+          f"% {W_.COAST_Y_MOD} - {W_.COAST_Y_HALF} AS DOUBLE) "
+          f"/ {fl(W_.COAST_Y_DEN)})")
+    yk1 = (f"({fl(W_.COAST_Y_BASE)} + CAST(((k + 1) * {W_.COAST_Y_MUL}) "
+           f"% {W_.COAST_Y_MOD} - {W_.COAST_Y_HALF} AS DOUBLE) "
+           f"/ {fl(W_.COAST_Y_DEN)})")
+    return f"""coast AS (
+  SELECT k,
+         CAST(k AS DOUBLE) / {fl(float(W_.COAST_N))} AS cx1, {yk} AS cy1,
+         CAST(k + 1 AS DOUBLE) / {fl(float(W_.COAST_N))} AS cx2, {yk1} AS cy2
+  FROM (SELECT unnest(generate_series(0, {W_.COAST_N - 1})) AS k)
+),
+coast_cells_i AS (
+  SELECT *, unnest(generate_series(i0, i1)) AS ci FROM (
+    SELECT *,
+      GREATEST(0, LEAST({n_ - 1}, CAST(floor((LEAST(cx1, cx2) - {fl(r)}) / {cd}) AS BIGINT))) AS i0,
+      GREATEST(0, LEAST({n_ - 1}, CAST(floor((GREATEST(cx1, cx2) + {fl(r)}) / {cd}) AS BIGINT))) AS i1,
+      GREATEST(0, LEAST({W_.NY - 1}, CAST(floor((LEAST(cy1, cy2) - {fl(r)}) / {cd}) AS BIGINT))) AS j0,
+      GREATEST(0, LEAST({W_.NY - 1}, CAST(floor((GREATEST(cy1, cy2) + {fl(r)}) / {cd}) AS BIGINT))) AS j1
+    FROM coast
+  )
+),
+coast_cells AS (
+  SELECT *, unnest(generate_series(j0, j1)) * {n_} + ci AS grid_id
+  FROM coast_cells_i
+)"""
+
+
+def _coast_hits_cte(name: str) -> str:
+    """Distinct osm_ids with any segment line-DWithin of the coastline
+    (consumes ``seg_cells`` and the _coast_sql_ctes tables)."""
+    fl = oracle.fl
+    r = W.BEACH_DIST_DEG
+    r2 = r * r
+    within = (
+        og.seg_seg_intersect("ax", "ay", "bx", "by",
+                             "cx1", "cy1", "cx2", "cy2")
+        + f" OR {og.seg_point_dist2('cx1', 'cy1', 'cx2', 'cy2', 'ax', 'ay')} <= {fl(r2)}"
+        + f" OR {og.seg_point_dist2('cx1', 'cy1', 'cx2', 'cy2', 'bx', 'by')} <= {fl(r2)}"
+        + f" OR {og.seg_point_dist2('ax', 'ay', 'bx', 'by', 'cx1', 'cy1')} <= {fl(r2)}"
+        + f" OR {og.seg_point_dist2('ax', 'ay', 'bx', 'by', 'cx2', 'cy2')} <= {fl(r2)}")
+    return f"""{name} AS (
+  SELECT DISTINCT s.osm_id
+  FROM seg_cells s JOIN coast_cells c USING (grid_id)
+  WHERE {within}
+)"""
+
+
 # --------------------------------------------------------------------- q01
 def _sql_road_type(r: str = "r") -> str:
     hw_list = ", ".join(f"'{h}'" for h in ("motorway", "trunk"))
@@ -81,49 +520,29 @@ def _sql_road_type(r: str = "r") -> str:
 
 
 def _q01_sql() -> str:
-    lenm = og.seg_len_m()
-    piece = og.quantize_um(f"({og.seg_rect_frac()}) * ({lenm})")
     bik = ", ".join(f"'{h}'" for h in W.BIKABLE)
     rt = _sql_road_type("r")
-    u, s, ru = ("COALESCE(p.urban_len_um, 0)", "COALESCE(p.semiurban_len_um, 0)",
-                "COALESCE(p.rural_len_um, 0)")
-    tot = f"({u} + {s} + {ru})"
-    setting = (f"CASE WHEN {tot} = 0 THEN 'Rural' "
-               f"WHEN {u} * 2 >= {tot} THEN 'Urban' "
-               f"WHEN ({u} + {s}) * 2 >= {tot} THEN 'Semi_Urban' "
-               f"ELSE 'Rural' END")
+    setting = _setting_sql()
     return f"""{oracle.with_world('segs', 'grid')},
-{og.cand_cells_ctes('segs')},
-pieces AS (
-  SELECT c.osm_id, c.grid_id, g.grid_class, {piece} AS piece_um
-  FROM seg_cells c JOIN grid g USING (grid_id)
-  WHERE {og.seg_rect_hit()}
-),
-per_road AS (
-  SELECT osm_id,
-         COUNT(DISTINCT grid_id) AS n_cells,
-         SUM(CASE WHEN grid_class = 'Urban' THEN piece_um ELSE 0 END) AS urban_len_um,
-         SUM(CASE WHEN grid_class = 'Semi_Urban' THEN piece_um ELSE 0 END) AS semiurban_len_um,
-         SUM(CASE WHEN grid_class = 'Rural' THEN piece_um ELSE 0 END) AS rural_len_um
-  FROM pieces GROUP BY osm_id
-),
+{_cl_sql_ctes()},
 totals AS (
-  SELECT osm_id, SUM({og.quantize_um(lenm)}) AS total_len_um FROM segs GROUP BY osm_id
+  SELECT osm_id, SUM({og.quantize_um(og.seg_len_m())}) AS total_len_um
+  FROM segs GROUP BY osm_id
 )
 SELECT r.osm_id, r.highway,
        {rt} AS road_type,
        r.highway IN ({bik}) AS bikable,
-       CAST(COALESCE(p.n_cells, 0) AS BIGINT) AS n_cells,
-       COALESCE(p.n_cells, 0) > 1 AS multi_grid,
+       CAST(COALESCE(c.n_cells, 0) AS BIGINT) AS n_cells,
+       COALESCE(c.n_cells, 0) > 1 AS multi_grid,
        {setting} AS road_setting,
        {rt} || '_' || {setting} AS road_classification,
        CAST(COALESCE(t.total_len_um, 0) AS BIGINT) AS total_len_um,
-       CAST({u} AS BIGINT) AS urban_len_um,
-       CAST({s} AS BIGINT) AS semiurban_len_um,
-       CAST({ru} AS BIGINT) AS rural_len_um
+       CAST(COALESCE(c.u, 0) AS BIGINT) AS urban_len_um,
+       CAST(COALESCE(c.s, 0) AS BIGINT) AS semiurban_len_um,
+       CAST(COALESCE(c.ru, 0) AS BIGINT) AS rural_len_um
 FROM roads_base r
 LEFT JOIN totals t USING (osm_id)
-LEFT JOIN per_road p USING (osm_id)"""
+LEFT JOIN cl_per c USING (osm_id)"""
 
 
 @register("q01_road_grid_classification")
@@ -145,9 +564,6 @@ ORACLES["q01_road_grid_classification"] = _q01_sql()
 
 # --------------------------------------------------------------------- q02
 def _q02_sql() -> str:
-    cd = oracle.fl(W.CELL_DEG)
-    rep = (f"GREATEST(0, LEAST({W.NY - 1}, CAST(floor(lat / {cd}) AS BIGINT))) * {W.NX} "
-           f"+ GREATEST(0, LEAST({W.NX - 1}, CAST(floor(lon / {cd}) AS BIGINT)))")
     return f"""{oracle.with_world('segs', 'grid')},
 {og.cand_cells_ctes('segs')},
 pieces AS (
@@ -155,12 +571,10 @@ pieces AS (
   FROM seg_cells c JOIN grid g USING (grid_id)
   WHERE {og.seg_rect_hit()}
 ),
-rep AS (
-  SELECT osm_id, {rep} AS rep_cell FROM verts WHERE k = nv // 2
-),
+{_reps_cte()},
 mins AS (SELECT osm_id, MIN(grid_id) AS min_cell FROM pieces GROUP BY osm_id)
-SELECT rep.osm_id, rep.rep_cell, mins.min_cell
-FROM rep LEFT JOIN mins USING (osm_id)"""
+SELECT reps.osm_id, reps.rep_cell, mins.min_cell
+FROM reps LEFT JOIN mins USING (osm_id)"""
 
 
 @register("q02_tile_assignment")
@@ -473,77 +887,10 @@ ORACLES["q07_intersection_detection"] = _q07_sql()
 
 # --------------------------------------------------------------------- q08
 def _q08_sql() -> str:
-    from .datagen.oracle import fl
-    M = fl(W.M_PER_DEG)
-    Q = fl(W.LEN_Q)
-    win = int(W.SUPPRESS_M * 1.0e6)
-    nconf = len(W.CONFLICT_TYPES)
     cut_hi = int(W.TWIST_CUT_HI * 1000)
     cut_lo = int(W.TWIST_CUT_LO * 1000)
     return f"""{oracle.with_world('verts')},
-segd AS (
-  SELECT osm_id, k, nv, lon, lat, node_id,
-         (LEAD(lon) OVER w - lon) * {M} AS sdx,
-         (LEAD(lat) OVER w - lat) * {M} AS sdy,
-         LAG(lon) OVER w AS plon, LAG(lat) OVER w AS plat,
-         LEAD(lon) OVER w AS nlon, LEAD(lat) OVER w AS nlat
-  FROM verts WINDOW w AS (PARTITION BY osm_id ORDER BY k)
-),
-segq AS (
-  SELECT *,
-         CASE WHEN sdx IS NULL THEN 0
-              ELSE CAST(floor(sqrt(sdx*sdx + sdy*sdy) * {Q}) AS BIGINT) END AS seg_um
-  FROM segd
-),
-cumv AS (
-  SELECT *,
-         COALESCE(SUM(seg_um) OVER (PARTITION BY osm_id ORDER BY k
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-  FROM segq
-),
-conf AS (SELECT osm_id, cum AS ccum FROM cumv WHERE node_id % 97 < {nconf}),
-interior AS (
-  SELECT v.osm_id,
-         (v.lon - v.plon) * {M} AS ux, (v.lat - v.plat) * {M} AS uy,
-         (v.nlon - v.lon) * {M} AS wx, (v.nlat - v.lat) * {M} AS wy,
-         (v.nlon - v.plon) * {M} AS cx_, (v.nlat - v.plat) * {M} AS cy_,
-         EXISTS (SELECT 1 FROM conf c
-                 WHERE c.osm_id = v.osm_id AND abs(v.cum - c.ccum) <= {win}) AS sup
-  FROM cumv v WHERE v.k >= 1 AND v.k <= v.nv - 2
-),
-vert_metrics AS (
-  SELECT osm_id, sup,
-         sqrt(ux*ux + uy*uy) AS a,
-         sqrt(wx*wx + wy*wy) AS b,
-         sqrt(cx_*cx_ + cy_*cy_) AS c,
-         abs(ux*wy - uy*wx) AS area2,
-         (ux*wx + uy*wy) AS dot
-  FROM interior
-),
-judged AS (
-  SELECT osm_id, sup,
-         CAST(floor(((a + b) / 2.0e0) * {Q}) AS BIGINT) AS contrib_um,
-         NOT (dot > 0 AND area2 < {fl(W.SIN5)} * (a * b)) AS significant,
-         (a > 0 AND b > 0 AND area2 > 0) AS nonzero,
-         CASE WHEN area2 > 0 THEN (a * b * c) / (2.0e0 * area2) ELSE NULL END AS radius
-  FROM vert_metrics
-),
-flags AS (
-  SELECT osm_id, sup, contrib_um,
-         significant AND nonzero AND radius <= {fl(W.SHARP_RADIUS_M)} AS sharp,
-         significant AND nonzero AND radius <= {fl(W.BROAD_RADIUS_M)} AS broad0
-  FROM judged
-),
-roll AS (
-  SELECT osm_id,
-         SUM(CASE WHEN sharp AND NOT sup THEN contrib_um ELSE 0 END) AS sharp_len_um,
-         SUM(CASE WHEN broad0 AND NOT sharp AND NOT sup THEN contrib_um ELSE 0 END) AS broad_len_um,
-         SUM(CASE WHEN sharp AND NOT sup THEN 1 ELSE 0 END) AS n_sharp,
-         SUM(CASE WHEN broad0 AND NOT sharp AND NOT sup THEN 1 ELSE 0 END) AS n_broad,
-         SUM(CASE WHEN sup THEN 1 ELSE 0 END) AS n_suppressed
-  FROM flags GROUP BY osm_id
-),
-tot AS (SELECT osm_id, SUM(seg_um) AS total_len_um FROM segq GROUP BY osm_id)
+{_tw_sql_ctes()}
 SELECT r.osm_id,
        CAST(COALESCE(t.total_len_um, 0) AS BIGINT) AS total_len_um,
        CAST(COALESCE(o.sharp_len_um, 0) AS BIGINT) AS sharp_len_um,
@@ -551,20 +898,14 @@ SELECT r.osm_id,
        CAST(COALESCE(o.n_sharp, 0) AS BIGINT) AS n_sharp,
        CAST(COALESCE(o.n_broad, 0) AS BIGINT) AS n_broad,
        CAST(COALESCE(o.n_suppressed, 0) AS BIGINT) AS n_suppressed,
-       CAST(CASE WHEN COALESCE(t.total_len_um, 0) > 0
-            THEN ((COALESCE(o.sharp_len_um, 0) * 2 + COALESCE(o.broad_len_um, 0)) * 1000)
-                 // GREATEST(t.total_len_um, 1)
-            ELSE 0 END AS BIGINT) AS twist_permille,
-       CASE WHEN (CASE WHEN COALESCE(t.total_len_um, 0) > 0
-                  THEN ((COALESCE(o.sharp_len_um, 0) * 2 + COALESCE(o.broad_len_um, 0)) * 1000)
-                       // GREATEST(t.total_len_um, 1) ELSE 0 END) >= {cut_hi} THEN 'twisty'
-            WHEN (CASE WHEN COALESCE(t.total_len_um, 0) > 0
-                  THEN ((COALESCE(o.sharp_len_um, 0) * 2 + COALESCE(o.broad_len_um, 0)) * 1000)
-                       // GREATEST(t.total_len_um, 1) ELSE 0 END) >= {cut_lo} THEN 'curvy'
+       p.twist_permille,
+       CASE WHEN p.twist_permille >= {cut_hi} THEN 'twisty'
+            WHEN p.twist_permille >= {cut_lo} THEN 'curvy'
             ELSE 'straight' END AS curve_class
 FROM roads_base r
-LEFT JOIN roll o USING (osm_id)
-LEFT JOIN tot t USING (osm_id)"""
+LEFT JOIN tw_roll o USING (osm_id)
+LEFT JOIN tw_tot t USING (osm_id)
+LEFT JOIN tw_p p USING (osm_id)"""
 
 
 def _curvature_rollup(roads: DataFrame) -> DataFrame:
@@ -595,40 +936,13 @@ ORACLES["q08_curvature"] = _q08_sql()
 
 # --------------------------------------------------------------------- q09
 def _q09_sql() -> str:
-    d = oracle.fl(W.ENDPOINT_DIST_DEG)
-    d2 = og.point_dist2("e.lon", "e.lat", "h.hlon", "h.hlat")
     return f"""{oracle.with_world('verts')},
-htypes AS (
-  SELECT osm_id AS h_osm FROM roads_base
-  WHERE ref IS NOT NULL AND (upper(ref) LIKE '%NH%' OR upper(ref) LIKE '%SH%'
-                             OR upper(ref) LIKE '%MDR%')
-),
-hnodes AS (
-  SELECT v.osm_id AS h_osm, v.lon AS hlon, v.lat AS hlat
-  FROM verts v JOIN htypes t ON v.osm_id = t.h_osm
-),
-eps AS (
-  SELECT osm_id, CASE WHEN k = 0 THEN 0 ELSE 1 END AS ep, lon, lat
-  FROM verts WHERE k = 0 OR k = nv - 1
-),
-matches AS (
-  SELECT DISTINCT e.osm_id, e.ep
-  FROM eps e JOIN hnodes h ON h.h_osm != e.osm_id
-    AND h.hlon >= e.lon - {d} AND h.hlon <= e.lon + {d}
-    AND h.hlat >= e.lat - {d} AND h.hlat <= e.lat + {d}
-  WHERE {d2} <= {d} * {d}
-),
-per_road AS (
-  SELECT osm_id,
-         MAX(CASE WHEN ep = 0 THEN 1 ELSE 0 END) = 1 AS near0,
-         MAX(CASE WHEN ep = 1 THEN 1 ELSE 0 END) = 1 AS near1
-  FROM matches GROUP BY osm_id
-)
+{_hadj_sql_ctes()}
 SELECT r.osm_id,
        COALESCE(p.near0, FALSE) AS near0,
        COALESCE(p.near1, FALSE) AS near1,
-       COALESCE(p.near0, FALSE) AND COALESCE(p.near1, FALSE) AS hadj_upgrade
-FROM roads_base r LEFT JOIN per_road p USING (osm_id)"""
+       COALESCE(p.hadj_upgrade, FALSE) AS hadj_upgrade
+FROM roads_base r LEFT JOIN h_per p USING (osm_id)"""
 
 
 def _endpoint_proximity_upgrade(r: DataFrame, cand: DataFrame,
@@ -725,6 +1039,39 @@ def _endpoint_proximity_upgrade(r: DataFrame, cand: DataFrame,
                       (n0 & n1).alias("hadj_upgrade"))
 
 
+def _persona_road_branches(r: DataFrame, sub: DataFrame, s: DataFrame,
+                           feats: DataFrame, hw_window: tuple | None = None
+                           ) -> tuple[DataFrame, ...]:
+    """The per-road branches both persona composites (q46 v2, q58 v1) join
+    onto their spine: (hadj, setting, tw, hills, rivers), each keyed by
+    ``osm_id`` and computed over the spine subset ``sub`` (``s`` is its
+    segments).  ``r`` is the global NH/SH highway source and ``hw_window``
+    the optional sound window of ``_endpoint_proximity_upgrade``.  Every
+    branch is per-road, so pre-filtering the road side is exact.
+
+    The narrow (osm_id, cell) presence table is localCheckpointed ONCE
+    (the only eager job here) and feeds both distance flags: one serialize
+    pays for two saved explode+exact-test+distinct subtrees (the q44
+    narrow-table lesson; A/B at sf0.1: q46 32.6->19.5s, q04 2.40->1.82s
+    best-of-3)."""
+    hadj = _endpoint_proximity_upgrade(r, sub, hw_window=hw_window) \
+        .select("osm_id", "hadj_upgrade")
+    setting = classify.classify_roads(sub, s, world.grids(sub.sparkSession)) \
+        .select("osm_id", "road_setting")
+    tw = _curvature_rollup(sub).select("osm_id", "twist_permille")
+    rcells = spatial_join.road_cells(s).localCheckpoint(eager=True)
+
+    def dist_flag(layer: str, dist: float, mark: str) -> DataFrame:
+        pts = feats.filter(F.col("layer") == layer) \
+                   .select("feature_id", "cx", "cy")
+        return (spatial_join.roads_within_distance(s, rcells, pts, dist)
+                .withColumn(mark, F.lit(1)))
+
+    return (hadj, setting, tw,
+            dist_flag("hills_nodes", W.DIST_HILL_DEG, "_hill"),
+            dist_flag("rivers", W.DIST_RIVER_DEG, "_river"))
+
+
 @register("q09_endpoint_proximity_upgrade")
 def q09_endpoint_proximity_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9: HAdj upgrade — both road endpoints within d of an NH/SH/MDR road's
@@ -753,32 +1100,9 @@ ORACLES["q09_endpoint_proximity_upgrade"] = _q09_sql()
 
 
 # --------------------------------------------------------------------- q10
-def _pixels_cte() -> str:
-    n = W.RASTER_PX
-    lo, hi = W.URBAN_PX_LO, W.URBAN_PX_HI
-    return f"""pixels AS (
-  SELECT px, unnest(generate_series(0, {n - 1})) AS py,
-         NULL AS _y
-  FROM (SELECT unnest(generate_series(0, {n - 1})) AS px)
-),
-pixvals AS (
-  SELECT px, py,
-         (px*37 + py*73) % 100
-           + CASE WHEN px >= {lo} AND px < {hi} AND py >= {lo} AND py < {hi}
-                  THEN {W.URBAN_POP_BOOST} ELSE 0 END AS pop,
-         (px*91 + py*17) % 50 AS built
-  FROM pixels
-)"""
-
-
 def _q10_sql() -> str:
-    ppc = W.PX_PER_CELL
-    return f"""WITH {_pixels_cte()}
-SELECT (py // {ppc}) * {W.NX} + (px // {ppc}) AS grid_id,
-       CAST(SUM(pop) AS BIGINT) AS pop_sum,
-       CAST(SUM(built) AS BIGINT) AS built_sum
-FROM pixvals
-GROUP BY 1"""
+    return f"""WITH {_pressure_sql_ctes()}
+SELECT grid_id, pop_sum, built_sum FROM cellsums"""
 
 
 @register("q10_zonal_stats")
@@ -799,11 +1123,12 @@ def _q11_sql() -> str:
     n = W.RASTER_PX
     lo, hi = W.URBAN_PX_LO, W.URBAN_PX_HI
     return f"""{oracle.with_world('verts')},
+{_reps_cte()},
 rep AS (
   SELECT osm_id,
-         GREATEST(0, LEAST({n - 1}, CAST(floor(lon * {n}) AS BIGINT))) AS px,
-         GREATEST(0, LEAST({n - 1}, CAST(floor(lat * {n}) AS BIGINT))) AS py
-  FROM verts WHERE k = nv // 2
+         GREATEST(0, LEAST({n - 1}, CAST(floor(rep_lon * {n}) AS BIGINT))) AS px,
+         GREATEST(0, LEAST({n - 1}, CAST(floor(rep_lat * {n}) AS BIGINT))) AS py
+  FROM reps
 )
 SELECT osm_id,
        CAST((px*37 + py*73) % 100
@@ -817,16 +1142,13 @@ def q11_raster_point_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7: ST_Value(rast, pt) at each road's representative vertex — point ->
     tile equi-join + vectorized pixel gather from binary tiles
     (hill_v2/03_compute_relief_from_raster.sql:17-56)."""
+    from .functions import cells
     from .operators import zonal
     from .sources.raster import raster_tiles
 
     r = world.roads_materialized(spark, sf_dir)
-    mid = (F.floor(F.size("vertices") / 2) + 1).cast("int")
-    pts = r.select(
-        "osm_id",
-        F.element_at("vertices", mid)["lon"].alias("lon"),
-        F.element_at("vertices", mid)["lat"].alias("lat"),
-    )
+    rep = cells.rep_vertex()
+    pts = r.select("osm_id", rep["lon"].alias("lon"), rep["lat"].alias("lat"))
     return zonal.sample_points(raster_tiles(spark), pts)
 
 
@@ -835,24 +1157,13 @@ ORACLES["q11_raster_point_sample"] = _q11_sql()
 
 # --------------------------------------------------------------------- q12
 def _q12_sql() -> str:
-    ppc = W.PX_PER_CELL
     fl = oracle.fl
-    pdr = f"LEAST(pop_sum / {fl(W.POP_SAT_CELL)}, {fl(1.0)})"
-    bur = f"LEAST(built_sum / {fl(W.BUILT_SAT_CELL)}, {fl(1.0)})"
-    pressure = f"({fl(1.0)} - ({fl(1.0)} - {pdr}) * ({fl(1.0)} - {bur}))"
-    return f"""WITH {_pixels_cte()},
-cellsums AS (
-  SELECT (py // {ppc}) * {W.NX} + (px // {ppc}) AS grid_id,
-         CAST(SUM(pop) AS BIGINT) AS pop_sum,
-         CAST(SUM(built) AS BIGINT) AS built_sum
-  FROM pixvals GROUP BY 1
-)
-SELECT grid_id, pop_sum, built_sum,
-       CAST(floor({pressure} * {fl(1.0e6)}) AS BIGINT) AS pressure_micro,
-       CASE WHEN {pressure} >= {fl(W.PRESSURE_URBAN)} THEN 'urban'
-            WHEN {pressure} >= {fl(W.PRESSURE_SEMI)} THEN 'semi_urban'
+    return f"""WITH {_pressure_sql_ctes()}
+SELECT grid_id, pop_sum, built_sum, pressure_micro,
+       CASE WHEN pressure >= {fl(W.PRESSURE_URBAN)} THEN 'urban'
+            WHEN pressure >= {fl(W.PRESSURE_SEMI)} THEN 'semi_urban'
             ELSE 'rural' END AS pressure_class
-FROM cellsums"""
+FROM pressures"""
 
 
 @register("q12_urban_pressure")
@@ -1102,8 +1413,6 @@ def q18_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", "lang", "source", "text", T.tokens(F.col("text")).alias("t"))
     n_tok = F.size("t").cast("long")
-    sum_len = F.expr("aggregate(transform(t, x -> length(x)), 0, (acc, x) -> acc + x)")
-    n_stop = F.expr(f"size(filter(t, x -> array_contains(array({stop}), x)))")
     stop_pm = F.expr(f"CAST((size(filter(t, x -> array_contains(array({stop}), x))) * 1000) "
                      f"DIV size(t) AS BIGINT)")
     return d.select(
@@ -1323,34 +1632,20 @@ def q25_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------- q27
 def _q27_sql() -> str:
-    ppc = W.PX_PER_CELL
-    fl = oracle.fl
-    pdr = f"LEAST(pop_sum / {fl(W.POP_SAT_CELL)}, {fl(1.0)})"
-    bur = f"LEAST(built_sum / {fl(W.BUILT_SAT_CELL)}, {fl(1.0)})"
-    pressure = f"({fl(1.0)} - ({fl(1.0)} - {pdr}) * ({fl(1.0)} - {bur}))"
-    return f"""WITH RECURSIVE {_pixels_cte()},
-cellsums AS (
-  SELECT (py // {ppc}) * {W.NX} + (px // {ppc}) AS grid_id,
-         CAST(SUM(pop) AS BIGINT) AS pop_sum, CAST(SUM(built) AS BIGINT) AS built_sum
-  FROM pixvals GROUP BY 1
-),
-urban AS (SELECT grid_id FROM cellsums WHERE {pressure} >= {fl(W.PRESSURE_URBAN)}),
-edges AS (
-  SELECT a.grid_id AS a, b.grid_id AS b
-  FROM urban a JOIN urban b ON
-    (b.grid_id = a.grid_id - 1 AND a.grid_id % {W.NX} != 0) OR
-    (b.grid_id = a.grid_id + 1 AND a.grid_id % {W.NX} != {W.NX - 1}) OR
-    b.grid_id = a.grid_id - {W.NX} OR b.grid_id = a.grid_id + {W.NX}
-),
-reach(a, b) AS (
-  SELECT grid_id, grid_id FROM urban
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON e.a = r.b
-),
-comp AS (SELECT a AS grid_id, MIN(b) AS component FROM reach GROUP BY a)
+    return f"""WITH RECURSIVE {_urban_comp_sql_ctes()}
 SELECT c.grid_id, c.component,
        CAST(COUNT(*) OVER (PARTITION BY c.component) AS BIGINT) AS component_size
 FROM comp c"""
+
+
+def _urban_cells(spark: SparkSession) -> DataFrame:
+    """grid_id of every urban-pressure cell: the vertex set of the urban
+    clusters q27, q35 and q48 measure."""
+    from .operators import zonal
+    from .sources.raster import raster_tiles
+
+    press = zonal.urban_pressure(zonal.zonal_cell_sums(raster_tiles(spark)))
+    return press.filter(F.col("pressure_class") == "urban").select("grid_id")
 
 
 @register("q27_urban_clusters")
@@ -1359,12 +1654,9 @@ def q27_urban_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     analogue) via iterative min-label propagation to exact fixpoint."""
     from pyspark.sql import Window
 
-    from .operators import clusters, zonal
-    from .sources.raster import raster_tiles
+    from .operators import clusters
 
-    press = zonal.urban_pressure(zonal.zonal_cell_sums(raster_tiles(spark)))
-    urban = press.filter(F.col("pressure_class") == "urban").select("grid_id")
-    comp = clusters.connected_components(urban)
+    comp = clusters.connected_components(_urban_cells(spark))
     w = Window.partitionBy("component")
     return comp.select(
         "grid_id", "component",
@@ -1375,64 +1667,13 @@ ORACLES["q27_urban_clusters"] = _q27_sql()
 
 
 # --------------------------------------------------------------------- q28
-def _sql_hier(col: str = "highway") -> str:
-    whens = " ".join(f"WHEN '{h}' THEN {r}" for h, r in W.HIERARCHY.items())
-    return f"CASE {col} {whens} ELSE 0 END"
-
-
 def _q28_sql() -> str:
-    fl = oracle.fl
-    top = ", ".join(f"'{h}'" for h in W.DEGRADE_TOP_HW)
-    base = (f"CASE WHEN n_ways >= 4 THEN {fl(W.DEGRADE_RED['major'])} "
-            f"WHEN n_ways = 3 THEN {fl(W.DEGRADE_RED['three_way'])} "
-            f"ELSE {fl(W.DEGRADE_RED['crossing'])} END")
-    lenm = og.seg_len_m()
     return f"""{oracle.with_world('verts', 'segs')},
-node_stats AS (
-  SELECT node_id,
-         COUNT(DISTINCT osm_id) AS n_ways,
-         COUNT(DISTINCT highway) AS n_types,
-         MAX(CASE WHEN k > 0 AND k < nv - 1 THEN 1 ELSE 0 END) AS mid
-  FROM verts GROUP BY node_id
-),
-qual AS (
-  SELECT node_id, n_ways FROM node_stats
-  WHERE n_ways >= 2 AND (n_ways >= 3 OR n_types >= 2 OR mid = 1)
-),
-nt AS (SELECT DISTINCT node_id, highway FROM verts),
-ranked AS (
-  SELECT node_id, highway,
-         ROW_NUMBER() OVER (PARTITION BY node_id
-                            ORDER BY {_sql_hier()} DESC, highway ASC) AS rn
-  FROM nt
-),
-top AS (
-  SELECT node_id, MAX(CASE WHEN rn = 1 THEN highway END) AS road_type_1
-  FROM ranked WHERE rn <= 2 GROUP BY node_id
-),
-nodes AS (
-  SELECT q.node_id,
-         CASE WHEN t.road_type_1 IN ({top}) THEN ({base}) * 2 ELSE {base} END AS red
-  FROM qual q JOIN top t USING (node_id)
-),
-wn AS (SELECT DISTINCT osm_id, node_id FROM verts),
-per_way AS (
-  SELECT osm_id, COUNT(*) AS n_int,
-         MAX(CAST(round(red * {fl(W.LEN_Q)}) AS BIGINT)) AS max_red_ppm,
-         SUM(CAST(round(red * {fl(W.LEN_Q)}) AS BIGINT)) AS sum_red_ppm,
-         list_sort(list({fl(1.0)} - red)) AS omr
-  FROM wn JOIN nodes USING (node_id) GROUP BY osm_id
-),
-totals AS (
-  SELECT osm_id, SUM({og.quantize_um(lenm)}) AS total_len_um FROM segs GROUP BY osm_id
-)
-SELECT p.osm_id, CAST(n_int AS BIGINT) AS n_int, max_red_ppm,
+{_dg_sql_ctes()}
+SELECT osm_id, CAST(n_int AS BIGINT) AS n_int, max_red_ppm,
        CAST(sum_red_ppm AS BIGINT) AS sum_red_ppm,
-       CAST(total_len_um AS BIGINT) AS total_len_um,
-       CAST(CASE WHEN total_len_um >= {W.DEGRADE_LEN_UM} THEN sum_red_ppm // n_int
-            ELSE CAST(round(({fl(1.0)} - list_reduce(omr, (a, b) -> a * b))
-                            * {fl(W.LEN_Q)}) AS BIGINT) END AS BIGINT) AS final_red_ppm
-FROM per_way p JOIN totals USING (osm_id)"""
+       CAST(total_len_um AS BIGINT) AS total_len_um, final_red_ppm
+FROM dg"""
 
 
 @register("q28_intersection_degradation")
@@ -1653,9 +1894,8 @@ FROM (
   ) v
   GROUP BY v.osm_id
 ) s
-JOIN (SELECT osm_id, lon AS rep_lon, lat AS rep_lat FROM verts WHERE k = nv // 2) r
-  ON r.osm_id = s.osm_id""")
-    return (f"{oracle.with_world('verts')},\n"
+JOIN reps r ON r.osm_id = s.osm_id""")
+    return (f"{oracle.with_world('verts')},\n{_reps_cte()},\n"
             + ",\n".join(ctes) + "\n"
             + "\nUNION ALL\n".join(parts))
 
@@ -1783,31 +2023,8 @@ ORACLES["q34_relation_members"] = _q34_sql()
 
 # --------------------------------------------------------------------- q35
 def _q35_sql() -> str:
-    ppc = W.PX_PER_CELL
     fl = oracle.fl
-    pdr = f"LEAST(pop_sum / {fl(W.POP_SAT_CELL)}, {fl(1.0)})"
-    bur = f"LEAST(built_sum / {fl(W.BUILT_SAT_CELL)}, {fl(1.0)})"
-    pressure = f"({fl(1.0)} - ({fl(1.0)} - {pdr}) * ({fl(1.0)} - {bur}))"
-    return f"""WITH RECURSIVE {_pixels_cte()},
-cellsums AS (
-  SELECT (py // {ppc}) * {W.NX} + (px // {ppc}) AS grid_id,
-         CAST(SUM(pop) AS BIGINT) AS pop_sum, CAST(SUM(built) AS BIGINT) AS built_sum
-  FROM pixvals GROUP BY 1
-),
-urban AS (SELECT grid_id FROM cellsums WHERE {pressure} >= {fl(W.PRESSURE_URBAN)}),
-edges AS (
-  SELECT a.grid_id AS a, b.grid_id AS b
-  FROM urban a JOIN urban b ON
-    (b.grid_id = a.grid_id - 1 AND a.grid_id % {W.NX} != 0) OR
-    (b.grid_id = a.grid_id + 1 AND a.grid_id % {W.NX} != {W.NX - 1}) OR
-    b.grid_id = a.grid_id - {W.NX} OR b.grid_id = a.grid_id + {W.NX}
-),
-reach(a, b) AS (
-  SELECT grid_id, grid_id FROM urban
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON e.a = r.b
-),
-comp AS (SELECT a AS grid_id, MIN(b) AS component FROM reach GROUP BY a)
+    return f"""WITH RECURSIVE {_urban_comp_sql_ctes()}
 SELECT component,
        CAST(COUNT(*) AS BIGINT) AS area_cells,
        CAST(MIN(grid_id % {W.NX}) AS BIGINT) AS bbox_i0,
@@ -1834,12 +2051,9 @@ def q35_cluster_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared trig-free Taylor tree (functions/geometry.cos_lat), floored
     per cell so the sum is order-free and engine-identical."""
     from .functions import geometry as G
-    from .operators import clusters, zonal
-    from .sources.raster import raster_tiles
+    from .operators import clusters
 
-    press = zonal.urban_pressure(zonal.zonal_cell_sums(raster_tiles(spark)))
-    urban = press.filter(F.col("pressure_class") == "urban").select("grid_id")
-    comp = clusters.connected_components(urban)
+    comp = clusters.connected_components(_urban_cells(spark))
     i = (F.col("grid_id") % W.NX).cast("long")
     j = F.floor(F.col("grid_id") / W.NX).cast("long")
     latc = (F.col("j").cast("double") + F.lit(0.5)) * F.lit(W.CELL_DEG)
@@ -2198,7 +2412,6 @@ ORACLES["q40_qc_sample"] = _q40_sql()
 
 # --------------------------------------------------------------------- q41
 def _q41_sql() -> str:
-    lenm = og.seg_len_m()
     rng = _q38_range_width()
     return f"""{oracle.with_world('segs', 'grid')},
 {og.cand_cells_ctes('segs')},
@@ -2306,8 +2519,7 @@ def _q44_sql() -> str:
     built = "(px*91 + py*17) % 50"
     inv = 1.0 / W.HILL_SMOOTH_DEG
     r2 = W.HILL_SMOOTH_DEG * W.HILL_SMOOTH_DEG
-    semi = (f"(rep_lon >= {fl(W.SEMI_LO)} AND rep_lon < {fl(W.SEMI_HI)} "
-            f"AND rep_lat >= {fl(W.SEMI_LO)} AND rep_lat < {fl(W.SEMI_HI)})")
+    semi = _semi_sql()
     d2 = og.point_dist2("a.rep_lon", "a.rep_lat", "b.rep_lon", "b.rep_lat")
     return f"""{oracle.with_world('verts', 'segs')},
 seglen AS (
@@ -2369,9 +2581,7 @@ relief AS (
          CAST((SUM({built}) * 1000000) // n AS BIGINT) AS slope_mean_micro
   FROM vals GROUP BY osm_id, total_um, n
 ),
-reps AS (
-  SELECT osm_id, lon AS rep_lon, lat AS rep_lat FROM verts WHERE k = nv // 2
-),
+{_reps_cte()},
 sig AS (
   SELECT r.*, p.rep_lon, p.rep_lat,
          NOT {semi} AS rural,
@@ -2432,7 +2642,7 @@ def q44_hill_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     All signal math is int64 micro-units; the smoothing join is rural-only
     (the dense urban core is excluded BY THE SEMANTICS, so the micro-grid
     join cannot go quadratic in the hotspot)."""
-    from .functions import geometry as G
+    from .functions import cells, geometry as G
     from .operators import zonal
     from .sources.raster import raster_tiles
 
@@ -2460,14 +2670,12 @@ def q44_hill_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .cast("long").alias("relief_mean_micro"),
                       F.expr("(slope_sum * 1000000) div n_samples")
                       .cast("long").alias("slope_mean_micro")))
-    mid = (F.floor(F.size("vertices") / 2) + 1).cast("int")
-    rep = F.element_at("vertices", mid)
+    rep = cells.rep_vertex()
     reps = r.select("osm_id", rep["lon"].alias("rep_lon"),
                     rep["lat"].alias("rep_lat"))
-    semi = ((F.col("rep_lon") >= W.SEMI_LO) & (F.col("rep_lon") < W.SEMI_HI)
-            & (F.col("rep_lat") >= W.SEMI_LO) & (F.col("rep_lat") < W.SEMI_HI))
     sig = (relief.join(reps, "osm_id")
-           .withColumn("rural", ~semi)
+           .withColumn("rural", ~cells.in_semi_window(F.col("rep_lon"),
+                                                      F.col("rep_lat")))
            .withColumn("signal_raw_micro",
                        F.when(F.col("rural"),
                               F.col("slope_mean_micro")
@@ -2521,47 +2729,8 @@ ORACLES["q44_hill_composite"] = _q44_sql()
 
 # --------------------------------------------------------------------- q45
 def _q45_sql() -> str:
-    n, k = W.RASTER_PX, len(W.WCLASSES)
-    fl = oracle.fl
-    buf = fl(W.WC_BUF_PX / float(n))
-    step = fl(float(W.WC_SAMPLE_STEP_PX))
-    t = "(CAST(j AS DOUBLE) / CAST(m AS DOUBLE))"
-    d2 = og.seg_point_dist2("ax", "ay", "bx", "by", "pcx", "pcy")
     return f"""{oracle.with_world('segs')},
-sam AS (
-  SELECT osm_id, ax, ay, bx, by,
-         GREATEST(1, CAST(ceil((sqrt((bx - ax) * (bx - ax)
-                                     + (by - ay) * (by - ay)) * {fl(float(n))})
-                               / {step}) AS BIGINT)) AS m
-  FROM segs
-),
-pts AS (
-  SELECT osm_id, ax, ay, bx, by,
-         CAST(floor((ax + (bx - ax) * {t}) * {fl(float(n))}) AS BIGINT) AS cx,
-         CAST(floor((ay + (by - ay) * {t}) * {fl(float(n))}) AS BIGINT) AS cy
-  FROM (SELECT *, unnest(generate_series(0, m)) AS j FROM sam)
-),
-cand AS (
-  SELECT osm_id, ax, ay, bx, by, cx + di AS px, cy + dj AS py,
-         (CAST(cx + di AS DOUBLE) + 0.5e0) / {fl(float(n))} AS pcx,
-         (CAST(cy + dj AS DOUBLE) + 0.5e0) / {fl(float(n))} AS pcy
-  FROM pts,
-       (SELECT unnest(generate_series(-2, 2)) AS di),
-       (SELECT unnest(generate_series(-2, 2)) AS dj)
-  WHERE cx + di >= 0 AND cx + di < {n} AND cy + dj >= 0 AND cy + dj < {n}
-),
-pix AS (
-  SELECT DISTINCT osm_id, px, py
-  FROM cand WHERE {d2} <= {buf} * {buf}
-),
-hist AS (
-  SELECT osm_id,
-         SUM(CASE WHEN (px * {W.WC_MUL_X} + py * {W.WC_MUL_Y}) % {k} = 0
-                  THEN 1 ELSE 0 END) AS forest_px,
-         SUM(CASE WHEN (px * {W.WC_MUL_X} + py * {W.WC_MUL_Y}) % {k} IN (1, 2, 3)
-                  THEN 1 ELSE 0 END) AS field_px
-  FROM pix GROUP BY osm_id
-)
+{_wc_sql_ctes()}
 SELECT osm_id,
        CAST(forest_px AS BIGINT) AS forest_px,
        CAST(field_px AS BIGINT) AS field_px,
@@ -2572,7 +2741,7 @@ SELECT osm_id,
        CAST(CASE WHEN forest_px + field_px = 0 THEN 0
             ELSE (field_px * 1000000) // (forest_px + field_px) END AS BIGINT)
          AS field_frac_micro
-FROM hist"""
+FROM wc"""
 
 
 @register("q45_buffer_histogram")
@@ -2590,275 +2759,11 @@ def q45_buffer_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["q45_buffer_histogram"] = _q45_sql()
 
 
-# ------------------------------------------------- shared oracle chains
-# CTE-text builders shared by the persona composites (q46 v2, q58 v1) and
-# the scenery layers — each returns the exact generated SQL the monolithic
-# _q46_sql/_q53_sql carried before round 4's extraction, so the green
-# queries' oracle text is unchanged.
-
-
-def _setting_sql() -> str:
-    """q01 majority-setting CASE over the cl_per sums."""
-    u, s_, ru = ("COALESCE(c.u, 0)", "COALESCE(c.s, 0)", "COALESCE(c.ru, 0)")
-    tot = f"({u} + {s_} + {ru})"
-    return (f"CASE WHEN {tot} = 0 THEN 'Rural' "
-            f"WHEN {u} * 2 >= {tot} THEN 'Urban' "
-            f"WHEN ({u} + {s_}) * 2 >= {tot} THEN 'Semi_Urban' "
-            f"ELSE 'Rural' END")
-
-
-def _hadj_sql_ctes() -> str:
-    """q09 HAdj endpoint-upgrade chain (h_types..h_per)."""
-    fl = oracle.fl
-    d = fl(W.ENDPOINT_DIST_DEG)
-    hd2 = og.point_dist2("e.lon", "e.lat", "h.hlon", "h.hlat")
-    return f"""h_types AS (
-  SELECT osm_id AS h_osm FROM roads_base
-  WHERE ref IS NOT NULL AND (upper(ref) LIKE '%NH%' OR upper(ref) LIKE '%SH%'
-                             OR upper(ref) LIKE '%MDR%')
-),
-h_nodes AS (
-  SELECT v.osm_id AS h_osm, v.lon AS hlon, v.lat AS hlat
-  FROM verts v JOIN h_types t ON v.osm_id = t.h_osm
-),
-h_eps AS (
-  SELECT osm_id, CASE WHEN k = 0 THEN 0 ELSE 1 END AS ep, lon, lat
-  FROM verts WHERE k = 0 OR k = nv - 1
-),
-h_matches AS (
-  SELECT DISTINCT e.osm_id, e.ep
-  FROM h_eps e JOIN h_nodes h ON h.h_osm != e.osm_id
-    AND h.hlon >= e.lon - {d} AND h.hlon <= e.lon + {d}
-    AND h.hlat >= e.lat - {d} AND h.hlat <= e.lat + {d}
-  WHERE {hd2} <= {d} * {d}
-),
-h_per AS (
-  SELECT osm_id,
-         MAX(CASE WHEN ep = 0 THEN 1 ELSE 0 END) = 1
-         AND MAX(CASE WHEN ep = 1 THEN 1 ELSE 0 END) = 1 AS hadj_upgrade
-  FROM h_matches GROUP BY osm_id
-)"""
-
-
-def _cl_sql_ctes() -> str:
-    """q01 classification chain: seg cell cover + per-road class-length
-    sums (emits ``seg_cells``, reusable by any cell-cover consumer)."""
-    lenm = og.seg_len_m()
-    piece = og.quantize_um(f"({og.seg_rect_frac()}) * ({lenm})")
-    return f"""{og.cand_cells_ctes('segs')},
-cl_per AS (
-  SELECT c.osm_id,
-         SUM(CASE WHEN g.grid_class = 'Urban' THEN {piece} ELSE 0 END) AS u,
-         SUM(CASE WHEN g.grid_class = 'Semi_Urban' THEN {piece} ELSE 0 END) AS s,
-         SUM(CASE WHEN g.grid_class = 'Rural' THEN {piece} ELSE 0 END) AS ru
-  FROM seg_cells c JOIN grid g USING (grid_id)
-  WHERE {og.seg_rect_hit()}
-  GROUP BY c.osm_id
-)"""
-
-
-def _tw_sql_ctes() -> str:
-    """q08 twistiness chain (tw_segd..tw_tot)."""
-    fl = oracle.fl
-    M, Q = fl(W.M_PER_DEG), fl(W.LEN_Q)
-    win = int(W.SUPPRESS_M * 1.0e6)
-    nconf = len(W.CONFLICT_TYPES)
-    return f"""tw_segd AS (
-  SELECT osm_id, k, nv, lon, lat, node_id,
-         (LEAD(lon) OVER w - lon) * {M} AS sdx,
-         (LEAD(lat) OVER w - lat) * {M} AS sdy,
-         LAG(lon) OVER w AS plon, LAG(lat) OVER w AS plat,
-         LEAD(lon) OVER w AS nlon, LEAD(lat) OVER w AS nlat
-  FROM verts WINDOW w AS (PARTITION BY osm_id ORDER BY k)
-),
-tw_segq AS (
-  SELECT *,
-         CASE WHEN sdx IS NULL THEN 0
-              ELSE CAST(floor(sqrt(sdx*sdx + sdy*sdy) * {Q}) AS BIGINT) END AS seg_um
-  FROM tw_segd
-),
-tw_cumv AS (
-  SELECT *,
-         COALESCE(SUM(seg_um) OVER (PARTITION BY osm_id ORDER BY k
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-  FROM tw_segq
-),
-tw_conf AS (SELECT osm_id, cum AS ccum FROM tw_cumv WHERE node_id % 97 < {nconf}),
-tw_interior AS (
-  SELECT v.osm_id,
-         (v.lon - v.plon) * {M} AS ux, (v.lat - v.plat) * {M} AS uy,
-         (v.nlon - v.lon) * {M} AS wx, (v.nlat - v.lat) * {M} AS wy,
-         (v.nlon - v.plon) * {M} AS cx_, (v.nlat - v.plat) * {M} AS cy_,
-         EXISTS (SELECT 1 FROM tw_conf c
-                 WHERE c.osm_id = v.osm_id AND abs(v.cum - c.ccum) <= {win}) AS sup
-  FROM tw_cumv v WHERE v.k >= 1 AND v.k <= v.nv - 2
-),
-tw_vm AS (
-  SELECT osm_id, sup,
-         sqrt(ux*ux + uy*uy) AS a,
-         sqrt(wx*wx + wy*wy) AS b,
-         sqrt(cx_*cx_ + cy_*cy_) AS c,
-         abs(ux*wy - uy*wx) AS area2,
-         (ux*wx + uy*wy) AS dot
-  FROM tw_interior
-),
-tw_judged AS (
-  SELECT osm_id, sup,
-         CAST(floor(((a + b) / 2.0e0) * {Q}) AS BIGINT) AS contrib_um,
-         NOT (dot > 0 AND area2 < {fl(W.SIN5)} * (a * b)) AS significant,
-         (a > 0 AND b > 0 AND area2 > 0) AS nonzero,
-         CASE WHEN area2 > 0 THEN (a * b * c) / (2.0e0 * area2) ELSE NULL END AS radius
-  FROM tw_vm
-),
-tw_flags AS (
-  SELECT osm_id, sup, contrib_um,
-         significant AND nonzero AND radius <= {fl(W.SHARP_RADIUS_M)} AS sharp,
-         significant AND nonzero AND radius <= {fl(W.BROAD_RADIUS_M)} AS broad0
-  FROM tw_judged
-),
-tw_roll AS (
-  SELECT osm_id,
-         SUM(CASE WHEN sharp AND NOT sup THEN contrib_um ELSE 0 END) AS sharp_len_um,
-         SUM(CASE WHEN broad0 AND NOT sharp AND NOT sup THEN contrib_um ELSE 0 END) AS broad_len_um
-  FROM tw_flags GROUP BY osm_id
-),
-tw_tot AS (SELECT osm_id, SUM(seg_um) AS total_len_um FROM tw_segq GROUP BY osm_id)"""
-
-
-def _tw_permille_join() -> str:
-    """Per-road twist_permille subquery (joins tw_roll/tw_tot to every
-    road), the text q46's inraw LEFT JOINs."""
-    twist = ("CASE WHEN COALESCE(tt.total_len_um, 0) > 0 "
-             "THEN ((COALESCE(tr.sharp_len_um, 0) * 2 + "
-             "COALESCE(tr.broad_len_um, 0)) * 1000) "
-             "// GREATEST(tt.total_len_um, 1) ELSE 0 END")
-    return f"""(
-    SELECT r.osm_id,
-           CAST({twist.replace('tr.', 'tr2.').replace('tt.', 'tt2.')} AS BIGINT)
-             AS twist_permille
-    FROM roads_base r
-    LEFT JOIN tw_roll tr2 ON tr2.osm_id = r.osm_id
-    LEFT JOIN tw_tot tt2 ON tt2.osm_id = r.osm_id
-  )"""
-
-
-def _pip_hits_cte(name: str, layer: str) -> str:
-    """Distinct osm_ids with ANY vertex inside a pentagon of ``layer``
-    (the q03/q46-lakes crossing-parity PIP)."""
-    cross = og.point_in_poly_crossing("v.lon", "v.lat", "e.x1", "e.y1",
-                                      "e.x2", "e.y2")
-    return f"""{name} AS (
-  SELECT DISTINCT osm_id FROM (
-    SELECT v.osm_id
-    FROM verts v
-    JOIN feats f ON f.is_poly AND f.layer = '{layer}'
-      AND v.lon >= f.cx - f.r AND v.lon <= f.cx + f.r
-      AND v.lat >= f.cy - f.r AND v.lat <= f.cy + f.r
-    JOIN feat_edges e ON e.feature_id = f.feature_id
-    GROUP BY v.osm_id, v.k, v.lon, v.lat, f.feature_id
-    HAVING SUM({cross}) % 2 = 1
-  )
-)"""
-
-
-def _dist_hits_cte(name: str, layer: str, dist: float) -> str:
-    """Distinct osm_ids with any segment within ``dist`` of a point
-    feature of ``layer`` (the q04-style distance join)."""
-    fl = oracle.fl
-    dd = fl(dist)
-    sd2 = og.seg_point_dist2("s.ax", "s.ay", "s.bx", "s.by", "f.cx", "f.cy")
-    return f"""{name} AS (
-  SELECT DISTINCT s.osm_id
-  FROM segs s JOIN feats f ON f.layer = '{layer}'
-    AND f.cx >= LEAST(s.ax, s.bx) - {dd} AND f.cx <= GREATEST(s.ax, s.bx) + {dd}
-    AND f.cy >= LEAST(s.ay, s.by) - {dd} AND f.cy <= GREATEST(s.ay, s.by) + {dd}
-  WHERE {sd2} <= {dd} * {dd}
-)"""
-
-
-def _coast_sql_ctes() -> str:
-    """q53 coastline dimension: the fixed polyline + its dilated cell
-    cover (coast, coast_cells_i, coast_cells)."""
-    fl = oracle.fl
-    W_ = W
-    n_, cd = W_.NX, fl(W_.CELL_DEG)
-    r = W_.BEACH_DIST_DEG
-    yk = (f"({fl(W_.COAST_Y_BASE)} + CAST((k * {W_.COAST_Y_MUL}) "
-          f"% {W_.COAST_Y_MOD} - {W_.COAST_Y_HALF} AS DOUBLE) "
-          f"/ {fl(W_.COAST_Y_DEN)})")
-    yk1 = (f"({fl(W_.COAST_Y_BASE)} + CAST(((k + 1) * {W_.COAST_Y_MUL}) "
-           f"% {W_.COAST_Y_MOD} - {W_.COAST_Y_HALF} AS DOUBLE) "
-           f"/ {fl(W_.COAST_Y_DEN)})")
-    return f"""coast AS (
-  SELECT k,
-         CAST(k AS DOUBLE) / {fl(float(W_.COAST_N))} AS cx1, {yk} AS cy1,
-         CAST(k + 1 AS DOUBLE) / {fl(float(W_.COAST_N))} AS cx2, {yk1} AS cy2
-  FROM (SELECT unnest(generate_series(0, {W_.COAST_N - 1})) AS k)
-),
-coast_cells_i AS (
-  SELECT *, unnest(generate_series(i0, i1)) AS ci FROM (
-    SELECT *,
-      GREATEST(0, LEAST({n_ - 1}, CAST(floor((LEAST(cx1, cx2) - {fl(r)}) / {cd}) AS BIGINT))) AS i0,
-      GREATEST(0, LEAST({n_ - 1}, CAST(floor((GREATEST(cx1, cx2) + {fl(r)}) / {cd}) AS BIGINT))) AS i1,
-      GREATEST(0, LEAST({W_.NY - 1}, CAST(floor((LEAST(cy1, cy2) - {fl(r)}) / {cd}) AS BIGINT))) AS j0,
-      GREATEST(0, LEAST({W_.NY - 1}, CAST(floor((GREATEST(cy1, cy2) + {fl(r)}) / {cd}) AS BIGINT))) AS j1
-    FROM coast
-  )
-),
-coast_cells AS (
-  SELECT *, unnest(generate_series(j0, j1)) * {n_} + ci AS grid_id
-  FROM coast_cells_i
-)"""
-
-
-def _coast_hits_cte(name: str) -> str:
-    """Distinct osm_ids with any segment line-DWithin of the coastline
-    (consumes ``seg_cells`` and the _coast_sql_ctes tables)."""
-    fl = oracle.fl
-    r = W.BEACH_DIST_DEG
-    r2 = r * r
-    within = (
-        og.seg_seg_intersect("ax", "ay", "bx", "by",
-                             "cx1", "cy1", "cx2", "cy2")
-        + f" OR {og.seg_point_dist2('cx1', 'cy1', 'cx2', 'cy2', 'ax', 'ay')} <= {fl(r2)}"
-        + f" OR {og.seg_point_dist2('cx1', 'cy1', 'cx2', 'cy2', 'bx', 'by')} <= {fl(r2)}"
-        + f" OR {og.seg_point_dist2('ax', 'ay', 'bx', 'by', 'cx1', 'cy1')} <= {fl(r2)}"
-        + f" OR {og.seg_point_dist2('ax', 'ay', 'bx', 'by', 'cx2', 'cy2')} <= {fl(r2)}")
-    return f"""{name} AS (
-  SELECT DISTINCT s.osm_id
-  FROM seg_cells s JOIN coast_cells c USING (grid_id)
-  WHERE {within}
-)"""
-
-
 # --------------------------------------------------------------------- q46
 def _q46_sql() -> str:
     from .operators import persona as P
 
     fl = oracle.fl
-    setting = _setting_sql()
-    lenm = og.seg_len_m()
-    # --- degradation (q28 chain, prefixed) ----------------------------------
-    dtop = ", ".join(f"'{h}'" for h in W.DEGRADE_TOP_HW)
-    dbase = (f"CASE WHEN n_ways >= 4 THEN {fl(W.DEGRADE_RED['major'])} "
-             f"WHEN n_ways = 3 THEN {fl(W.DEGRADE_RED['three_way'])} "
-             f"ELSE {fl(W.DEGRADE_RED['crossing'])} END")
-    # --- pressure (q12) at the rep cell (q02) -------------------------------
-    ppc = W.PX_PER_CELL
-    pdr = f"LEAST(pop_sum / {fl(W.POP_SAT_CELL)}, {fl(1.0)})"
-    bur = f"LEAST(built_sum / {fl(W.BUILT_SAT_CELL)}, {fl(1.0)})"
-    pressure = f"({fl(1.0)} - ({fl(1.0)} - {pdr}) * ({fl(1.0)} - {bur}))"
-    cd = fl(W.CELL_DEG)
-    rep = (f"GREATEST(0, LEAST({W.NY - 1}, CAST(floor(lat / {cd}) AS BIGINT))) "
-           f"* {W.NX} "
-           f"+ GREATEST(0, LEAST({W.NX - 1}, CAST(floor(lon / {cd}) AS BIGINT)))")
-    # --- WorldCover buffer fractions (q45 chain, prefixed) ------------------
-    n, k = W.RASTER_PX, len(W.WCLASSES)
-    buf = fl(W.WC_BUF_PX / float(n))
-    step = fl(float(W.WC_SAMPLE_STEP_PX))
-    t = "(CAST(j AS DOUBLE) / CAST(m AS DOUBLE))"
-    wd2 = og.seg_point_dist2("ax", "ay", "bx", "by", "pcx", "pcy")
-    # --- shared formula stages ----------------------------------------------
     bik = ", ".join(f"'{h}'" for h in W.BIKABLE)
     first_int = ("COALESCE(CAST(NULLIF(regexp_extract(lanes, '([0-9]+)', 1), "
                  "'') AS INT), 0)")
@@ -2884,113 +2789,21 @@ def _q46_sql() -> str:
 {_hadj_sql_ctes()},
 {_cl_sql_ctes()},
 {_tw_sql_ctes()},
-dg_stats AS (
-  SELECT node_id,
-         COUNT(DISTINCT osm_id) AS n_ways,
-         COUNT(DISTINCT highway) AS n_types,
-         MAX(CASE WHEN k > 0 AND k < nv - 1 THEN 1 ELSE 0 END) AS mid
-  FROM verts GROUP BY node_id
-),
-dg_qual AS (
-  SELECT node_id, n_ways FROM dg_stats
-  WHERE n_ways >= 2 AND (n_ways >= 3 OR n_types >= 2 OR mid = 1)
-),
-dg_nt AS (SELECT DISTINCT node_id, highway FROM verts),
-dg_ranked AS (
-  SELECT node_id, highway,
-         ROW_NUMBER() OVER (PARTITION BY node_id
-                            ORDER BY {_sql_hier()} DESC, highway ASC) AS rn
-  FROM dg_nt
-),
-dg_top AS (
-  SELECT node_id, MAX(CASE WHEN rn = 1 THEN highway END) AS road_type_1
-  FROM dg_ranked WHERE rn <= 2 GROUP BY node_id
-),
-dg_nodes AS (
-  SELECT q.node_id,
-         CASE WHEN t.road_type_1 IN ({dtop}) THEN ({dbase}) * 2
-              ELSE {dbase} END AS red
-  FROM dg_qual q JOIN dg_top t USING (node_id)
-),
-dg_wn AS (SELECT DISTINCT osm_id, node_id FROM verts),
-dg_perway AS (
-  SELECT osm_id, COUNT(*) AS n_int,
-         SUM(CAST(round(red * {fl(W.LEN_Q)}) AS BIGINT)) AS sum_red_ppm,
-         list_sort(list({fl(1.0)} - red)) AS omr
-  FROM dg_wn JOIN dg_nodes USING (node_id) GROUP BY osm_id
-),
-dg_len AS (
-  SELECT osm_id, SUM({og.quantize_um(lenm)}) AS total_len_um
-  FROM segs GROUP BY osm_id
-),
-dg AS (
-  SELECT p.osm_id,
-         CAST(CASE WHEN l.total_len_um >= {W.DEGRADE_LEN_UM}
-              THEN sum_red_ppm // n_int
-              ELSE CAST(round(({fl(1.0)} - list_reduce(omr, (a, b) -> a * b))
-                              * {fl(W.LEN_Q)}) AS BIGINT) END AS BIGINT)
-           AS final_red_ppm
-  FROM dg_perway p JOIN dg_len l USING (osm_id)
-),
-{_pixels_cte()},
-pr_cells AS (
-  SELECT (py // {ppc}) * {W.NX} + (px // {ppc}) AS grid_id,
-         CAST(SUM(pop) AS BIGINT) AS pop_sum,
-         CAST(SUM(built) AS BIGINT) AS built_sum
-  FROM pixvals GROUP BY 1
-),
-pr_press AS (
-  SELECT grid_id,
-         CAST(floor({pressure} * {fl(1.0e6)}) AS BIGINT) AS pressure_micro
-  FROM pr_cells
-),
-pr_rep AS (
-  SELECT osm_id, {rep} AS grid_id FROM verts WHERE k = nv // 2
-),
+{_dg_sql_ctes()},
+{_pressure_sql_ctes()},
+{_reps_cte()},
 pr AS (
   SELECT r.osm_id, p.pressure_micro
-  FROM pr_rep r JOIN pr_press p USING (grid_id)
+  FROM reps r JOIN pressures p ON p.grid_id = r.rep_cell
 ),
 {_pip_hits_cte('lk', 'lakes')},
 {_dist_hits_cte('hl', 'hills_nodes', W.DIST_HILL_DEG)},
 {_dist_hits_cte('rv', 'rivers', W.DIST_RIVER_DEG)},
-wc_sam AS (
-  SELECT osm_id, ax, ay, bx, by,
-         GREATEST(1, CAST(ceil((sqrt((bx - ax) * (bx - ax)
-                                     + (by - ay) * (by - ay)) * {fl(float(n))})
-                               / {step}) AS BIGINT)) AS m
-  FROM segs
-),
-wc_pts AS (
-  SELECT osm_id, ax, ay, bx, by,
-         CAST(floor((ax + (bx - ax) * {t}) * {fl(float(n))}) AS BIGINT) AS cx,
-         CAST(floor((ay + (by - ay) * {t}) * {fl(float(n))}) AS BIGINT) AS cy
-  FROM (SELECT *, unnest(generate_series(0, m)) AS j FROM wc_sam)
-),
-wc_cand AS (
-  SELECT osm_id, ax, ay, bx, by, cx + di AS px, cy + dj AS py,
-         (CAST(cx + di AS DOUBLE) + 0.5e0) / {fl(float(n))} AS pcx,
-         (CAST(cy + dj AS DOUBLE) + 0.5e0) / {fl(float(n))} AS pcy
-  FROM wc_pts,
-       (SELECT unnest(generate_series(-2, 2)) AS di),
-       (SELECT unnest(generate_series(-2, 2)) AS dj)
-  WHERE cx + di >= 0 AND cx + di < {n} AND cy + dj >= 0 AND cy + dj < {n}
-),
-wc_pix AS (
-  SELECT DISTINCT osm_id, px, py FROM wc_cand WHERE {wd2} <= {buf} * {buf}
-),
-wc AS (
-  SELECT osm_id,
-         SUM(CASE WHEN (px * {W.WC_MUL_X} + py * {W.WC_MUL_Y}) % {k} = 0
-                  THEN 1 ELSE 0 END) AS forest_px,
-         SUM(CASE WHEN (px * {W.WC_MUL_X} + py * {W.WC_MUL_Y}) % {k} IN (1, 2, 3)
-                  THEN 1 ELSE 0 END) AS field_px
-  FROM wc_pix GROUP BY osm_id
-),
+{_wc_sql_ctes()},
 inraw AS (
   SELECT b.osm_id, b.highway, b.ref, b.lanes, b.oneway,
          COALESCE(h.hadj_upgrade, FALSE) AS hadj_upgrade,
-         {setting} AS road_setting,
+         {_setting_sql()} AS road_setting,
          COALESCE(tw_p.twist_permille, 0) AS twist_permille,
          dg.final_red_ppm,
          COALESCE(pr.pressure_micro, 0) AS pressure_micro,
@@ -3004,7 +2817,7 @@ inraw AS (
   FROM (SELECT * FROM roads_base WHERE highway IN ({bik})) b
   LEFT JOIN h_per h USING (osm_id)
   LEFT JOIN cl_per c USING (osm_id)
-  LEFT JOIN {_tw_permille_join()} tw_p USING (osm_id)
+  LEFT JOIN tw_p USING (osm_id)
   LEFT JOIN dg USING (osm_id)
   LEFT JOIN pr USING (osm_id)
   LEFT JOIN hl ON hl.osm_id = b.osm_id
@@ -3082,25 +2895,18 @@ def q46_persona_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet recomputes faster than a serialize+reread, and checkpoint
     # barriers break whole-stage fusion in every consumer)
     s = world.segments(spark, sf_dir, r_bik)
-    g = world.grids(spark)
     wn_global = world.way_nodes(spark, sf_dir, r)   # degradation node stats
     wn = world.way_nodes(spark, sf_dir, r_bik)
     feats = world.features(spark, sf_dir)
 
     bik = r_bik.select("osm_id", "highway", "ref", "lanes", "oneway")
-    hadj = _endpoint_proximity_upgrade(r, r_bik) \
-        .select("osm_id", "hadj_upgrade")
-    setting = classify.classify_roads(r_bik, s, g) \
-        .select("osm_id", "road_setting")
-    tw = _curvature_rollup(r_bik).select("osm_id", "twist_permille")
+    hadj, setting, tw, hills, rivers = _persona_road_branches(
+        r, r_bik, s, feats)
     dg = scoring.intersection_degradation(wn_global, s, way_pred=bik_pred) \
         .select("osm_id", "final_red_ppm")
-    mid = (F.floor(F.size("vertices") / 2) + 1).cast("int")
+    rv = cells.rep_vertex()
     rep = r_bik.select(
-        "osm_id",
-        cells.cell_of_point(F.element_at("vertices", mid)["lon"],
-                            F.element_at("vertices", mid)["lat"])
-        .alias("grid_id"))
+        "osm_id", cells.cell_of_point(rv["lon"], rv["lat"]).alias("grid_id"))
     pressure = zonal.urban_pressure(
         zonal.zonal_cell_sums(raster_tiles(spark))) \
         .select("grid_id", "pressure_micro")
@@ -3110,20 +2916,6 @@ def q46_persona_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     lakes = (spatial_join.point_in_polygon_join(
                 wpts, feats.filter(F.col("layer") == "lakes"))
              .select("osm_id").distinct().withColumn("_lake", F.lit(1)))
-    # narrow (osm_id, cell) presence table consumed by BOTH distance
-    # branches below — localCheckpoint pays one serialize for two saved
-    # explode+exact-test+distinct subtrees (the q44 narrow-table lesson;
-    # A/B at sf0.1: q46 32.6->19.5s, q04 2.40->1.82s best-of-3)
-    rcells = spatial_join.road_cells(s).localCheckpoint(eager=True)
-
-    def dist_flag(layer: str, dist: float, mark: str) -> DataFrame:
-        pts = feats.filter(F.col("layer") == layer) \
-                   .select("feature_id", "cx", "cy")
-        return (spatial_join.roads_within_distance(s, rcells, pts, dist)
-                .withColumn(mark, F.lit(1)))
-
-    hills = dist_flag("hills_nodes", W.DIST_HILL_DEG, "_hill")
-    rivers = dist_flag("rivers", W.DIST_RIVER_DEG, "_river")
     wc = zonal.buffer_class_histogram(s) \
         .select("osm_id", "forest_px", "field_px")
 
@@ -3316,31 +3108,7 @@ _CELL_UM = int(W.CELL_M * 1.0e6)   # exact: CELL_M = 869.6875 is 869 + 11/16
 
 
 def _q48_sql() -> str:
-    ppc = W.PX_PER_CELL
-    fl = oracle.fl
-    pdr = f"LEAST(pop_sum / {fl(W.POP_SAT_CELL)}, {fl(1.0)})"
-    bur = f"LEAST(built_sum / {fl(W.BUILT_SAT_CELL)}, {fl(1.0)})"
-    pressure = f"({fl(1.0)} - ({fl(1.0)} - {pdr}) * ({fl(1.0)} - {bur}))"
-    return f"""WITH RECURSIVE {_pixels_cte()},
-cellsums AS (
-  SELECT (py // {ppc}) * {W.NX} + (px // {ppc}) AS grid_id,
-         CAST(SUM(pop) AS BIGINT) AS pop_sum, CAST(SUM(built) AS BIGINT) AS built_sum
-  FROM pixvals GROUP BY 1
-),
-urban AS (SELECT grid_id FROM cellsums WHERE {pressure} >= {fl(W.PRESSURE_URBAN)}),
-edges AS (
-  SELECT a.grid_id AS a, b.grid_id AS b
-  FROM urban a JOIN urban b ON
-    (b.grid_id = a.grid_id - 1 AND a.grid_id % {W.NX} != 0) OR
-    (b.grid_id = a.grid_id + 1 AND a.grid_id % {W.NX} != {W.NX - 1}) OR
-    b.grid_id = a.grid_id - {W.NX} OR b.grid_id = a.grid_id + {W.NX}
-),
-reach(a, b) AS (
-  SELECT grid_id, grid_id FROM urban
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON e.a = r.b
-),
-comp AS (SELECT a AS grid_id, MIN(b) AS component FROM reach GROUP BY a),
+    return f"""WITH RECURSIVE {_urban_comp_sql_ctes()},
 ec AS (
   SELECT c.component, COUNT(*) AS e_dir
   FROM edges e JOIN comp c ON c.grid_id = e.a GROUP BY 1
@@ -3362,11 +3130,9 @@ def q48_dissolve_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly (4n - shared_edges) cell edges — every cell edge not shared
     inside the component, which counts outer boundary AND holes correctly —
     so the dissolve is measured exactly with no geometry library."""
-    from .operators import clusters, zonal
-    from .sources.raster import raster_tiles
+    from .operators import clusters
 
-    press = zonal.urban_pressure(zonal.zonal_cell_sums(raster_tiles(spark)))
-    urban = press.filter(F.col("pressure_class") == "urban").select("grid_id")
+    urban = _urban_cells(spark)
     comp = clusters.connected_components(urban)
     edges = clusters.cell_neighbors(urban)
     ec = (edges.join(comp, "grid_id")
@@ -3636,16 +3402,12 @@ ORACLES["q52_geodesic_length"] = _q52_sql()
 
 # --------------------------------------------------------------------- q53
 def _q53_sql() -> str:
-    fl = oracle.fl
-    semi = (f"(rep_lon >= {fl(W.SEMI_LO)} AND rep_lon < {fl(W.SEMI_HI)} "
-            f"AND rep_lat >= {fl(W.SEMI_LO)} AND rep_lat < {fl(W.SEMI_HI)})")
+    semi = _semi_sql()
     return f"""{oracle.with_world('verts', 'segs')},
 {_coast_sql_ctes()},
 {og.cand_cells_ctes('segs')},
 {_coast_hits_cte('hits')},
-reps AS (
-  SELECT osm_id, lon AS rep_lon, lat AS rep_lat FROM verts WHERE k = nv // 2
-)
+{_reps_cte()}
 SELECT r.osm_id, r.highway,
        NOT {semi} AS rural,
        h.osm_id IS NOT NULL AS near_coast,
@@ -3664,19 +3426,16 @@ def q53_beach_scenery(spark: SparkSession, sf_dir: str) -> DataFrame:
     line-to-line DWithin semantics, distinct from lake/river polygon/point
     proximity.  The progressive 'exclude already-marked roads' filter of the
     reference is the EXISTS collapse here (distinct osm_id, order-free)."""
-    from .functions import geometry as G  # noqa: F401  (used via operator)
-    from .operators import spatial_join
+    from .functions import cells
 
     r = world.roads_materialized(spark, sf_dir)
     s = world.segments(spark, sf_dir, r)
     coast = world.coastline_segments(spark)
     hits = spatial_join.roads_within_line_distance(
         s, coast, W.BEACH_DIST_DEG).withColumn("hit", F.lit(True))
-    mid = (F.floor(F.size("vertices") / 2) + 1).cast("int")
-    rep = F.element_at("vertices", mid)
-    semi = ((rep["lon"] >= W.SEMI_LO) & (rep["lon"] < W.SEMI_HI)
-            & (rep["lat"] >= W.SEMI_LO) & (rep["lat"] < W.SEMI_HI))
-    base = r.select("osm_id", "highway", (~semi).alias("rural"))
+    rep = cells.rep_vertex()
+    base = r.select("osm_id", "highway",
+                    (~cells.in_semi_window(rep["lon"], rep["lat"])).alias("rural"))
     return (base.join(hits, "osm_id", "left")
             .select("osm_id", "highway", "rural",
                     F.coalesce("hit", F.lit(False)).alias("near_coast"),
@@ -3738,8 +3497,6 @@ def q54_streaming_late_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering uses the PREVIOUS batch's watermark and eviction the current
     one (Spark's two-watermark scheme, verified against query progress at
     sf0.001 and sf0.01)."""
-    import os
-
     from .datagen.world import CACHE_DIR
     from .streaming import jobs as SJ
 
@@ -3911,28 +3668,22 @@ def _q57_sql() -> str:
     fl = oracle.fl
     cd = fl(W.CELL_DEG)
     n_ = W.NX
-    cross_a = og.point_in_poly_crossing("p.lon", "p.lat",
-                                        "e.x1", "e.y1", "e.x2", "e.y2")
-    cross_x = og.point_in_poly_crossing("p.lon", "p.lat",
-                                        "e.x1", "e.y1", "e.x2", "e.y2")
+    cross = og.point_in_poly_crossing("p.rep_lon", "p.rep_lat",
+                                      "e.x1", "e.y1", "e.x2", "e.y2")
     corner = og.point_in_poly_crossing("g.x0", "g.y0",
                                        "e.x1", "e.y1", "e.x2", "e.y2")
     edge_hit = og.seg_rect_hit(ax="e.x1", ay="e.y1", bx="e.x2", by="e.y2",
                                x0="g.x0", y0="g.y0", x1="g.x1", y1="g.y1")
-    repcell = (f"GREATEST(0, LEAST({W.NY - 1}, CAST(floor(lat / {cd}) AS BIGINT))) * {n_} "
-               f"+ GREATEST(0, LEAST({n_ - 1}, CAST(floor(lon / {cd}) AS BIGINT)))")
     return f"""{oracle.with_world('verts', 'admin_edges', 'extra_edges', 'grid')},
-reps AS (
-  SELECT osm_id, lon, lat, {repcell} AS rep_cell FROM verts WHERE k = nv // 2
-),
+{_reps_cte()},
 admin_hits AS (
   SELECT p.osm_id, a.admin_id, a.level
   FROM reps p
-  JOIN admin a ON p.lon >= a.cx - a.r AND p.lon <= a.cx + a.r
-              AND p.lat >= a.cy - a.r AND p.lat <= a.cy + a.r
+  JOIN admin a ON p.rep_lon >= a.cx - a.r AND p.rep_lon <= a.cx + a.r
+              AND p.rep_lat >= a.cy - a.r AND p.rep_lat <= a.cy + a.r
   JOIN admin_edges e USING (admin_id)
-  GROUP BY p.osm_id, p.lon, p.lat, a.admin_id, a.level
-  HAVING SUM({cross_a}) % 2 = 1
+  GROUP BY p.osm_id, p.rep_lon, p.rep_lat, a.admin_id, a.level
+  HAVING SUM({cross}) % 2 = 1
 ),
 road_admin AS (
   SELECT osm_id,
@@ -3944,11 +3695,11 @@ road_admin AS (
 extra_hits AS (
   SELECT p.osm_id, f.feature_id, f.layer
   FROM reps p
-  JOIN extra_feats f ON p.lon >= f.cx - f.r AND p.lon <= f.cx + f.r
-                    AND p.lat >= f.cy - f.r AND p.lat <= f.cy + f.r
+  JOIN extra_feats f ON p.rep_lon >= f.cx - f.r AND p.rep_lon <= f.cx + f.r
+                    AND p.rep_lat >= f.cy - f.r AND p.rep_lat <= f.cy + f.r
   JOIN extra_edges e USING (feature_id)
-  GROUP BY p.osm_id, p.lon, p.lat, f.feature_id, f.layer
-  HAVING SUM({cross_x}) % 2 = 1
+  GROUP BY p.osm_id, p.rep_lon, p.rep_lat, f.feature_id, f.layer
+  HAVING SUM({cross}) % 2 = 1
 ),
 road_extra AS (
   SELECT osm_id,
@@ -4018,8 +3769,7 @@ def q57_admin_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import cells, geometry as G
 
     r = world.roads_materialized(spark, sf_dir)
-    mid = (F.floor(F.size("vertices") / 2) + 1).cast("int")
-    rep = F.element_at("vertices", mid)
+    rep = cells.rep_vertex()
     reps = r.select("osm_id", rep["lon"].alias("lon"), rep["lat"].alias("lat"))
     admin = world.admin_areas(spark, sf_dir)
 
@@ -4076,8 +3826,6 @@ def _q58_sql() -> str:
     fl = oracle.fl
     x0, y0, x1, y1 = W.V1_BBOX
     bik = ", ".join(f"'{h}'" for h in W.BIKABLE)
-    semi = (f"(rep_lon >= {fl(W.SEMI_LO)} AND rep_lon < {fl(W.SEMI_HI)} "
-            f"AND rep_lat >= {fl(W.SEMI_LO)} AND rep_lat < {fl(W.SEMI_HI)})")
     facs = ",\n         ".join(f"{e} AS {c}"
                                for c, e in P.v1_factor_exprs(fl).items())
     raws = ",\n         ".join(f"{e} AS {c}"
@@ -4104,9 +3852,7 @@ gl AS (
   SELECT osm_id, SUM({og.quantize_um(og.seg_len_geo_m())}) AS geo_len_um
   FROM segs GROUP BY osm_id
 ),
-reps AS (
-  SELECT osm_id, lon AS rep_lon, lat AS rep_lat FROM verts WHERE k = nv // 2
-),
+{_reps_cte()},
 bb AS (
   SELECT osm_id FROM verts GROUP BY osm_id
   HAVING MAX(lon) >= {fl(x0)} AND MIN(lon) <= {fl(x1)}
@@ -4123,14 +3869,14 @@ inraw AS (
           + CASE WHEN lk.osm_id IS NOT NULL THEN 1 ELSE 0 END
           + CASE WHEN rv.osm_id IS NOT NULL THEN 1 ELSE 0 END
           + CASE WHEN fd.osm_id IS NOT NULL THEN 1 ELSE 0 END
-          + CASE WHEN NOT {semi} AND bc.osm_id IS NOT NULL THEN 1 ELSE 0 END)
+          + CASE WHEN NOT {_semi_sql()} AND bc.osm_id IS NOT NULL THEN 1 ELSE 0 END)
            AS n_scenery
   FROM (SELECT * FROM roads_base WHERE highway IN ({bik})) b
   JOIN bb USING (osm_id)
   JOIN reps p USING (osm_id)
   LEFT JOIN h_per h USING (osm_id)
   LEFT JOIN cl_per c USING (osm_id)
-  LEFT JOIN {_tw_permille_join()} tw_p USING (osm_id)
+  LEFT JOIN tw_p USING (osm_id)
   LEFT JOIN gl USING (osm_id)
   LEFT JOIN fo ON fo.osm_id = b.osm_id
   LEFT JOIN lk ON lk.osm_id = b.osm_id
@@ -4181,17 +3927,16 @@ def q58_persona_v1_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization pass, unlike v2.  Restricted to the test bbox the script
     itself runs on (:31, ST_MakeEnvelope analog W.V1_BBOX).
 
-    Scale shape: same proven subtrees as q46 (each one graded on its own);
-    the only new work is the formula ladder, pure Catalyst CASE
-    expressions.  The narrow (osm_id, cell) presence table is
-    localCheckpointed once for the two distance branches (the q44/q46
-    lesson); scenery flags are existence semi-joins, no pair distinct."""
-    from .functions import geometry as G
+    Scale shape: same proven subtrees as q46 (each one graded on its own;
+    hadj/setting/twist and the hill/river flags come from the one
+    ``_persona_road_branches`` builder both composites call); the only new
+    work is the formula ladder, pure Catalyst CASE expressions.  Scenery
+    flags are existence semi-joins, no pair distinct."""
+    from .functions import cells, geometry as G
     from .operators import persona as P
 
     sfl = P.spark_fl
     r = world.roads_materialized(spark, sf_dir)
-    g = world.grids(spark)
     feats = world.features(spark, sf_dir)
 
     lons = F.transform("vertices", lambda v: v["lon"])
@@ -4212,12 +3957,10 @@ def q58_persona_v1_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     r_bbox = r.filter(F.col("highway").isin(W.BIKABLE) & bbox_ok)
     s = world.segments(spark, sf_dir, r_bbox)
     wn = world.way_nodes(spark, sf_dir, r_bbox)
-    mid = (F.floor(F.size("vertices") / 2) + 1).cast("int")
-    rep = F.element_at("vertices", mid)
-    semi = ((rep["lon"] >= W.SEMI_LO) & (rep["lon"] < W.SEMI_HI)
-            & (rep["lat"] >= W.SEMI_LO) & (rep["lat"] < W.SEMI_HI))
+    rep = cells.rep_vertex()
     bik = r_bbox.select("osm_id", "highway", "ref", "lanes", "surface",
-                        (~semi).alias("rural"))
+                        (~cells.in_semi_window(rep["lon"], rep["lat"]))
+                        .alias("rural"))
 
     # The highway side is semantically global (an out-of-bbox NH/SH can
     # upgrade an in-bbox road), but a SOUND window still bounds it: every
@@ -4226,12 +3969,9 @@ def q58_persona_v1_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to OVERLAP the bbox), and a matching highway vertex within d of
     # that.  Beyond bbox + extent + d, no highway vertex can match.
     ext = ((W.NV_MAX - 1) * W.STEP_HALF) / W.STEP_DEN + W.ENDPOINT_DIST_DEG
-    hadj = _endpoint_proximity_upgrade(
-        r, r_bbox, hw_window=(x0 - ext, y0 - ext, x1 + ext, y1 + ext)) \
-        .select("osm_id", "hadj_upgrade")
-    setting = classify.classify_roads(r_bbox, s, g) \
-        .select("osm_id", "road_setting")
-    tw = _curvature_rollup(r_bbox).select("osm_id", "twist_permille")
+    hadj, setting, tw, hills, rivers = _persona_road_branches(
+        r, r_bbox, s, feats,
+        hw_window=(x0 - ext, y0 - ext, x1 + ext, y1 + ext))
     geo = s.groupBy("osm_id").agg(
         F.sum(G.quantize_len_um(G.seg_len_geo_m(
             F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))))
@@ -4247,16 +3987,6 @@ def q58_persona_v1_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("layer") == "forest", 1).otherwise(0)).alias("_forest"),
         F.max(F.when(F.col("layer") == "lakes", 1).otherwise(0)).alias("_lake"),
         F.max(F.when(F.col("layer") == "fields", 1).otherwise(0)).alias("_field"))
-    rcells = spatial_join.road_cells(s).localCheckpoint(eager=True)
-
-    def dist_flag(layer: str, dist: float, mark: str) -> DataFrame:
-        pts = feats.filter(F.col("layer") == layer) \
-                   .select("feature_id", "cx", "cy")
-        return (spatial_join.roads_within_distance(s, rcells, pts, dist)
-                .withColumn(mark, F.lit(1)))
-
-    hills = dist_flag("hills_nodes", W.DIST_HILL_DEG, "_hill")
-    rivers = dist_flag("rivers", W.DIST_RIVER_DEG, "_river")
     coast = world.coastline_segments(spark)
     beach = spatial_join.roads_within_line_distance(
         s, coast, W.BEACH_DIST_DEG).withColumn("_coast", F.lit(1))

@@ -49,9 +49,6 @@ def _opt_tag(key: str, val: Column) -> Column:
 
 def encode_road_documents(roads: DataFrame) -> DataFrame:
     """roads (datagen/world.roads) -> documents(doc_id, spans)."""
-    qlon = F.round(F.col("v.lon") * L(float(W.COORD_Q))).cast("long")
-    qlat = F.round(F.col("v.lat") * L(float(W.COORD_Q))).cast("long")
-
     head = F.array(
         _opt_tag("highway", F.col("highway")),
         _opt_tag("ref", F.col("ref")),

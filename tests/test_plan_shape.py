@@ -1,0 +1,65 @@
+"""Plan-shape guards for the queries built on the shared rep-vertex helper,
+the shared persona branches and the shared oracle chains.
+
+Every SQL execution a query runs — its eager ``localCheckpoint``s while it is
+built, then the final plan — is read back from the driver's SQL status
+store, so operators hidden behind a checkpoint are linted too.  The driver
+job count of building q46/q58 is pinned: the shared branch builder must
+checkpoint ``road_cells`` once per composite and add no eager pass."""
+
+import pytest
+
+from osm_processing_pipeline_spark import registry
+from osm_processing_pipeline_spark.datagen import world
+from osm_processing_pipeline_spark.sources.raster import raster_tiles
+from tests.conftest import SF_SMOKE
+
+SHAPED = ["q01_road_grid_classification", "q02_tile_assignment",
+          "q11_raster_point_sample", "q13_interleaved_roundtrip",
+          "q18_text_quality", "q28_intersection_degradation",
+          "q32_vector_tiles", "q44_hill_composite", "q45_buffer_histogram",
+          "q46_persona_v2", "q53_beach_scenery", "q57_admin_bounds",
+          "q58_persona_v1_simplified"]
+FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
+# Spark jobs run while BUILDING each composite (parquet schema reads, eager
+# checkpoints and q46's bounds aggregate), with the world cache warm.
+BUILD_JOBS = {"q46_persona_v2": 46, "q58_persona_v1_simplified": 4}
+
+
+def _executions(spark) -> dict[int, str]:
+    """SQL execution id -> latest physical plan text (AQE final plans are
+    posted back to the status store as they are re-planned)."""
+    it = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[e.executionId()] = e.physicalPlanDescription()
+    return out
+
+
+@pytest.mark.parametrize("name", SHAPED)
+def test_executed_plans_have_no_cross_or_row_udf(name, spark):
+    before = set(_executions(spark))
+    df = registry.QUERIES[name](spark, SF_SMOKE)
+    df.write.format("noop").mode("overwrite").save()
+    plans = {k: v for k, v in _executions(spark).items() if k not in before}
+    assert plans, f"{name}: no SQL execution recorded"
+    for op in FORBIDDEN:
+        hits = [k for k, v in plans.items() if op in v]
+        assert not hits, f"{name}: {op} in executions {hits}"
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_JOBS))
+def test_persona_build_job_count(name, spark):
+    sc = spark.sparkContext
+    world.roads_materialized(spark, SF_SMOKE)      # warm the world caches
+    raster_tiles(spark)
+    group = f"build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        registry.QUERIES[name](spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == BUILD_JOBS[name], (name, len(jobs))
