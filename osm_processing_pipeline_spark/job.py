@@ -41,7 +41,7 @@ def main(argv: list[str] | None = None) -> int:
         from osm_processing_pipeline_spark.datagen import world
         from osm_processing_pipeline_spark.operators import spatial_join
         from osm_processing_pipeline_spark.plans import checkpoint as CP
-        from osm_processing_pipeline_spark.worldspec import NX, NY
+        from osm_processing_pipeline_spark import worldspec as W
 
         def df_fn():
             r = world.roads_materialized(spark, args.sf_dir)
@@ -50,9 +50,9 @@ def main(argv: list[str] | None = None) -> int:
             return spatial_join.segment_cell_pieces(s, g) \
                 .select("osm_id", "grid_id", "piece_um")
 
-        lin = CP.lineage_hash("pieces", [args.sf_dir])
+        lin = CP.lineage_hash("pieces", [args.sf_dir], version=W.DATA_VERSION)
         res = CP.run_stage(spark, "pieces", df_fn, "grid_id",
-                           CP.make_ranges(0, NX * NY, args.ranges),
+                           CP.make_ranges(0, W.NX * W.NY, args.ranges),
                            args.out_dir, lin)
         print(f"checkpointed stage: computed={len(res['computed'])} "
               f"skipped={len(res['skipped'])} rows={res['rows']}", file=sys.stderr)

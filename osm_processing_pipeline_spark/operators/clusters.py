@@ -6,12 +6,12 @@ tiling index: cluster membership is 4-connectivity between qualifying cells,
 and the cluster id is the component's minimum cell id (deterministic, no
 window-over-everything).
 
-Implementation: iterative min-label propagation (label <- min(label,
-neighbors' labels)) plus POINTER JUMPING (label <- label's label) to
-fixpoint — O(log diameter) iterations, each two hash joins + an aggregation
-on (cell, label) pairs.  At planetary scale the same loop runs on the cell
-table partitioned by cell id; the driver sees only the per-iteration
-convergence count, a logarithmic number of times.
+Implementation: union-find on the driver over the collected cell ids and
+edges (SURVEY.md W6: "small data: collect cell ids to driver, union-find"),
+mirroring the reference's driver-side global reductions
+(persona_v2_run.py:264-339).  The inputs are bounded by the fixed tiling
+grid: at most NX * NY = 16,384 cells, and at eps = 1500 m a DBSCAN core
+graph has at most 8 eps-neighbors per cell.
 
 ``dbscan`` adds the ST_ClusterDBSCAN option
 (sql/urban_clusters/02_clusters_opt3_test.sql:52-60, eps=1500 m,
@@ -49,60 +49,34 @@ def cell_neighbors(cells: DataFrame) -> DataFrame:
     return edges.join(cells.select(F.col("grid_id").alias("nbr")), "nbr", "left_semi")
 
 
-def connected_components(cells: DataFrame, max_iters: int = 64,
-                         driver_threshold: int = 200_000) -> DataFrame:
+def connected_components(cells: DataFrame) -> DataFrame:
     """cells(grid_id) -> (grid_id, component) over 4-adjacency; component =
-    min reachable cell id (exact fixpoint).
+    min reachable cell id (exact).
 
-    The driver path derives 4-neighbors in pure Python from the collected
-    ids (no Spark job for the edge list); the distributed path uses the
-    computed ``cell_neighbors`` join.  Here the cell gate alone is sound:
-    4-adjacency bounds the edge list at 4n (~800k pairs at the 200k cap),
-    unlike the arbitrary graphs of ``connected_components_edges``."""
+    The 4-neighbors are derived in pure Python from the collected ids, so
+    the edge list costs no Spark job.  ``cells`` is persisted; the collect
+    fills the cache, so a caller that reuses the same cell set (q48's
+    ``cell_neighbors``) reads it back instead of recomputing it."""
     cells = cells.persist()
-    n = cells.count()
-    if n <= driver_threshold:
-        ids = sorted(r[0] for r in cells.select("grid_id").collect())
-        idset = set(ids)
-        edges = [(g, nb) for g in ids
-                 for nb in (g - 1 if g % W.NX > 0 else None,
-                            g + 1 if g % W.NX < W.NX - 1 else None,
-                            g - W.NX if g // W.NX > 0 else None,
-                            g + W.NX if g // W.NX < W.NY - 1 else None)
-                 if nb is not None and nb in idset]
-        return _union_find(cells, ids, edges)
-    return _iterative_components(cells, cell_neighbors(cells), max_iters)
+    ids = sorted(r[0] for r in cells.select("grid_id").collect())
+    idset = set(ids)
+    edges = [(g, nb) for g in ids
+             for nb in (g - 1 if g % W.NX > 0 else None,
+                        g + 1 if g % W.NX < W.NX - 1 else None,
+                        g - W.NX if g // W.NX > 0 else None,
+                        g + W.NX if g // W.NX < W.NY - 1 else None)
+             if nb is not None and nb in idset]
+    return _union_find(cells, ids, edges)
 
 
-def connected_components_edges(cells: DataFrame, edges: DataFrame,
-                               max_iters: int = 64,
-                               driver_threshold: int = 200_000,
-                               driver_edge_threshold: int = 1_000_000) -> DataFrame:
+def connected_components_edges(cells: DataFrame, edges: DataFrame) -> DataFrame:
     """Generic CC: cells(grid_id) + symmetric edges(grid_id, nbr) ->
-    (grid_id, component = min reachable id); exact fixpoint.
+    (grid_id, component = min reachable id); exact.
 
-    Small inputs (the common case after the urban filter — SURVEY.md W6:
-    "small data: collect cell ids to driver, union-find") take the exact
-    driver union-find path, mirroring the reference's driver-side global
-    reductions (persona_v2_run.py:264-339); large inputs iterate
-    distributed min-label propagation over the given edge set.
-
-    The gate is on BOTH collected lists: 200k cell ids are ~3 MB of Python
-    longs, but an arbitrary edge set over 200k vertices can be dense — a
-    DBSCAN eps-graph over a tight blob approaches n*k edges — so the edge
-    list is counted (it is persisted first; the distributed path reuses the
-    materialization) and anything past 1M pairs (~100 MB as Python tuples,
-    the real driver cost) takes the distributed path."""
+    ``cells`` is persisted and filled by the id collect, so the edge
+    collect and any caller join over the same cells (``dbscan``'s core
+    set) read the cached rows instead of recomputing them."""
     cells = cells.persist()
-    n = cells.count()
-    if n <= driver_threshold:
-        edges = edges.persist()
-        if edges.count() <= driver_edge_threshold:
-            return _driver_union_find(cells, edges)
-    return _iterative_components(cells, edges, max_iters)
-
-
-def _driver_union_find(cells: DataFrame, edges: DataFrame) -> DataFrame:
     ids = sorted(r[0] for r in cells.select("grid_id").collect())
     pairs = [(r[0], r[1]) for r in edges.select("grid_id", "nbr").collect()]
     return _union_find(cells, ids, pairs)
@@ -180,52 +154,3 @@ def dbscan(cells: DataFrame, eps_deg_num: float, eps_deg_den: float,
               .agg(F.min("component").alias("cluster"))
               .select("grid_id", F.lit(False).alias("is_core"), "cluster"))
     return core_out.unionByName(border)
-
-
-def _iterative_components(cells: DataFrame, edges: DataFrame,
-                          max_iters: int) -> DataFrame:
-    """Min-label propagation WITH pointer jumping: each iteration first
-    lowers every label to the min over its neighbors' labels, then replaces
-    each label by its label's label (labels are always qualifying cell ids,
-    so the jump is a self-join on the label table).  Jumping collapses label
-    chains exponentially, so the fixpoint arrives in O(log diameter)
-    iterations instead of O(diameter) — the per-iteration driver round-trip
-    (one convergence count) happens only a logarithmic number of times, and
-    each iteration is two hash joins on (cell, label)."""
-    edges = edges.localCheckpoint(eager=True)
-    labels = cells.select("grid_id", F.col("grid_id").alias("component")) \
-                  .localCheckpoint(eager=True)
-    for _ in range(max_iters):
-        lbl_n = labels.select(F.col("grid_id").alias("nbr"),
-                              F.col("component").alias("nbr_component"))
-        nbr_min = (
-            edges.join(lbl_n, "nbr")
-            .groupBy("grid_id").agg(F.min("nbr_component").alias("nbr_component"))
-        )
-        lowered = (
-            labels.join(nbr_min, "grid_id", "left")
-            .select(
-                "grid_id",
-                F.least(F.col("component"),
-                        F.coalesce(F.col("nbr_component"), F.col("component")))
-                .alias("component"))
-        )
-        # pointer jump: component <- component's component (labels only ever
-        # decrease, so this preserves the exact min-reachable fixpoint)
-        jump = lowered.select(F.col("grid_id").alias("component"),
-                              F.col("component").alias("jumped"))
-        updated = (
-            lowered.join(jump, "component", "left")
-            .select("grid_id",
-                    F.coalesce("jumped", "component").alias("component"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            updated.withColumnRenamed("component", "c2")
-            .join(labels, "grid_id")
-            .filter(F.col("c2") != F.col("component")).count()
-        )
-        labels = updated
-        if changed == 0:
-            break
-    return labels

@@ -55,17 +55,16 @@ def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return sh.distinct()
 
 
-def df_filter(sets: DataFrame, key: str = "shingle",
-              max_df: int | None = None) -> DataFrame:
-    """Drop keys with document frequency > max_df before a set self-join.
+def df_filter(sets: DataFrame, max_df: int | None = None) -> DataFrame:
+    """Drop shingles with document frequency > max_df before a set self-join.
 
     The hot-key list is tiny by construction (keys above the threshold), so
     it broadcasts; the anti-join removes the quadratic fan-out a hot shingle
     would cause in ``jaccard_pairs`` (the 100 TB scale guard)."""
     max_df = W.SHINGLE_DF_MAX if max_df is None else max_df
-    hot = (sets.groupBy(key).agg(F.count("*").alias("df"))
-           .filter(F.col("df") > max_df).select(key))
-    return sets.join(F.broadcast(hot), key, "left_anti")
+    hot = (sets.groupBy("shingle").agg(F.count("*").alias("df"))
+           .filter(F.col("df") > max_df).select("shingle"))
+    return sets.join(F.broadcast(hot), "shingle", "left_anti")
 
 
 def jaccard_pairs(sets: DataFrame, key: str = "shingle",
@@ -222,9 +221,9 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return sums.select("doc_id", T.simhash_from_sums().alias("simhash"))
 
 
-def simhash_pairs(docs: DataFrame, max_hamming: int | None = None) -> DataFrame:
-    """Near-dup pairs: share >= 1 of 4 8-bit blocks, Hamming(xor) <= max."""
-    max_hamming = W.SIMHASH_MAX_HAMMING if max_hamming is None else max_hamming
+def simhash_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs: share >= 1 of 4 8-bit blocks, Hamming(xor) <=
+    SIMHASH_MAX_HAMMING."""
     sigs = simhash_signatures(docs)
     blocks = sigs.select(
         "doc_id", "simhash",
@@ -263,6 +262,6 @@ def simhash_pairs(docs: DataFrame, max_hamming: int | None = None) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .filter(first_block)
         .withColumn("hamming", F.expr("bit_count(sa ^ sb)").cast("long"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= W.SIMHASH_MAX_HAMMING)
     )
     return pairs.select("doc_a", "doc_b", "hamming")

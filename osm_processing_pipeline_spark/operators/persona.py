@@ -42,14 +42,14 @@ CALM_ELSE = 0.5
 TWIST_SAT = 0.54
 
 
-def road_type_v2_expr(hadj: str = "hadj_upgrade") -> str:
+def road_type_v2_expr() -> str:
     """Finalized road type incl. the HAdj endpoint upgrade
     (07_assign_final_road_classification.sql:13-97; engine-neutral SQL)."""
     return ("CASE WHEN ref IS NOT NULL AND upper(ref) LIKE '%NH%' THEN 'NH' "
             "WHEN ref IS NOT NULL AND upper(ref) LIKE '%SH%' THEN 'SH' "
             "WHEN ref IS NOT NULL AND upper(ref) LIKE '%MDR%' THEN 'MDR' "
             "WHEN highway IN ('motorway', 'trunk') THEN 'HW' "
-            f"WHEN {hadj} THEN 'HAdj' "
+            "WHEN hadj_upgrade THEN 'HAdj' "
             "WHEN highway = 'residential' THEN 'Res' "
             "WHEN highway = 'track' THEN 'Track' "
             "WHEN highway IN ('path', 'footway') THEN 'Path' "

@@ -51,11 +51,10 @@ def segment_cell_pieces(segs: DataFrame, grid: DataFrame) -> DataFrame:
     )
 
 
-def polygon_candidates(pts: DataFrame, polys: DataFrame,
-                       px: str = "lon", py: str = "lat") -> DataFrame:
-    """Coarse phase of point x polygon joins: points keyed by their cell,
-    polygons exploded over their bbox cover, equi-join on cell."""
-    p = pts.withColumn("_cell", cells.cell_of_point(F.col(px), F.col(py)))
+def polygon_candidates(pts: DataFrame, polys: DataFrame) -> DataFrame:
+    """Coarse phase of point x polygon joins: points(lon, lat) keyed by their
+    cell, polygons exploded over their bbox cover, equi-join on cell."""
+    p = pts.withColumn("_cell", cells.cell_of_point(F.col("lon"), F.col("lat")))
     q = polys.withColumn(
         "_cell",
         F.explode(cells.bbox_cover(F.col("xmin"), F.col("ymin"),
@@ -64,14 +63,12 @@ def polygon_candidates(pts: DataFrame, polys: DataFrame,
     return p.join(q, "_cell")
 
 
-def point_in_polygon_join(pts: DataFrame, polys: DataFrame,
-                          px: str = "lon", py: str = "lat") -> DataFrame:
+def point_in_polygon_join(pts: DataFrame, polys: DataFrame) -> DataFrame:
     """Exact point-in-polygon join (crossing number refine) — the north-rule
     PIP operator (ST_Intersects point/polygon path,
     sql/road_scenery/03_scenery_forest.sql:8-13)."""
-    cand = polygon_candidates(pts, polys, px, py)
-    return cand.filter(G.point_in_poly(F.col(px), F.col(py), F.col("edges"))) \
-               .drop("_cell")
+    hit = G.point_in_poly(F.col("lon"), F.col("lat"), F.col("edges"))
+    return polygon_candidates(pts, polys).filter(hit).drop("_cell")
 
 
 def road_cells(segs: DataFrame) -> DataFrame:
@@ -86,11 +83,47 @@ def road_cells(segs: DataFrame) -> DataFrame:
     return cand.filter(hit).select("osm_id", "_cell").distinct()
 
 
+def _disk_cover(feature_pts: DataFrame, radius_deg: float) -> DataFrame:
+    """feature_pts(feature_id, cx, cy) exploded over each feature's disk
+    cover: one row per cell the disk reaches, with ``_full`` true when the
+    cell's FARTHEST corner is within the radius (the whole cell is covered)
+    and false when the disk edge crosses it.  Cells whose NEAREST point is
+    beyond the radius are dropped.  Both tests are exact IEEE arithmetic
+    with <= bounds."""
+    fx, fy = F.col("cx"), F.col("cy")
+    cov = feature_pts.withColumn(
+        "_cell", F.explode(cells.disk_cover_of_point(fx, fy, radius_deg)))
+    x0, y0, x1, y1 = cells.cell_bounds(F.col("_cell"))
+    far_x = F.greatest(F.abs(fx - x0), F.abs(fx - x1))
+    far_y = F.greatest(F.abs(fy - y0), F.abs(fy - y1))
+    far2 = far_x * far_x + far_y * far_y
+    nx = F.greatest(x0, F.least(x1, fx))
+    ny = F.greatest(y0, F.least(y1, fy))
+    near2 = (fx - nx) * (fx - nx) + (fy - ny) * (fy - ny)
+    r2 = F.lit(radius_deg) * F.lit(radius_deg)
+    return cov.filter(near2 <= r2).withColumn("_full", far2 <= r2)
+
+
+def _refine_partial(segs: DataFrame, cov: DataFrame, radius_deg: float,
+                    cols: tuple[str, ...]) -> DataFrame:
+    """Exact per-segment distance refine of the boundary cells of a
+    ``_disk_cover`` against the road segments sharing each cell; returns
+    ``cols`` of the (segment, feature) rows within the radius."""
+    part = cov.filter(~F.col("_full")).select("_cell", "feature_id", "cx", "cy")
+    scov = segs.withColumn(
+        "_cell", F.explode(cells.segment_cover(F.col("ax"), F.col("ay"),
+                                               F.col("bx"), F.col("by"))))
+    d2 = G.seg_point_dist2_deg(F.col("ax"), F.col("ay"), F.col("bx"),
+                               F.col("by"), F.col("cx"), F.col("cy"))
+    r2 = F.lit(radius_deg) * F.lit(radius_deg)
+    return scov.join(part, "_cell").filter(d2 <= r2).select(*cols)
+
+
 def roads_within_distance(segs: DataFrame, rcells: DataFrame,
-                          feature_pts: DataFrame, radius_deg: float,
-                          fx: str = "cx", fy: str = "cy") -> DataFrame:
-    """Distinct osm_ids with ANY feature within ``radius_deg`` — the
-    existence-only variant of ``distance_pairs_full_partial``.
+                          feature_pts: DataFrame, radius_deg: float) -> DataFrame:
+    """Distinct osm_ids with ANY feature(feature_id, cx, cy) within
+    ``radius_deg`` — the existence-only variant of
+    ``distance_pairs_full_partial``.
 
     When only the flag is needed, materializing (road, feature) pairs is a
     skew bomb: one feature whose disk covers the dense urban core pairs with
@@ -98,32 +131,11 @@ def roads_within_distance(segs: DataFrame, rcells: DataFrame,
     collapses to the distinct CELL set (bounded by the grid size), which
     semi-joins road-cell presence — no pair row ever exists; only boundary
     cells run the exact per-segment refine."""
-    cov = feature_pts.withColumn(
-        "_cell", F.explode(cells.disk_cover_of_point(F.col(fx), F.col(fy),
-                                                     radius_deg)))
-    x0, y0, x1, y1 = cells.cell_bounds(F.col("_cell"))
-    far_x = F.greatest(F.abs(F.col(fx) - x0), F.abs(F.col(fx) - x1))
-    far_y = F.greatest(F.abs(F.col(fy) - y0), F.abs(F.col(fy) - y1))
-    far2 = far_x * far_x + far_y * far_y
-    nx = F.greatest(x0, F.least(x1, F.col(fx)))
-    ny = F.greatest(y0, F.least(y1, F.col(fy)))
-    near2 = (F.col(fx) - nx) * (F.col(fx) - nx) \
-        + (F.col(fy) - ny) * (F.col(fy) - ny)
-    r2 = F.lit(radius_deg) * F.lit(radius_deg)
-    cov = cov.filter(near2 <= r2).withColumn("_full", far2 <= r2)
-
+    cov = _disk_cover(feature_pts, radius_deg)
     full_cells = cov.filter(F.col("_full")).select("_cell").distinct()
     full_roads = rcells.join(full_cells, "_cell", "left_semi") \
                        .select("osm_id")
-    part = cov.filter(~F.col("_full")).select("_cell", "feature_id", fx, fy)
-    scov = segs.withColumn(
-        "_cell", F.explode(cells.segment_cover(F.col("ax"), F.col("ay"),
-                                               F.col("bx"), F.col("by"))))
-    d2 = G.seg_point_dist2_deg(F.col("ax"), F.col("ay"), F.col("bx"),
-                               F.col("by"), F.col(fx), F.col(fy))
-    refined = (scov.join(part, "_cell")
-               .filter(d2 <= r2)
-               .select("osm_id"))
+    refined = _refine_partial(segs, cov, radius_deg, ("osm_id",))
     return full_roads.unionByName(refined).distinct()
 
 
@@ -167,44 +179,23 @@ def roads_within_line_distance(segs: DataFrame, lines: DataFrame,
 
 
 def distance_pairs_full_partial(segs: DataFrame, rcells: DataFrame,
-                                feature_pts: DataFrame, radius_deg: float,
-                                fx: str = "cx", fy: str = "cy") -> DataFrame:
-    """Distinct (osm_id, feature_id) pairs within ``radius_deg`` — the
-    full/partial cover split that makes large radii tractable.
+                                feature_pts: DataFrame, radius_deg: float) -> DataFrame:
+    """Distinct (osm_id, feature_id) pairs within ``radius_deg`` of the
+    features(feature_id, cx, cy) — the full/partial cover split that makes
+    large radii tractable.
 
-    A feature's disk cover is classified per cell: if the cell's FARTHEST
-    corner is within the radius (full cover), every road present in the cell
-    matches with no geometry test — one (road-cell x feature) row instead of
-    per-segment candidates.  Only boundary cells (disk edge crosses the
-    cell) go through the exact per-segment distance refine.  For the 0.09-deg
-    mountain-pass radius this removes ~95% of the candidate volume (the
-    interior of the disk) from the refine path — the same interior/exterior
-    split S2 region covers use.  Results are identical to the naive join:
-    both tests are exact IEEE arithmetic with <= bounds.
+    A feature's disk cover is classified per cell (``_disk_cover``): in a
+    fully covered cell every road present matches with no geometry test —
+    one (road-cell x feature) row instead of per-segment candidates.  Only
+    boundary cells (disk edge crosses the cell) go through the exact
+    per-segment distance refine.  For the 0.09-deg mountain-pass radius this
+    removes ~95% of the candidate volume (the interior of the disk) from the
+    refine path — the same interior/exterior split S2 region covers use.
+    Results are identical to the naive join.
     """
-    cov = feature_pts.withColumn(
-        "_cell", F.explode(cells.disk_cover_of_point(F.col(fx), F.col(fy), radius_deg)))
-    x0, y0, x1, y1 = cells.cell_bounds(F.col("_cell"))
-    far_x = F.greatest(F.abs(F.col(fx) - x0), F.abs(F.col(fx) - x1))
-    far_y = F.greatest(F.abs(F.col(fy) - y0), F.abs(F.col(fy) - y1))
-    far2 = far_x * far_x + far_y * far_y
-    nx = F.greatest(x0, F.least(x1, F.col(fx)))
-    ny = F.greatest(y0, F.least(y1, F.col(fy)))
-    near2 = (F.col(fx) - nx) * (F.col(fx) - nx) + (F.col(fy) - ny) * (F.col(fy) - ny)
-    r2 = F.lit(radius_deg) * F.lit(radius_deg)
-    cov = cov.filter(near2 <= r2).withColumn("_full", far2 <= r2)
-
+    cov = _disk_cover(feature_pts, radius_deg)
     full = (rcells.join(cov.filter(F.col("_full")).select("_cell", "feature_id"),
                         "_cell")
             .select("osm_id", "feature_id"))
-
-    part = cov.filter(~F.col("_full")).select("_cell", "feature_id", fx, fy)
-    scov = segs.withColumn(
-        "_cell", F.explode(cells.segment_cover(F.col("ax"), F.col("ay"),
-                                               F.col("bx"), F.col("by"))))
-    d2 = G.seg_point_dist2_deg(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"),
-                               F.col(fx), F.col(fy))
-    refined = (scov.join(part, "_cell")
-               .filter(d2 <= r2)
-               .select("osm_id", "feature_id"))
+    refined = _refine_partial(segs, cov, radius_deg, ("osm_id", "feature_id"))
     return full.unionByName(refined).distinct()

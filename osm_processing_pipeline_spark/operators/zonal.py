@@ -9,7 +9,7 @@ sql/road_scenery/hill_v2/03_compute_relief_from_raster.sql:17-56).
 The tile grid is cell-aligned (one tile = 2x2 grid cells), so zonal sums need
 no geometric join at all: tiles are decoded (Arrow batch -> numpy) and block-
 summed straight into per-cell rows — the raster->vector tiling path.  Point
-sampling equi-joins points to their tile id, then gathers pixels vectorized.
+sampling equi-joins points to the broadcast decoded pixel table on pixel id.
 """
 
 from __future__ import annotations
@@ -24,28 +24,13 @@ from ..functions import geometry as G
 from ..sources.raster import decode_band
 
 
-def _tile_count(tiles: DataFrame, n_tiles: int | None) -> int:
-    """Actual tile count of the raster input.  Callers may pass it when they
-    already know it; otherwise it is derived from the DataFrame itself — a
-    metadata-only count on the parquet tile table — so the broadcast/shuffle
-    and partition-count gates below reflect the real input, not the fixed
-    world raster (ADVICE r4: both registry call sites omitted the parameter,
-    so a genuinely larger raster would still have broadcast)."""
-    return n_tiles if n_tiles is not None else tiles.count()
-
-
-def zonal_cell_sums(tiles: DataFrame, partitions: int | None = None,
-                    n_tiles: int | None = None) -> DataFrame:
+def zonal_cell_sums(tiles: DataFrame) -> DataFrame:
     """(grid_id, pop_sum, built_sum) — per-grid-cell band sums from binary
-    tiles.  No shuffle: each tile maps to exactly its 4 cells."""
+    tiles.  No shuffle: each tile maps to exactly its 4 cells.  The raster
+    is the fixed 4096-tile world image, so the 8 partitions are a constant:
+    a few fat Arrow batches beat many worker spin-ups."""
     cpt = W.TILE_PX // W.PX_PER_CELL       # cells per tile edge (2)
     ppc = W.PX_PER_CELL
-    if partitions is None:
-        # few fat Arrow batches beat many worker spin-ups, but the task count
-        # must grow with the raster: one task per ~512 tiles, floored at 8,
-        # capped at the cluster's parallelism
-        dp = tiles.sparkSession.sparkContext.defaultParallelism
-        partitions = max(8, min(dp, _tile_count(tiles, n_tiles) // 512))
 
     def kernel(batches):
         for pdf in batches:
@@ -70,7 +55,7 @@ def zonal_cell_sums(tiles: DataFrame, partitions: int | None = None,
                 "built_sum": builts.reshape(-1),
             })
 
-    return tiles.coalesce(partitions).mapInPandas(
+    return tiles.coalesce(8).mapInPandas(
         kernel, schema="grid_id long, pop_sum long, built_sum long")
 
 
@@ -99,17 +84,8 @@ def raster_pixels(tiles: DataFrame) -> DataFrame:
         kernel, schema="pid long, pop_value long, built_value long")
 
 
-# Broadcast the decoded pixel table only while it is dimension-sized: rows
-# are 3 longs (~40 B materialized), so 2^21 pixels is ~80 MB on the driver —
-# comfortably broadcastable, an order of magnitude above the fixed 1024^2
-# world raster (1.05 M px), and far below a planetary DEM, which takes the
-# shuffle path below with NO code edit.
-BROADCAST_PIXEL_MAX = 1 << 21
-
-
 def sample_points(tiles: DataFrame, pts: DataFrame,
                   with_built: bool = False,
-                  n_tiles: int | None = None,
                   carry: tuple[str, ...] = ()) -> DataFrame:
     """ST_Value(rast, point): pts(osm_id, lon, lat) -> (osm_id, pop_value
     [, built_value]).
@@ -119,16 +95,12 @@ def sample_points(tiles: DataFrame, pts: DataFrame,
     cut joined each point to its tile ROW and gathered in an Arrow kernel;
     that replicates the 512-byte tile blobs once per point — at sf0.1 that
     is gigabytes of Arrow traffic for a 1 MiB raster, measured 10x slower
-    than this plan.)  The join STRATEGY is chosen from ``n_tiles`` (the same
-    scale signal ``zonal_cell_sums`` derives its partition count from): a
-    dimension-sized raster (the fixed 1024^2 world raster: 4096 tiles ->
-    1.05 M px) broadcasts, so the point side never shuffles; anything above
-    BROADCAST_PIXEL_MAX (a planetary DEM) takes a shuffle hash join
-    co-partitioned on pid automatically — the 100 TB path needs no edit.
+    than this plan.)  The pixel table is broadcast: the raster is the fixed
+    1024^2 world image (1.05 M px, ~40 MB as three longs a row), a
+    dimension-sized table, so the point side never shuffles.
     ``with_built`` gathers the second band in the same pass (the hill chain
     samples its DEM-relief and slope rasters at the same points,
-    hill_v2/03_compute_slope_metrics.sql:20-57).  ``n_tiles`` defaults to
-    the ACTUAL tile count of the input (see ``_tile_count``).  ``carry``
+    hill_v2/03_compute_slope_metrics.sql:20-57).  ``carry``
     names extra ``pts`` columns forwarded through the gather unchanged —
     per-road constants a caller can then fold into its post-gather
     aggregate instead of re-executing the point-generation subtree for a
@@ -139,14 +111,7 @@ def sample_points(tiles: DataFrame, pts: DataFrame,
                                       F.floor(F.col("lat") * W.RASTER_PX).cast("long")))
     keyed = pts.select("osm_id", *carry, (py * W.RASTER_PX + px).alias("pid"))
     cols = ["pid", "pop_value"] + (["built_value"] if with_built else [])
-    pix = raster_pixels(tiles).select(*cols)
-    if _tile_count(tiles, n_tiles) * W.TILE_PX * W.TILE_PX <= BROADCAST_PIXEL_MAX:
-        pix = F.broadcast(pix)
-    else:
-        # pixel side has no Catalyst stats (mapInPandas output), so pin the
-        # shuffle hash join — sort-merge would sort the full pixel table for
-        # a gather that only needs bucketed lookups
-        pix = pix.hint("shuffle_hash")
+    pix = F.broadcast(raster_pixels(tiles).select(*cols))
     out_cols = (["osm_id", *carry, "pop_value"]
                 + (["built_value"] if with_built else []))
     return keyed.join(pix, "pid").select(*out_cols)

@@ -692,15 +692,11 @@ def q04_distance_join_scenery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A/B at sf0.1: q46 32.6->19.5s, q04 2.40->1.82s best-of-3)
     rcells = spatial_join.road_cells(s).localCheckpoint(eager=True)
 
-    def flag(layer: str, d: float, rarity: int = 1) -> DataFrame:
-        pts = feats.filter(F.col("layer") == layer)
-        if rarity > 1:
-            pts = pts.filter(F.col("feature_id") % rarity == W.PASS_RESIDUE)
-        pts = pts.select("feature_id", "cx", "cy")
-        j = spatial_join.distance_pairs_full_partial(s, rcells, pts, d)
-        return j.groupBy("osm_id").agg(F.count("*").alias("n"))
-
-    hills = flag("hills_nodes", W.DIST_HILL_DEG)
+    hpts = feats.filter(F.col("layer") == "hills_nodes") \
+                .select("feature_id", "cx", "cy")
+    hills = (spatial_join.distance_pairs_full_partial(s, rcells, hpts,
+                                                      W.DIST_HILL_DEG)
+             .groupBy("osm_id").agg(F.count("*").alias("n")))
     # near_pass is existence-only in the output, so the big-radius pass disk
     # (0.09 deg ~ 12 cells) takes the cell-set semi-join path — one feature
     # covering the urban core must NOT materialize a pair per core road
@@ -1651,7 +1647,7 @@ def _urban_cells(spark: SparkSession) -> DataFrame:
 @register("q27_urban_clusters")
 def q27_urban_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6: connected components over urban-cell 4-adjacency (ST_Cluster*
-    analogue) via iterative min-label propagation to exact fixpoint."""
+    analogue) via driver-side union-find over the collected urban cells."""
     from pyspark.sql import Window
 
     from .operators import clusters

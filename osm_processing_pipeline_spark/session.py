@@ -29,7 +29,7 @@ RUNTIME_CONFS = {
 }
 
 
-def _tmpfs_ok(min_free_bytes: int = 16 * 1024 ** 3) -> bool:
+def _tmpfs_ok() -> bool:
     """True when /dev/shm should back spark.local.dir: explicit env opt-in
     (SPARK_GRAFT_TMPFS=1/0) wins; otherwise require >= 16 GiB free tmpfs."""
     opt = os.environ.get("SPARK_GRAFT_TMPFS")
@@ -37,7 +37,7 @@ def _tmpfs_ok(min_free_bytes: int = 16 * 1024 ** 3) -> bool:
         return opt == "1"
     try:
         st = os.statvfs("/dev/shm")
-        return st.f_bavail * st.f_frsize >= min_free_bytes
+        return st.f_bavail * st.f_frsize >= 16 * 1024 ** 3
     except OSError:
         return False
 

@@ -112,3 +112,22 @@ def test_load_stage_without_manifest_record_raises(spark):
     with pytest.raises(FileNotFoundError, match="stage=None lineage=None"):
         CP.load_stage(spark, OUT)
     shutil.rmtree(OUT, ignore_errors=True)
+
+
+def test_job_checkpointed_lineage_follows_data_version(spark, tmp_path,
+                                                       monkeypatch, capsys):
+    """``job.py --checkpointed`` hashes the world's DATA_VERSION into its
+    lineage: after a version bump every range recomputes instead of
+    resuming output computed from the old world."""
+    from osm_processing_pipeline_spark import job
+    from osm_processing_pipeline_spark import worldspec as W
+
+    argv = ["--checkpointed", "--sf-dir", SF_SMOKE,
+            "--out-dir", str(tmp_path / "ckpt"), "--ranges", "4"]
+    assert job.main(argv) == 0
+    assert "computed=4 skipped=0" in capsys.readouterr().err
+    assert job.main(argv) == 0
+    assert "computed=0 skipped=4" in capsys.readouterr().err
+    monkeypatch.setattr(W, "DATA_VERSION", W.DATA_VERSION + "-bumped")
+    assert job.main(argv) == 0
+    assert "computed=4 skipped=0" in capsys.readouterr().err

@@ -4,8 +4,9 @@ the shared persona branches and the shared oracle chains.
 Every SQL execution a query runs — its eager ``localCheckpoint``s while it is
 built, then the final plan — is read back from the driver's SQL status
 store, so operators hidden behind a checkpoint are linted too.  The driver
-job count of building q46/q58 is pinned: the shared branch builder must
-checkpoint ``road_cells`` once per composite and add no eager pass."""
+job count of building q10/q27/q44/q46/q58 is pinned: the shared branch
+builder must checkpoint ``road_cells`` once per composite, and no build may
+run a strategy probe."""
 
 import pytest
 
@@ -21,9 +22,15 @@ SHAPED = ["q01_road_grid_classification", "q02_tile_assignment",
           "q46_persona_v2", "q53_beach_scenery", "q57_admin_bounds",
           "q58_persona_v1_simplified"]
 FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
-# Spark jobs run while BUILDING each composite (parquet schema reads, eager
-# checkpoints and q46's bounds aggregate), with the world cache warm.
-BUILD_JOBS = {"q46_persona_v2": 46, "q58_persona_v1_simplified": 4}
+# Spark jobs run while BUILDING each query with the world cache warm:
+# parquet schema reads, eager checkpoints, q46's bounds aggregate, and the
+# driver collect that feeds q27's union-find.  The persona pins hold the
+# shared branch builder to one road_cells checkpoint per composite; the
+# others hold the raster and cluster queries to no strategy probe (a count
+# that picks a plan) at build time.
+PERSONA_JOBS = {"q46_persona_v2": 44, "q58_persona_v1_simplified": 4}
+PROBE_FREE_JOBS = {"q10_zonal_stats": 1, "q27_urban_clusters": 2,
+                   "q44_hill_composite": 6}
 
 
 def _executions(spark) -> dict[int, str]:
@@ -50,8 +57,7 @@ def test_executed_plans_have_no_cross_or_row_udf(name, spark):
         assert not hits, f"{name}: {op} in executions {hits}"
 
 
-@pytest.mark.parametrize("name", sorted(BUILD_JOBS))
-def test_persona_build_job_count(name, spark):
+def _build_jobs(spark, name: str) -> int:
     sc = spark.sparkContext
     world.roads_materialized(spark, SF_SMOKE)      # warm the world caches
     raster_tiles(spark)
@@ -61,5 +67,16 @@ def test_persona_build_job_count(name, spark):
         registry.QUERIES[name](spark, SF_SMOKE)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == BUILD_JOBS[name], (name, len(jobs))
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", sorted(PERSONA_JOBS))
+def test_persona_build_job_count(name, spark):
+    n = _build_jobs(spark, name)
+    assert n == PERSONA_JOBS[name], (name, n)
+
+
+@pytest.mark.parametrize("name", sorted(PROBE_FREE_JOBS))
+def test_build_runs_no_strategy_probe(name, spark):
+    n = _build_jobs(spark, name)
+    assert n == PROBE_FREE_JOBS[name], (name, n)

@@ -1,6 +1,6 @@
-"""Scale-path selection: the operators that pick a strategy from input size
-must produce identical results on BOTH paths, and the gates must fire on the
-inputs they exist for (VERDICT r3 items 3 and 6)."""
+"""Operator paths exercised directly rather than through a query: the
+broadcast raster gather, union-find over a dense edge set, the one-SQL
+ladder, the IVF Arrow kernels and the brute-force GEMM top-k."""
 
 from pyspark.sql import functions as F
 
@@ -8,54 +8,42 @@ from osm_processing_pipeline_spark.operators import clusters, zonal
 from osm_processing_pipeline_spark.sources.raster import raster_tiles
 
 
-def test_sample_points_shuffle_path_matches_broadcast(spark):
-    """Forcing n_tiles past BROADCAST_PIXEL_MAX must flip the gather to the
-    shuffle hash join and leave every sampled value identical."""
+def test_sample_points_broadcast_gather_values(spark):
+    """The pixel gather broadcasts the decoded pixel table, and every sampled
+    value equals the raster's closed form at the clamped pixel."""
+    import numpy as np
+
+    from osm_processing_pipeline_spark import worldspec as W
+    from osm_processing_pipeline_spark.sources.raster import (
+        built_values, pop_values)
+
     tiles = raster_tiles(spark)
+    coords = {1: (0.10, 0.20), 2: (0.515, 0.55), 3: (0.999, 0.001),
+              4: (0.0, 0.0), 5: (0.51, 0.51)}
     pts = spark.createDataFrame(
-        [(1, 0.10, 0.20), (2, 0.515, 0.55), (3, 0.999, 0.001),
-         (4, 0.0, 0.0), (5, 0.51, 0.51)],
+        [(k, lon, lat) for k, (lon, lat) in coords.items()],
         "osm_id long, lon double, lat double")
     bc = zonal.sample_points(tiles, pts, with_built=True)
-    assert "ResizedBroadcast" in bc._jdf.queryExecution().executedPlan().toString() \
-        or "BroadcastHashJoin" in bc._jdf.queryExecution().executedPlan().toString()
-    huge = zonal.BROADCAST_PIXEL_MAX  # pixel count = n_tiles * 256 > max
-    sh = zonal.sample_points(tiles, pts, with_built=True, n_tiles=huge)
-    plan = sh._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan and "ShuffledHashJoin" in plan
-    key = lambda df: sorted(map(tuple, df.collect()))
-    assert key(bc) == key(sh)
+    plan = bc._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "ShuffledHashJoin" not in plan
+    got = {r.osm_id: (r.pop_value, r.built_value) for r in bc.collect()}
+    lon, lat = np.array(list(coords.values())).T
+    px, py = (np.clip(np.floor(v * W.RASTER_PX).astype(np.int64), 0,
+                      W.RASTER_PX - 1) for v in (lon, lat))
+    want = dict(zip(coords, zip(pop_values(px, py).tolist(),
+                                built_values(px, py).tolist())))
+    assert got == want
 
 
-def test_cc_edges_dense_blob_takes_distributed_path(spark, monkeypatch):
-    """A dense eps-graph over few cells must be gated by the EDGE count: with
-    the edge threshold forced below the blob's edge count, the driver
-    union-find must not run, and the distributed result is still exact."""
-    ids = list(range(40))  # one 40-clique -> 1560 directed edges
+def test_cc_edges_dense_clique(spark):
+    """A dense edge set (one 40-clique, 1560 directed edges) collapses to a
+    single component labeled by its min cell."""
+    ids = list(range(40))
     cells = spark.createDataFrame([(i,) for i in ids], "grid_id long")
     edges = (cells.crossJoin(cells.select(F.col("grid_id").alias("nbr")))
              .filter(F.col("grid_id") != F.col("nbr")))
-
-    called = {"driver": 0}
-    orig = clusters._driver_union_find
-
-    def spy(cells_, edges_):
-        called["driver"] += 1
-        return orig(cells_, edges_)
-
-    monkeypatch.setattr(clusters, "_driver_union_find", spy)
-    out = clusters.connected_components_edges(
-        cells, edges, driver_edge_threshold=1000)
-    got = {r.grid_id: r.component for r in out.collect()}
-    assert called["driver"] == 0
-    assert got == {i: 0 for i in ids}
-
-    # under the threshold the driver path runs and agrees
-    out2 = clusters.connected_components_edges(
-        cells, edges, driver_edge_threshold=10_000)
-    got2 = {r.grid_id: r.component for r in out2.collect()}
-    assert called["driver"] == 1
-    assert got2 == got
+    out = clusters.connected_components_edges(cells, edges)
+    assert {r.grid_id: r.component for r in out.collect()} == {i: 0 for i in ids}
 
 
 def test_apply_ladder_sql_matches_loop(spark):
