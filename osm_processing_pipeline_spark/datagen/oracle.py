@@ -26,6 +26,11 @@ def fl(x: float) -> str:
     return r if ("e" in r or "E" in r or "inf" in r or "nan" in r) else r + "e0"
 
 
+def str_list(values) -> str:
+    """Quoted SQL string literals for an IN list: 'a', 'b', ..."""
+    return ", ".join(f"'{v}'" for v in values)
+
+
 def _case_pick(expr: str, values: list) -> str:
     whens = " ".join(
         f"WHEN {i} THEN " + ("NULL" if v is None else f"'{v}'")
@@ -120,7 +125,7 @@ grid AS (
 
 def feats_cte() -> str:
     layer = _case_pick(f"(b % {len(W.LAYERS)})", W.LAYERS)
-    poly_list = ", ".join(f"'{x}'" for x in W.POLY_LAYERS)
+    poly_list = str_list(W.POLY_LAYERS)
     return f"""
 feats AS (
   SELECT feature_id, b, {layer} AS layer,
@@ -136,38 +141,27 @@ feats AS (
 )""".strip()
 
 
+def _pent_edges(src: str, keys: str) -> str:
+    """One row per pentagon edge (e, x1, y1, x2, y2) of every ``src`` row
+    (alias ``p``; its cx, cy, r give the pentagon), carrying ``keys``."""
+    n = len(W.PENT_X)
+    unit = " UNION ALL ".join(
+        f"SELECT {i} AS e, {fl(W.PENT_X[i])} AS ux1, {fl(W.PENT_Y[i])} AS uy1, "
+        f"{fl(W.PENT_X[(i + 1) % n])} AS ux2, {fl(W.PENT_Y[(i + 1) % n])} AS uy2"
+        for i in range(n))
+    return f"""SELECT {keys}, e.e,
+         p.cx + p.r * e.ux1 AS x1, p.cy + p.r * e.uy1 AS y1,
+         p.cx + p.r * e.ux2 AS x2, p.cy + p.r * e.uy2 AS y2
+  FROM {src} p CROSS JOIN ({unit}) e"""
+
+
 def feat_edges_cte() -> str:
     """Pentagon edge list for polygon features (one row per edge)."""
-    n = len(W.PENT_X)
-    rows = []
-    for i in range(n):
-        j = (i + 1) % n
-        rows.append(
-            f"SELECT {i} AS e, {fl(W.PENT_X[i])} AS ux1, {fl(W.PENT_Y[i])} AS uy1, "
-            f"{fl(W.PENT_X[j])} AS ux2, {fl(W.PENT_Y[j])} AS uy2"
-        )
-    unit = " UNION ALL ".join(rows)
     return f"""
 feat_edges AS (
-  SELECT f.feature_id, f.layer, e.e,
-         f.cx + f.r * e.ux1 AS x1, f.cy + f.r * e.uy1 AS y1,
-         f.cx + f.r * e.ux2 AS x2, f.cy + f.r * e.uy2 AS y2
-  FROM feats f CROSS JOIN ({unit}) e
-  WHERE f.is_poly
+  {_pent_edges('feats', 'p.feature_id, p.layer')}
+  WHERE p.is_poly
 )""".strip()
-
-
-def _pent_unit_rows() -> str:
-    """UNION ALL of the five pentagon unit-direction edge rows."""
-    n = len(W.PENT_X)
-    rows = []
-    for i in range(n):
-        j = (i + 1) % n
-        rows.append(
-            f"SELECT {i} AS e, {fl(W.PENT_X[i])} AS ux1, {fl(W.PENT_Y[i])} AS uy1, "
-            f"{fl(W.PENT_X[j])} AS ux2, {fl(W.PENT_Y[j])} AS uy2"
-        )
-    return " UNION ALL ".join(rows)
 
 
 def extra_feats_cte() -> str:
@@ -193,10 +187,7 @@ extra_feats AS (
 def extra_edges_cte() -> str:
     return f"""
 extra_edges AS (
-  SELECT f.feature_id, f.layer, e.e,
-         f.cx + f.r * e.ux1 AS x1, f.cy + f.r * e.uy1 AS y1,
-         f.cx + f.r * e.ux2 AS x2, f.cy + f.r * e.uy2 AS y2
-  FROM extra_feats f CROSS JOIN ({_pent_unit_rows()}) e
+  {_pent_edges('extra_feats', 'p.feature_id, p.layer')}
 )""".strip()
 
 
@@ -225,10 +216,7 @@ admin AS (
 def admin_edges_cte() -> str:
     return f"""
 admin_edges AS (
-  SELECT a.admin_id, a.level, e.e,
-         a.cx + a.r * e.ux1 AS x1, a.cy + a.r * e.uy1 AS y1,
-         a.cx + a.r * e.ux2 AS x2, a.cy + a.r * e.uy2 AS y2
-  FROM admin a CROSS JOIN ({_pent_unit_rows()}) e
+  {_pent_edges('admin', 'p.admin_id, p.level')}
 )""".strip()
 
 

@@ -129,10 +129,10 @@ def point_dist2(ax, ay, bx, by) -> str:
     return f"(({bx} - {ax}) * ({bx} - {ax}) + ({by} - {ay}) * ({by} - {ay}))"
 
 
-def cand_cells_ctes(src: str = "segs") -> str:
-    """CTE pair exploding each segment's clamped bbox cell cover (DuckDB has
-    no lateral table functions, so two chained scalar unnests form the cross
-    product)."""
+def cand_cells_ctes() -> str:
+    """CTE pair exploding each ``segs`` row's clamped bbox cell cover
+    (DuckDB has no lateral table functions, so two chained scalar unnests
+    form the cross product)."""
     cd = fl(W.CELL_DEG)
     return f"""
 seg_cells_i AS (
@@ -143,7 +143,7 @@ seg_cells_i AS (
       GREATEST(0, LEAST({W.NX - 1}, CAST(floor(GREATEST(ax, bx) / {cd}) AS BIGINT))) AS i1,
       GREATEST(0, LEAST({W.NY - 1}, CAST(floor(LEAST(ay, by) / {cd}) AS BIGINT))) AS j0,
       GREATEST(0, LEAST({W.NY - 1}, CAST(floor(GREATEST(ay, by) / {cd}) AS BIGINT))) AS j1
-    FROM {src}
+    FROM segs
   )
 ),
 seg_cells AS (

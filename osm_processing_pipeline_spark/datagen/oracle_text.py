@@ -15,28 +15,31 @@ def token_hash_sql(tok: str) -> str:
     return f"(({terms}) % {W.TOKEN_HASH_MOD})"
 
 
-def minhash_cols_sql(h: str = "h") -> str:
+def minhash_cols_sql() -> str:
+    """The MINHASH_N min-hash aggregates over the token-hash column ``h``."""
     cols = []
     for j in range(W.MINHASH_N):
         a, b = minhash_params(j)
-        cols.append(f"MIN(({a} * {h} + {b}) % {W.MINHASH_P}) AS mh{j}")
+        cols.append(f"MIN(({a} * h + {b}) % {W.MINHASH_P}) AS mh{j}")
     return ",\n         ".join(cols)
 
 
-def band_union_sql(src: str = "mh") -> str:
+def band_union_sql() -> str:
+    """(doc_id, band, bkey) rows of every LSH band of the ``mh`` CTE."""
     rows = W.MINHASH_N // W.MINHASH_BANDS
     selects = []
     for k in range(W.MINHASH_BANDS):
         key = " || ':' || ".join(
             f"CAST(mh{k * rows + r} AS VARCHAR)" for r in range(rows))
-        selects.append(f"SELECT doc_id, {k} AS band, {key} AS bkey FROM {src}")
+        selects.append(f"SELECT doc_id, {k} AS band, {key} AS bkey FROM mh")
     return " UNION ALL ".join(selects)
 
 
-def simhash_sum_cols_sql(h32: str = "h32") -> str:
+def simhash_sum_cols_sql() -> str:
+    """The per-bit +-1 vote sums over the 32-bit hash column ``h32``."""
     cols = []
     for b in range(W.SIMHASH_BITS):
-        cols.append(f"SUM((({h32} // {1 << b}) % 2) * 2 - 1) AS s{b}")
+        cols.append(f"SUM(((h32 // {1 << b}) % 2) * 2 - 1) AS s{b}")
     return ",\n         ".join(cols)
 
 
@@ -46,12 +49,13 @@ def simhash_sig_sql() -> str:
         for b in range(W.SIMHASH_BITS))
 
 
-def qdot_sql(a: str, b: str, i: str = "i") -> str:
-    """Input-quantized dot terms: floor(x*2^20) per input, then integer
-    products — every partial sum < 2^53, so the Spark side may evaluate the
-    same sum as a float64 BLAS matmul and stay bit-exact."""
-    return (f"SUM(CAST(floor(CAST({a}[{i}] AS DOUBLE) * {fl(2.0 ** 20)}) AS BIGINT) "
-            f"* CAST(floor(CAST({b}[{i}] AS DOUBLE) * {fl(2.0 ** 20)}) AS BIGINT))")
+def qdot_sql(a: str, b: str) -> str:
+    """Input-quantized dot terms over the dimension index ``i``:
+    floor(x*2^20) per input, then integer products — every partial sum
+    < 2^53, so the Spark side may evaluate the same sum as a float64 BLAS
+    matmul and stay bit-exact."""
+    return (f"SUM(CAST(floor(CAST({a}[i] AS DOUBLE) * {fl(2.0 ** 20)}) AS BIGINT) "
+            f"* CAST(floor(CAST({b}[i] AS DOUBLE) * {fl(2.0 ** 20)}) AS BIGINT))")
 
 
 def cos_nano_sql(dt: str, na: str, nb: str) -> str:

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import worldspec as W
+from ..functions import geometry as G
 
 # One-time materialization cache: at real scale the world IS the stored input
 # (an Iceberg documents table); deriving it per-query is test scaffolding, so
@@ -115,10 +116,15 @@ def roads(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ref", ref).withColumn("vertices", verts).drop("lon0", "lat0")
 
 
+def cache_key(sf_dir: str) -> str:
+    """The per-sf_dir directory name under CACHE_DIR (and in other
+    per-input scratch paths): the path with its slashes flattened."""
+    return sf_dir.strip("/").replace("/", "_")
+
+
 def roads_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """roads() materialized once per sf_dir under CACHE_DIR (parquet)."""
-    key = sf_dir.strip("/").replace("/", "_")
-    path = f"{CACHE_DIR}/{key}/roads.parquet"
+    path = f"{CACHE_DIR}/{cache_key(sf_dir)}/roads.parquet"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # Write with enough files that a fresh scan parallelizes: parquet
         # row groups don't split below the file level, so file count bounds
@@ -149,13 +155,10 @@ def segments(spark: SparkSession, sf_dir: str, roads_df: DataFrame | None = None
     with its own tail — no shuffle, and ~4x faster than a transform lambda
     with per-element vertices[k+1] indexing (zip is a single fused pass)."""
     r = roads_df if roads_df is not None else roads_materialized(spark, sf_dir)
-    pairs = F.arrays_zip(
-        F.slice("vertices", 1, F.size("vertices") - 1).alias("a"),
-        F.expr("slice(vertices, 2, size(vertices) - 1)").alias("b"),
-    )
     return (
         r.filter(F.size("vertices") >= 2)
-        .select("osm_id", "highway", "urban", F.posexplode(pairs).alias("seg_idx", "p"))
+        .select("osm_id", "highway", "urban",
+                F.posexplode(G.vertex_pairs()).alias("seg_idx", "p"))
         .select("osm_id", "highway", "urban", "seg_idx",
                 F.col("p.a.lon").alias("ax"), F.col("p.a.lat").alias("ay"),
                 F.col("p.b.lon").alias("bx"), F.col("p.b.lat").alias("by"))
@@ -207,14 +210,7 @@ def features(spark: SparkSession, sf_dir: str) -> DataFrame:
                    cx.alias("cx"), cy.alias("cy"), r.alias("r"))
 
     is_poly = F.col("layer").isin(W.POLY_LAYERS)
-    vx = [F.col("cx") + F.col("r") * L(c) for c in W.PENT_X]
-    vy = [F.col("cy") + F.col("r") * L(c) for c in W.PENT_Y]
-    n = len(W.PENT_X)
-    edges = F.array(*[
-        F.struct(vx[i].alias("x1"), vy[i].alias("y1"),
-                 vx[(i + 1) % n].alias("x2"), vy[(i + 1) % n].alias("y2"))
-        for i in range(n)
-    ])
+    edges = _pentagon(F.col("cx"), F.col("cy"), F.col("r"))[0]
     return df.select(
         "feature_id", "layer", "cx", "cy", "r",
         F.when(is_poly, edges).alias("edges"),

@@ -25,6 +25,16 @@ from ..worldspec import M_PER_DEG
 D = F.lit
 
 
+def vertex_pairs() -> Column:
+    """array<struct<a, b>> of each road's consecutive vertex pairs (k, k+1):
+    ``vertices`` zipped with its own tail — one fused pass, no per-element
+    vertices[k+1] indexing."""
+    return F.arrays_zip(
+        F.slice("vertices", 1, F.size("vertices") - 1).alias("a"),
+        F.expr("slice(vertices, 2, size(vertices) - 1)").alias("b"),
+    )
+
+
 def seg_rect_t_interval(ax: Column, ay: Column, bx: Column, by: Column,
                         x0: Column, y0: Column, x1: Column, y1: Column,
                         ) -> tuple[Column, Column]:

@@ -212,6 +212,13 @@ def _atanh_poly(z: E) -> E:
 
 
 # ----------------------------------------------------------- Mollweide kernel
+def _phi_lam(p: str, lon: str, lat: str) -> list[tuple[str, E]]:
+    """``{p}_phi`` / ``{p}_lam``: the named world-window degree columns,
+    offset by the world anchor GEO_LON0/LAT0, in radians."""
+    return [(f"{p}_phi", (lit(W.GEO_LAT0_DEG) + ref(lat)) * W.RAD_PER_DEG),
+            (f"{p}_lam", (lit(W.GEO_LON0_DEG) + ref(lon)) * W.RAD_PER_DEG)]
+
+
 def _moll_solve(p: str, steps: list, phi_step: str, kx: float, ky: float) -> None:
     """Append the fixed-count Newton solve of 2*theta + sin(2*theta) =
     pi * sin(phi) (seeded at the named latitude step) plus the x/y output
@@ -240,11 +247,7 @@ def mollweide_steps(prefix: str, lon: str, lat: str) -> list[tuple[str, E]]:
     ``{prefix}_x`` / ``{prefix}_y``.  Fixed-count Newton; every intermediate
     is a named step shared verbatim by both engine renderings."""
     p = prefix
-    steps: list[tuple[str, E]] = []
-    steps.append((f"{p}_phi",
-                  (lit(W.GEO_LAT0_DEG) + ref(lat)) * W.RAD_PER_DEG))
-    steps.append((f"{p}_lam",
-                  (lit(W.GEO_LON0_DEG) + ref(lon)) * W.RAD_PER_DEG))
+    steps = _phi_lam(p, lon, lat)
     _moll_solve(p, steps, f"{p}_phi", W.MOLL_KX, W.MOLL_KY)
     return steps
 
@@ -265,11 +268,7 @@ def mollweide_authalic_steps(prefix: str, lon: str, lat: str) -> list[tuple[str,
     (< 1 cm at R_q — pinned by test); both engines evaluate the identical
     tree, so oracle exactness is unaffected by that offset."""
     p = prefix
-    steps: list[tuple[str, E]] = []
-    steps.append((f"{p}_phi",
-                  (lit(W.GEO_LAT0_DEG) + ref(lat)) * W.RAD_PER_DEG))
-    steps.append((f"{p}_lam",
-                  (lit(W.GEO_LON0_DEG) + ref(lon)) * W.RAD_PER_DEG))
+    steps = _phi_lam(p, lon, lat)
     # step names carry an 'a' (authalic) marker: the Newton chain appended
     # by _moll_solve owns the bare {p}_s{i}/{p}_c{i} namespace
     steps.append((f"{p}_asp", _sin_poly(ref(f"{p}_phi"))))
@@ -292,8 +291,10 @@ def mollweide_authalic_steps(prefix: str, lon: str, lat: str) -> list[tuple[str,
 # --------------------------------------------------- UTM (EPSG:32643) kernel
 def utm_steps(prefix: str, lon: str, lat: str) -> list[tuple[str, E]]:
     """Forward EPSG:32643 (UTM zone 43N, WGS84) of the named world-window
-    columns into metre columns ``{prefix}_e`` / ``{prefix}_n`` — the
-    transform behind the reference's grid areas
+    columns into metre columns ``{prefix}_e`` / ``{prefix}_n`` (also named
+    ``{prefix}_x`` / ``{prefix}_y``, the output names every kernel here
+    shares, so ``quad_shoelace_steps`` reads any of them) — the transform
+    behind the reference's grid areas
     (road_classification/01_create_india_grids.sql:96,
     ST_Area(ST_Transform(grid_geom, 32643))).
 
@@ -368,6 +369,8 @@ def utm_steps(prefix: str, lon: str, lat: str) -> list[tuple[str, E]]:
                                    + ((((61.0 - 58.0 * T) + T * T)
                                        + 600.0 * C) - 330.0 * ep2)
                                    * (ref(f"{p}_uA6") / 720.0)))))
+    steps.append((f"{p}_x", ref(f"{p}_e")))
+    steps.append((f"{p}_y", ref(f"{p}_n")))
     return steps
 
 
@@ -392,9 +395,7 @@ def mercator_steps(prefix: str, lon: str, lat: str) -> list[tuple[str, E]]:
     07_assign_final_road_classification.sql:63-97 measures endpoint
     DWithin in 3857 metres against them)."""
     p = prefix
-    return [
-        (f"{p}_phi", (lit(W.GEO_LAT0_DEG) + ref(lat)) * W.RAD_PER_DEG),
-        (f"{p}_lam", (lit(W.GEO_LON0_DEG) + ref(lon)) * W.RAD_PER_DEG),
+    return _phi_lam(p, lon, lat) + [
         (f"{p}_sin", _sin_poly(ref(f"{p}_phi"))),
         (f"{p}_x", lit(W.MERC_R) * ref(f"{p}_lam")),
         (f"{p}_y", lit(W.MERC_R) * _atanh_poly(ref(f"{p}_sin"))),

@@ -52,12 +52,8 @@ def classify_roads(roads: DataFrame, segs: DataFrame, grid: DataFrame) -> DataFr
         F.sum(F.when(F.col("grid_class") == "Rural", F.col("piece_um"))
               .otherwise(F.lit(0))).alias("rural_len_um"),
     )
-    pairs = F.arrays_zip(
-        F.slice("vertices", 1, F.size("vertices") - 1).alias("a"),
-        F.expr("slice(vertices, 2, size(vertices) - 1)").alias("b"),
-    )
     total = F.aggregate(
-        pairs, F.lit(0).cast("long"),
+        G.vertex_pairs(), F.lit(0).cast("long"),
         lambda acc, p: acc + G.quantize_len_um(
             G.seg_len_m(p["a"]["lon"], p["a"]["lat"],
                         p["b"]["lon"], p["b"]["lat"])))

@@ -4,9 +4,9 @@ For each query point, candidates are gathered from the k-ring of the query's
 cell at increasing radii; a result set is *provably complete* when the k-th
 candidate distance is strictly below the ring guarantee bound R*CELL_DEG (any
 point outside Chebyshev cell-ring R is at least that far away).  Unsatisfied
-queries escalate through a GEOMETRIC radius schedule (4x per level) past the
-caller's explicit rings, so a query that completes at radius r pays O(r^2)
-explode cells — never the O(world-cells) constant of jumping straight to the
+queries escalate through a GEOMETRIC radius schedule (rings 2 and 8, then
+4x per level), so a query that completes at radius r pays O(r^2) explode
+cells — never the O(world-cells) constant of jumping straight to the
 world-covering ring.  The FINAL level radius is max(NX, NY), whose Chebyshev
 disk covers the entire world grid — complete by construction while remaining
 a cell equi-join over the (by then empty-or-degenerate) residue.  The whole
@@ -28,8 +28,7 @@ from ..functions import geometry as G
 from ..worldspec import CELL_DEG, NX, NY
 
 
-def knn_join(qpts: DataFrame, nodes: DataFrame, k: int,
-             rings: tuple[int, ...] = (2, 8)) -> DataFrame:
+def knn_join(qpts: DataFrame, nodes: DataFrame, k: int) -> DataFrame:
     """qpts(query_id, qx, qy) x nodes(node_id, lon, lat) -> exact k nearest
     per query: (query_id, rank, node_id, d2)."""
     nodes_c = nodes.withColumn(
@@ -44,12 +43,12 @@ def knn_join(qpts: DataFrame, nodes: DataFrame, k: int,
                 .withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= k))
 
-    # Geometric escalation past the caller's schedule: 4x the radius per
-    # level until one more ring would cover the world anyway.  Each level
-    # only touches rows still unsatisfied at the previous level.
+    # Geometric escalation past ring 8: 4x the radius per level until one
+    # more ring would cover the world anyway.  Each level only touches rows
+    # still unsatisfied at the previous level.
     r_all = max(NX, NY)
-    schedule = list(rings)
-    nxt = (schedule[-1] if schedule else 1) * 4
+    schedule = [2, 8]
+    nxt = 32
     while nxt < r_all:
         schedule.append(nxt)
         nxt *= 4

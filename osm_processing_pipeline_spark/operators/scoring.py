@@ -177,21 +177,23 @@ def avg_speed(roads: DataFrame) -> DataFrame:
         .drop("surf_pct", "bonus_pct"))
 
 
+# first integer substring of ``lanes`` (note: first-int extraction, unlike
+# parse_lanes' '2-4' -> 4 upper-bound rule), and the four-lane flag over it
+LANES_FIRST = ("COALESCE(CAST(NULLIF(regexp_extract(lanes, '([0-9]+)', 1), '') "
+               "AS INT), 0)")
+FOURLANE = ("CASE WHEN UPPER(COALESCE(oneway, '')) IN ('YES', 'TRUE', '1', '-1') "
+            f"AND {LANES_FIRST} >= 2 THEN 'yes' ELSE 'no' END")
+
+
 def fourlane(roads: DataFrame) -> DataFrame:
     """Four-lane classification (scripts/dev-runs/fourlane_run.py:219-245):
     'yes' iff the road is oneway-ish (YES/TRUE/1/-1, case-insensitive) AND
-    the FIRST integer substring of ``lanes`` is >= 2 (note: first-int
-    extraction, unlike parse_lanes' '2-4' -> 4 upper-bound rule)."""
-    ow = F.upper(F.coalesce(F.col("oneway"), L(""))).isin(
-        "YES", "TRUE", "1", "-1")
-    ext = F.regexp_extract(F.col("lanes"), "([0-9]+)", 1)
-    first_int = F.coalesce(
-        F.when(ext == "", F.lit(None)).otherwise(ext).cast("int"), L(0))
+    the first integer of ``lanes`` is >= 2 — the ``FOURLANE`` expression
+    q46 evaluates inside its input projection."""
     return roads.select(
         "osm_id", "highway", "oneway", "lanes",
-        first_int.cast("long").alias("lanes_first"),
-        F.when(ow & (first_int >= 2), L("yes")).otherwise(L("no"))
-        .alias("fourlane"))
+        F.expr(f"CAST({LANES_FIRST} AS BIGINT)").alias("lanes_first"),
+        F.expr(FOURLANE).alias("fourlane"))
 
 
 def apply_denylist(roads: DataFrame, denylist: DataFrame) -> DataFrame:

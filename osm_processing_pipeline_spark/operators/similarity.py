@@ -102,6 +102,13 @@ def _gemm_topk(grid: DataFrame, k: int) -> DataFrame:
         kernel, schema="vec_id long, neighbor_id long, cos_nano long")
 
 
+def _default_chunks(embeddings: DataFrame) -> int:
+    """Probe-side chunk count: ~2-4 grid cells per core — fat enough for the
+    GEMM to amortize the Arrow/worker overhead, parallel enough to fill the
+    cluster."""
+    return max(1, min(embeddings.sparkSession.sparkContext.defaultParallelism, 8))
+
+
 def brute_force_topk(embeddings: DataFrame, k: int,
                      n_shards: int = 16,
                      n_chunks: int | None = None) -> DataFrame:
@@ -125,11 +132,8 @@ def brute_force_topk(embeddings: DataFrame, k: int,
     (each shard is shipped once per probe chunk), never O(N^2) pair rows,
     and the GEMM work is evenly spread over the chunk x shard task grid —
     this is the FAISS-style sharded-index brute-force layout."""
-    spark = embeddings.sparkSession
     if n_chunks is None:
-        # ~2-4 grid cells per core: fat enough for the GEMM to amortize the
-        # Arrow/worker overhead, parallel enough to fill the cluster
-        n_chunks = max(1, min(spark.sparkContext.defaultParallelism, 8))
+        n_chunks = _default_chunks(embeddings)
     e = embeddings.select("vec_id", "embedding")
     packed = F.collect_list(F.struct("vec_id", "embedding")).alias("items")
     chunks = (e.groupBy(F.pmod("vec_id", F.lit(n_chunks)).alias("pc"))
@@ -168,20 +172,26 @@ def lsh_buckets(embeddings: DataFrame) -> DataFrame:
     return n.withColumn("bucket", bucket)
 
 
+def _bucket_pair_cosines(bk: DataFrame, pair: F.Column) -> DataFrame:
+    """Bucket-mate pairs (va, vb) of ``lsh_buckets`` rows that satisfy
+    ``pair`` and have nonzero norms, with their exact ``cos_nano``."""
+    a = bk.select(F.col("vec_id").alias("va"), F.col("emb").alias("ea"),
+                  F.col("nrm").alias("na"), "bucket")
+    b = bk.select(F.col("vec_id").alias("vb"), F.col("emb").alias("eb"),
+                  F.col("nrm").alias("nb"), "bucket")
+    cand = a.join(b, "bucket").filter(pair & (F.col("na") > 0)
+                                      & (F.col("nb") > 0))
+    return cand.withColumn(
+        "cos_nano", _cos_nano(_qdot(F.col("ea"), F.col("eb")),
+                              F.col("na"), F.col("nb")))
+
+
 def lsh_ann_top1(embeddings: DataFrame) -> DataFrame:
     """Approximate NN: candidates share a bucket; exact cosine re-rank; top-1.
     Vectors with no bucket-mates surface with NULL neighbor (deterministic
     recall profile, verified against the identical SQL oracle)."""
     bk = lsh_buckets(embeddings)
-    a = bk.select(F.col("vec_id").alias("va"), F.col("emb").alias("ea"),
-                  F.col("nrm").alias("na"), "bucket")
-    b = bk.select(F.col("vec_id").alias("vb"), F.col("emb").alias("eb"),
-                  F.col("nrm").alias("nb"), "bucket")
-    cand = a.join(b, "bucket").filter((F.col("va") != F.col("vb"))
-                                      & (F.col("na") > 0) & (F.col("nb") > 0))
-    cos = cand.withColumn(
-        "cos_nano", _cos_nano(_qdot(F.col("ea"), F.col("eb")),
-                              F.col("na"), F.col("nb")))
+    cos = _bucket_pair_cosines(bk, F.col("va") != F.col("vb"))
     w = Window.partitionBy("va").orderBy(F.col("cos_nano").desc(), F.col("vb").asc())
     top = (cos.withColumn("rank", F.row_number().over(w))
            .filter(F.col("rank") == 1)
@@ -198,15 +208,7 @@ def embedding_neardup(embeddings: DataFrame, threshold_nano: int) -> DataFrame:
     is the associative tie-break that makes the decision deterministic and
     distributable (same shape as the exact-dedup keep-first rule)."""
     bk = lsh_buckets(embeddings)
-    a = bk.select(F.col("vec_id").alias("va"), F.col("emb").alias("ea"),
-                  F.col("nrm").alias("na"), "bucket")
-    b = bk.select(F.col("vec_id").alias("vb"), F.col("emb").alias("eb"),
-                  F.col("nrm").alias("nb"), "bucket")
-    cand = a.join(b, "bucket").filter((F.col("vb") < F.col("va"))
-                                      & (F.col("na") > 0) & (F.col("nb") > 0))
-    cos = cand.withColumn(
-        "cos_nano", _cos_nano(_qdot(F.col("ea"), F.col("eb")),
-                              F.col("na"), F.col("nb")))
+    cos = _bucket_pair_cosines(bk, F.col("vb") < F.col("va"))
     hits = (cos.filter(F.col("cos_nano") >= threshold_nano)
             .groupBy("va")
             .agg(F.min("vb").alias("dup_of"),
@@ -358,16 +360,16 @@ def train_ivf_centroids(embeddings: DataFrame,
     return cents
 
 
-def ivf_ann_top1(embeddings: DataFrame, n_lists: int = IVF_LISTS,
-                 n_chunks: int | None = None,
-                 nprobe: int = IVF_NPROBE) -> DataFrame:
+def ivf_ann_top1(embeddings: DataFrame) -> DataFrame:
     """IVF ANN with TRAINED centroids: fixed-count Lloyd over the corpus
-    builds the ``n_lists`` inverted lists (train_ivf_centroids); every
-    vector is assigned to its nearest centroid, a query probes its top-2
-    lists (nprobe=2) and exact-cosine re-ranks the candidates.  The scale
-    shape of FAISS-style IVF — index side partitioned by list id, probe
-    side exploded x nprobe, training touches the driver only with O(K*D)
-    bytes — with the engine's deterministic integer dot machinery.
+    builds the IVF_LISTS (16) inverted lists (train_ivf_centroids); every
+    vector is assigned to its nearest centroid, a query probes its
+    IVF_NPROBE (2) nearest lists and exact-cosine re-ranks the candidates.
+    Both constants are what the DuckDB twin unrolls (16 lists, two probes),
+    so no other value has an oracle.  The scale shape of FAISS-style IVF —
+    index side partitioned by list id, probe side exploded x nprobe,
+    training touches the driver only with O(K*D) bytes — with the engine's
+    deterministic integer dot machinery.
 
     The probe refine runs through the same dense block-GEMM kernel as the
     brute path (_gemm_topk) with list_id as the shard key: per-list blocks
@@ -378,24 +380,21 @@ def ivf_ann_top1(embeddings: DataFrame, n_lists: int = IVF_LISTS,
     interpreted zip_with+aggregate dot (HOFs are CodegenFallback, the
     round-4 lesson) plus a full window sort — walled at 100-218 s, LOSING
     20x to the brute GEMM (5 s) despite ~5x fewer dot products; the same
-    refine as block GEMM is ~2 s.  ``n_lists`` stays 16 in the graded
-    query (the DuckDB twin unrolls the training CTEs at K=16); a real
-    deployment scales K ~ sqrt(N) AND nprobe with it — measured at 20k
-    vectors vs brute q21: K=141 with nprobe still 2 probes 1.4% of the
-    corpus and recall@1 FALLS 0.381 -> 0.175; with nprobe scaled to
-    16/32 it recovers to 0.560/0.749 (finer lists beat coarse at equal
-    candidate budget — BENCH.md round-5 notes)."""
-    cents = train_ivf_centroids(embeddings, n_lists)
+    refine as block GEMM is ~2 s.  A real deployment scales K ~ sqrt(N)
+    AND nprobe with it — measured at 20k vectors vs brute q21: K=141 with
+    nprobe still 2 probes 1.4% of the corpus and recall@1 FALLS 0.381 ->
+    0.175; with nprobe scaled to 16/32 it recovers to 0.560/0.749 (finer
+    lists beat coarse at equal candidate budget — BENCH.md round-5
+    notes)."""
+    cents = train_ivf_centroids(embeddings)
     assigned = (_assign_lists(
-        _quantized(embeddings).select("vec_id", "qv"), cents, nprobe=nprobe)
+        _quantized(embeddings).select("vec_id", "qv"), cents)
         .withColumn("list_id", F.col("probes")[0]))
     e = embeddings.select("vec_id", "embedding")
     asg = assigned.join(e, "vec_id")
     packed = F.collect_list(F.struct("vec_id", "embedding"))
     index_blocks = asg.groupBy("list_id").agg(packed.alias("index_items"))
-    if n_chunks is None:
-        spark = embeddings.sparkSession
-        n_chunks = max(1, min(spark.sparkContext.defaultParallelism, 8))
+    n_chunks = _default_chunks(embeddings)
     probes = asg.select(
         "vec_id", "embedding",
         F.explode("probes").alias("list_id"))
@@ -405,7 +404,7 @@ def ivf_ann_top1(embeddings: DataFrame, n_lists: int = IVF_LISTS,
     grid = pchunks.join(index_blocks.hint("shuffle_hash"), "list_id")
     partial = _gemm_topk(
         grid.select("probe_items", "index_items")
-            .repartition(n_lists * n_chunks), 1)
+            .repartition(IVF_LISTS * n_chunks), 1)
     w = Window.partitionBy("vec_id").orderBy(F.col("cos_nano").desc(),
                                              F.col("neighbor_id").asc())
     top = (partial.withColumn("rank", F.row_number().over(w))

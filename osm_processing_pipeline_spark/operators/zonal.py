@@ -24,6 +24,14 @@ from ..functions import geometry as G
 from ..sources.raster import decode_band
 
 
+def _decode_tiles(pdf: pd.DataFrame):
+    """(tx, ty, pop, built) of an Arrow batch of tile rows: tile indices and
+    the (n, TILE_PX, TILE_PX) int64 band arrays."""
+    return (pdf["tx"].to_numpy(np.int64), pdf["ty"].to_numpy(np.int64),
+            decode_band(pdf["pop_data"]).astype(np.int64),
+            decode_band(pdf["built_data"]).astype(np.int64))
+
+
 def zonal_cell_sums(tiles: DataFrame) -> DataFrame:
     """(grid_id, pop_sum, built_sum) — per-grid-cell band sums from binary
     tiles.  No shuffle: each tile maps to exactly its 4 cells.  The raster
@@ -37,10 +45,7 @@ def zonal_cell_sums(tiles: DataFrame) -> DataFrame:
             if len(pdf) == 0:
                 continue
             n = len(pdf)
-            tx = pdf["tx"].to_numpy(np.int64)
-            ty = pdf["ty"].to_numpy(np.int64)
-            pop = decode_band(pdf["pop_data"]).astype(np.int64)
-            built = decode_band(pdf["built_data"]).astype(np.int64)
+            tx, ty, pop, built = _decode_tiles(pdf)
             # block-sum 16x16 -> cpt x cpt cells of ppc x ppc px
             def blocks(a):
                 return a.reshape(n, cpt, ppc, cpt, ppc).sum(axis=(2, 4))
@@ -69,10 +74,7 @@ def raster_pixels(tiles: DataFrame) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            tx = pdf["tx"].to_numpy(np.int64)
-            ty = pdf["ty"].to_numpy(np.int64)
-            pop = decode_band(pdf["pop_data"]).astype(np.int64)
-            built = decode_band(pdf["built_data"]).astype(np.int64)
+            tx, ty, pop, built = _decode_tiles(pdf)
             yy, xx = np.meshgrid(np.arange(tp), np.arange(tp), indexing="ij")
             px = (tx[:, None, None] * tp + xx[None]).reshape(-1)
             py = (ty[:, None, None] * tp + yy[None]).reshape(-1)

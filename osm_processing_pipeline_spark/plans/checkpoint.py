@@ -8,9 +8,10 @@ Here that contract is explicit and queryable: a stage's output is written one
 
     {stage, range_id, lo, hi, output_rows, wall_s, lineage, finished_at_ns}
 
-written atomically (tmp + rename).  On restart, ranges whose manifest record
-exists with a matching lineage hash are skipped — the exact analogue of the
-reference's committed chunks, but with lineage so a changed input or changed
+appended as one JSON line and fsynced before the next range starts (a
+record torn by a crash is ignored, so its range recomputes).  On restart,
+ranges whose manifest record exists with a matching lineage hash are
+skipped — the exact analogue of the reference's committed chunks, but with lineage so a changed input or changed
 stage version invalidates stale checkpoints instead of silently reusing them.
 
 At cluster scale the ranges ARE the Iceberg partitions (partition-by-cell
@@ -36,22 +37,45 @@ def _manifest_path(out_dir: str) -> str:
 
 
 def read_manifest(out_dir: str) -> list[dict]:
+    """Every record of the manifest.  An unparseable LAST line is a torn
+    append (the writer died mid-record, so its range never committed) and is
+    skipped; an unparseable line anywhere else is corruption and raises."""
     p = _manifest_path(out_dir)
     if not os.path.exists(p):
         return []
     with open(p) as f:
-        return [json.loads(line) for line in f if line.strip()]
+        lines = f.read().split("\n")
+    recs = []
+    for i, line in enumerate(lines):
+        if not line.strip():
+            continue
+        try:
+            recs.append(json.loads(line))
+        except ValueError:
+            if i < len(lines) - 1:
+                raise
+    return recs
+
+
+def _cut_torn_tail(out_dir: str) -> None:
+    """Drop an unterminated last line (a torn append) so the next record
+    starts on a line of its own; its range has no record and recomputes."""
+    p = _manifest_path(out_dir)
+    if not os.path.exists(p):
+        return
+    with open(p, "rb+") as f:
+        data = f.read()
+        if data and not data.endswith(b"\n"):
+            f.truncate(data.rfind(b"\n") + 1)
 
 
 def _append_manifest(out_dir: str, rec: dict) -> None:
-    p = _manifest_path(out_dir)
-    tmp = p + ".tmp"
-    recs = read_manifest(out_dir)
-    recs.append(rec)
-    with open(tmp, "w") as f:
-        for r in recs:
-            f.write(json.dumps(r, sort_keys=True) + "\n")
-    os.replace(tmp, p)
+    """Append one record and make it durable before the next range starts:
+    O(1) bytes per range, never a rewrite of the records before it."""
+    with open(_manifest_path(out_dir), "a") as f:
+        f.write(json.dumps(rec, sort_keys=True) + "\n")
+        f.flush()
+        os.fsync(f.fileno())
 
 
 def lineage_hash(stage: str, inputs: list[str], version: str = "1") -> str:
@@ -82,6 +106,7 @@ def run_stage(spark: SparkSession,
     Returns {"computed": [...], "skipped": [...], "rows": total}.
     """
     os.makedirs(out_dir, exist_ok=True)
+    _cut_torn_tail(out_dir)
     done = {
         (r["range_id"]): r for r in read_manifest(out_dir)
         if r["stage"] == stage and r["lineage"] == lineage

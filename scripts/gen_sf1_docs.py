@@ -30,23 +30,12 @@ import sys
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+from splitmix import mix
 
 out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
 n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 500_000
 n_vecs = int(sys.argv[3]) if len(sys.argv) > 3 else 20_000
 os.makedirs(out, exist_ok=True)
-
-MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
-np.seterr(over="ignore")  # uint64 wraparound IS the splitmix hash semantics
-
-
-def mix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """splitmix64 over a*PHI xor b — vectorized, pure uint64."""
-    z = (a * np.uint64(0x9E3779B97F4A7C15) ^ b) & MASK
-    z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & MASK
-    z = ((z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & MASK
-    return z ^ (z >> np.uint64(31))
-
 
 STEMS = ("spark line column order small sort fast value scan stream filter "
          "batch part query agg table hash join merge group row key big slow "

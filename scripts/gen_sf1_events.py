@@ -30,21 +30,11 @@ import sys
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+from splitmix import mix
 
 out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
 n = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
 os.makedirs(out, exist_ok=True)
-
-MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
-np.seterr(over="ignore")  # uint64 wraparound IS the splitmix hash semantics
-
-
-def mix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    z = (a * np.uint64(0x9E3779B97F4A7C15) ^ b) & MASK
-    z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & MASK
-    z = ((z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & MASK
-    return z ^ (z >> np.uint64(31))
-
 
 EPOCH0_US = 1704067200 * 1_000_000      # 2024-01-01 (seed table start)
 SPAN_US = 30 * 86400 * 1_000_000        # seed's 30-day span, kept fixed

@@ -131,3 +131,81 @@ def test_job_checkpointed_lineage_follows_data_version(spark, tmp_path,
     monkeypatch.setattr(W, "DATA_VERSION", W.DATA_VERSION + "-bumped")
     assert job.main(argv) == 0
     assert "computed=4 skipped=0" in capsys.readouterr().err
+
+
+def _ids_stage(spark, out, n_ranges=4):
+    lin = CP.lineage_hash("ids", ["x"])
+    return CP.run_stage(spark, "ids", lambda: spark.range(64), "id",
+                        CP.make_ranges(0, 64, n_ranges), out, lin)
+
+
+def test_torn_last_manifest_line_is_ignored_and_recomputed(spark, tmp_path):
+    """A crash mid-append leaves an unterminated partial last record: the
+    reader skips it, and resume recomputes exactly that range."""
+    out = str(tmp_path / "ckpt")
+    _ids_stage(spark, out)
+    p = CP._manifest_path(out)
+    with open(p) as f:
+        lines = f.read().splitlines()
+    with open(p, "w") as f:
+        f.write("\n".join(lines[:-1]) + "\n" + lines[-1][:25])
+    assert [r["range_id"] for r in CP.read_manifest(out)] == [0, 1, 2]
+    res = _ids_stage(spark, out)
+    assert res["computed"] == [3] and res["skipped"] == [0, 1, 2]
+    assert res["rows"] == 64
+    assert sorted(r["range_id"] for r in CP.read_manifest(out)) == [0, 1, 2, 3]
+
+
+def test_corrupt_middle_manifest_line_raises(spark, tmp_path):
+    out = str(tmp_path / "ckpt")
+    _ids_stage(spark, out)
+    p = CP._manifest_path(out)
+    with open(p) as f:
+        lines = f.read().splitlines()
+    lines[1] = lines[1][:25]
+    with open(p, "w") as f:
+        f.write("\n".join(lines) + "\n")
+    with pytest.raises(ValueError):
+        CP.read_manifest(out)
+
+
+def test_manifest_writes_one_record_per_range(spark, tmp_path, monkeypatch):
+    """Each range appends its own record once: the bytes written to the
+    manifest over a run equal its final size (a rewrite of every earlier
+    record per range would write O(ranges^2) bytes)."""
+    import builtins
+
+    out = str(tmp_path / "ckpt")
+    written = []
+    real_open = builtins.open
+
+    class Counted:
+        def __init__(self, f):
+            self._f = f
+
+        def write(self, s):
+            written.append(len(s))
+            return self._f.write(s)
+
+        def __getattr__(self, k):
+            return getattr(self._f, k)
+
+        def __enter__(self):
+            self._f.__enter__()
+            return self
+
+        def __exit__(self, *exc):
+            return self._f.__exit__(*exc)
+
+    def spy(file, mode="r", *a, **kw):
+        f = real_open(file, mode, *a, **kw)
+        if any(c in mode for c in "wa") and "_manifest" in str(file):
+            return Counted(f)
+        return f
+
+    monkeypatch.setattr(builtins, "open", spy)
+    _ids_stage(spark, out, n_ranges=8)
+    monkeypatch.undo()
+    size = os.path.getsize(CP._manifest_path(out))
+    assert len(CP.read_manifest(out)) == 8
+    assert len(written) == 8 and sum(written) == size

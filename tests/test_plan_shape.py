@@ -1,5 +1,6 @@
-"""Plan-shape guards for the queries built on the shared rep-vertex helper,
-the shared persona branches and the shared oracle chains.
+"""Plan-shape guards for the queries built on shared builders: the
+rep-vertex helper, the persona branches, the projected-grid and embedding
+builders and the shared oracle chains.
 
 Every SQL execution a query runs — its eager ``localCheckpoint``s while it is
 built, then the final plan — is read back from the driver's SQL status
@@ -16,11 +17,18 @@ from osm_processing_pipeline_spark.sources.raster import raster_tiles
 from tests.conftest import SF_SMOKE
 
 SHAPED = ["q01_road_grid_classification", "q02_tile_assignment",
+          "q07_intersection_detection", "q09_endpoint_proximity_upgrade",
           "q11_raster_point_sample", "q13_interleaved_roundtrip",
-          "q18_text_quality", "q28_intersection_degradation",
-          "q32_vector_tiles", "q44_hill_composite", "q45_buffer_histogram",
-          "q46_persona_v2", "q53_beach_scenery", "q57_admin_bounds",
-          "q58_persona_v1_simplified"]
+          "q15_ngram_jaccard_dedup", "q16_minhash_lsh_dedup",
+          "q18_text_quality", "q21_embedding_topk", "q22_lsh_ann",
+          "q28_intersection_degradation", "q29_persona_normalized",
+          "q32_vector_tiles", "q33_length_percentiles",
+          "q37_embedding_neardup", "q39_ivf_ann", "q42_fourlane",
+          "q44_hill_composite", "q45_buffer_histogram", "q46_persona_v2",
+          "q51_analysis_summary", "q53_beach_scenery", "q56_mollweide_grid",
+          "q57_admin_bounds", "q58_persona_v1_simplified",
+          "q59_mercator_endpoint_dwithin", "q60_mollweide_ellipsoidal",
+          "q61_utm_grid_areas"]
 FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
 # Spark jobs run while BUILDING each query with the world cache warm:
 # parquet schema reads, eager checkpoints, q46's bounds aggregate, and the
