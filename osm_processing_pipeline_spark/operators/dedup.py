@@ -139,10 +139,13 @@ def jaccard_pairs(sets: DataFrame, key: str = "shingle",
             # per pair in the join (once in the condition, again in the
             # project) — as a standalone Filter it runs once in whole-stage
             # codegen (A/B at sf0.1, alternating: 22.6 -> 17.7 s; the q55
-            # folded-condition lesson, cheap-predicate edition).  `_mid` is
-            # dropped by the final select and never shuffled.
+            # folded-condition lesson, cheap-predicate edition).  The filter
+            # must READ `_mid`: an unread alias is pruned and the filter is
+            # pushed into the join anyway (tests/test_plan_shape.py checks
+            # q16's join conditions).  `_mid` is dropped by the final select
+            # and never shuffled.
             .withColumn("_mid", F.monotonically_increasing_id())
-            .filter(F.col("inter_cnt") >= 1)
+            .filter((F.col("inter_cnt") >= 1) & (F.col("_mid") >= 0))
             .withColumn("union_cnt",
                         (F.size("ta") + F.size("tb")).cast("long")
                         - F.col("inter_cnt"))

@@ -10,9 +10,16 @@ Here that contract is explicit and queryable: a stage's output is written one
 
 appended as one JSON line and fsynced before the next range starts (a
 record torn by a crash is ignored, so its range recomputes).  On restart,
-ranges whose manifest record exists with a matching lineage hash are
-skipped — the exact analogue of the reference's committed chunks, but with lineage so a changed input or changed
-stage version invalidates stale checkpoints instead of silently reusing them.
+ranges whose manifest record exists with a matching lineage hash and the
+same [lo, hi) span are skipped — the exact analogue of the reference's
+committed chunks, but with lineage so a changed input or changed stage
+version invalidates stale checkpoints instead of silently reusing them.
+
+The stage plan runs once per ``run_stage`` call, not once per range: with
+two or more ranges pending, the stage frame is persisted before the first
+write and every range filters the cached rows (released when the call
+returns or raises).  ``output_rows`` is counted by an Observation on the
+range's own write, so no job re-reads the written files.
 
 At cluster scale the ranges ARE the Iceberg partitions (partition-by-cell
 overwrite); locally they are parquet subdirectories.  Determinism of every
@@ -28,7 +35,7 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -103,40 +110,62 @@ def run_stage(spark: SparkSession,
               lineage: str) -> dict:
     """Execute a stage range-by-range with skip-on-resume.
 
+    A range is done when the manifest holds a record for it with this stage,
+    lineage, range_id AND [lo, hi) span, and its directory has ``_SUCCESS``;
+    a re-run with a different range count recomputes every moved span.
+
+    ``df_fn()`` is called once.  With two or more pending ranges its frame
+    is persisted before the first write, so the plan runs once and each
+    range filters cached rows (a narrow materialization pays once it has two
+    or more consumers); with one pending range nothing is persisted.  The
+    cache is released in a ``finally``.  Each range's ``output_rows`` comes
+    from an Observation on its own write, and its manifest line is appended
+    after the write commits.
+
     Returns {"computed": [...], "skipped": [...], "rows": total}.
     """
     os.makedirs(out_dir, exist_ok=True)
     _cut_torn_tail(out_dir)
     done = {
-        (r["range_id"]): r for r in read_manifest(out_dir)
+        (r["range_id"], r["lo"], r["hi"]): r for r in read_manifest(out_dir)
         if r["stage"] == stage and r["lineage"] == lineage
     }
-    computed, skipped = [], []
+    skipped, pending = [], []
     total = 0
-    df = df_fn()
     for rid, (lo, hi) in enumerate(ranges):
-        part_path = os.path.join(out_dir, f"range={rid}")
-        if rid in done and os.path.exists(os.path.join(part_path, "_SUCCESS")):
+        rec = done.get((rid, lo, hi))
+        if rec and os.path.exists(os.path.join(out_dir, f"range={rid}", "_SUCCESS")):
             skipped.append(rid)
-            total += done[rid]["output_rows"]
-            continue
-        t0 = time.time()
-        part = df.filter((F.col(partition_col) >= lo) & (F.col(partition_col) < hi))
-        part.write.mode("overwrite").parquet(part_path)
-        rows = spark.read.parquet(part_path).count()
-        _append_manifest(out_dir, {
-            "stage": stage,
-            "range_id": rid,
-            "lo": lo,
-            "hi": hi,
-            "output_rows": rows,
-            "wall_s": round(time.time() - t0, 3),
-            "lineage": lineage,
-            "finished_at_ns": time.time_ns(),
-        })
-        computed.append(rid)
-        total += rows
-    return {"computed": computed, "skipped": skipped, "rows": total}
+            total += rec["output_rows"]
+        else:
+            pending.append((rid, lo, hi))
+    df = df_fn()
+    if len(pending) > 1:
+        df = df.persist()
+    try:
+        for rid, lo, hi in pending:
+            t0 = time.time()
+            obs = Observation()
+            part = df.filter((F.col(partition_col) >= lo) & (F.col(partition_col) < hi))
+            part.observe(obs, F.count(F.lit(1)).alias("rows")) \
+                .write.mode("overwrite").parquet(os.path.join(out_dir, f"range={rid}"))
+            rows = obs.get["rows"]
+            _append_manifest(out_dir, {
+                "stage": stage,
+                "range_id": rid,
+                "lo": lo,
+                "hi": hi,
+                "output_rows": rows,
+                "wall_s": round(time.time() - t0, 3),
+                "lineage": lineage,
+                "finished_at_ns": time.time_ns(),
+            })
+            total += rows
+    finally:
+        if len(pending) > 1:
+            df.unpersist()
+    return {"computed": [rid for rid, _, _ in pending], "skipped": skipped,
+            "rows": total}
 
 
 def load_stage(spark: SparkSession, out_dir: str,

@@ -209,3 +209,99 @@ def test_manifest_writes_one_record_per_range(spark, tmp_path, monkeypatch):
     size = os.path.getsize(CP._manifest_path(out))
     assert len(CP.read_manifest(out)) == 8
     assert len(written) == 8 and sum(written) == size
+
+
+def test_resume_with_a_different_range_count_recomputes_moved_spans(spark, tmp_path):
+    """A record is done only for its own [lo, hi) span: re-running under the
+    same lineage with 8 ranges after 4 must not skip ranges 0..3 (whose
+    records cover twice the span) and leave 96 rows for 64 ids."""
+    out = str(tmp_path / "ckpt")
+    assert _ids_stage(spark, out, n_ranges=4)["rows"] == 64
+    res = _ids_stage(spark, out, n_ranges=8)
+    assert res["computed"] == list(range(8)) and not res["skipped"]
+    assert res["rows"] == 64
+    lin = CP.lineage_hash("ids", ["x"])
+    back = CP.load_stage(spark, out, "ids", lin)
+    assert back.count() == 64 == back.distinct().count()
+
+
+def _counted_ids(spark, n=64):
+    """A 64-id stage whose every evaluation adds the rows it produced to an
+    accumulator (the mapInPandas is opaque, so the range filters stay above
+    it and cannot prune its input)."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            acc.add(len(b))
+            yield b
+
+    return acc, lambda: spark.range(n).mapInPandas(count_rows, "id long")
+
+
+def test_stage_plan_runs_once_per_call(spark, tmp_path):
+    out = str(tmp_path / "ckpt")
+    lin = CP.lineage_hash("ids", ["x"])
+    ranges = CP.make_ranges(0, 64, 8)
+    acc, fn = _counted_ids(spark)
+    res = CP.run_stage(spark, "ids", fn, "id", ranges, out, lin)
+    assert len(res["computed"]) == 8 and res["rows"] == 64
+    assert acc.value == 64
+
+    # resume with one lost range: one pending range, one plan evaluation
+    shutil.rmtree(f"{out}/range=5")
+    acc, fn = _counted_ids(spark)
+    res = CP.run_stage(spark, "ids", fn, "id", ranges, out, lin)
+    assert res["computed"] == [5] and len(res["skipped"]) == 7
+    assert acc.value == 64 and res["rows"] == 64
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_nothing_stays_cached_after_run_or_failed_write(spark, tmp_path,
+                                                        monkeypatch):
+    from pyspark.sql import DataFrameWriter
+
+    spark.catalog.clearCache()
+    lin = CP.lineage_hash("ids", ["x"])
+    ranges = CP.make_ranges(0, 64, 4)
+    CP.run_stage(spark, "ids", lambda: spark.range(64), "id", ranges,
+                 str(tmp_path / "ok"), lin)
+    assert _cache_empty(spark)
+
+    real = DataFrameWriter.parquet
+    cached_at_failure = []
+
+    def fail_range_2(self, path, *a, **kw):
+        if path.endswith("range=2"):
+            cached_at_failure.append(not _cache_empty(spark))
+            raise RuntimeError("disk full")
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail_range_2)
+    with pytest.raises(RuntimeError, match="disk full"):
+        CP.run_stage(spark, "ids", lambda: spark.range(64), "id", ranges,
+                     str(tmp_path / "fail"), lin)
+    assert cached_at_failure == [True]    # the stage frame was persisted ...
+    assert _cache_empty(spark)            # ... and released on the way out
+    recs = CP.read_manifest(str(tmp_path / "fail"))
+    assert [r["range_id"] for r in recs] == [0, 1]
+
+
+def test_manifest_output_rows_match_rows_on_disk(spark, tmp_path):
+    """Uneven ranges, empty ones included: each record's row count is the
+    count of rows read back from its own range=N directory."""
+    out = str(tmp_path / "ckpt")
+    lin = CP.lineage_hash("sq", ["x"])
+    res = CP.run_stage(spark, "sq",
+                       lambda: spark.range(64).selectExpr("id * id % 64 AS id"),
+                       "id", CP.make_ranges(0, 128, 8), out, lin)
+    recs = CP.read_manifest(out)
+    assert sorted(r["range_id"] for r in recs) == list(range(8))
+    got = {r["range_id"]: r["output_rows"] for r in recs}
+    want = {rid: spark.read.parquet(f"{out}/range={rid}").count()
+            for rid in range(8)}
+    assert got == want and res["rows"] == 64
+    assert len(set(got.values())) > 2 and got[7] == 0

@@ -4,7 +4,10 @@ builders and the shared oracle chains.
 
 Every SQL execution a query runs — its eager ``localCheckpoint``s while it is
 built, then the final plan — is read back from the driver's SQL status
-store, so operators hidden behind a checkpoint are linted too.  The driver
+store, so operators hidden behind a checkpoint are linted too.  No join
+condition may contain ``array_intersect(``: folded into a join, it runs
+interpreted per candidate pair and again in the projection that keeps it
+(q16's ``_mid`` barrier keeps its filter out).  The driver
 job count of building q10/q27/q44/q46/q58 is pinned: the shared branch
 builder must checkpoint ``road_cells`` once per composite, and no build may
 run a strategy probe."""
@@ -53,6 +56,12 @@ def _executions(spark) -> dict[int, str]:
     return out
 
 
+def _join_conditions(plan: str) -> list[str]:
+    """Every join operator's condition in a formatted plan description."""
+    return [line for line in plan.splitlines()
+            if line.startswith("Join condition:")]
+
+
 @pytest.mark.parametrize("name", SHAPED)
 def test_executed_plans_have_no_cross_or_row_udf(name, spark):
     before = set(_executions(spark))
@@ -63,6 +72,9 @@ def test_executed_plans_have_no_cross_or_row_udf(name, spark):
     for op in FORBIDDEN:
         hits = [k for k, v in plans.items() if op in v]
         assert not hits, f"{name}: {op} in executions {hits}"
+    hits = [c for v in plans.values() for c in _join_conditions(v)
+            if "array_intersect(" in c]
+    assert not hits, f"{name}: array_intersect in join conditions {hits}"
 
 
 def _build_jobs(spark, name: str) -> int:
