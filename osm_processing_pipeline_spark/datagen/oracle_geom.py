@@ -129,24 +129,37 @@ def point_dist2(ax, ay, bx, by) -> str:
     return f"(({bx} - {ax}) * ({bx} - {ax}) + ({by} - {ay}) * ({by} - {ay}))"
 
 
-def cand_cells_ctes() -> str:
-    """CTE pair exploding each ``segs`` row's clamped bbox cell cover
-    (DuckDB has no lateral table functions, so two chained scalar unnests
-    form the cross product)."""
-    cd = fl(W.CELL_DEG)
-    return f"""
-seg_cells_i AS (
-  SELECT *, unnest(generate_series(i0, i1)) AS ci
-  FROM (
-    SELECT *,
-      GREATEST(0, LEAST({W.NX - 1}, CAST(floor(LEAST(ax, bx) / {cd}) AS BIGINT))) AS i0,
-      GREATEST(0, LEAST({W.NX - 1}, CAST(floor(GREATEST(ax, bx) / {cd}) AS BIGINT))) AS i1,
-      GREATEST(0, LEAST({W.NY - 1}, CAST(floor(LEAST(ay, by) / {cd}) AS BIGINT))) AS j0,
-      GREATEST(0, LEAST({W.NY - 1}, CAST(floor(GREATEST(ay, by) / {cd}) AS BIGINT))) AS j1
-    FROM segs
+def cell_index(x: str, n: int = W.NX) -> str:
+    """Clamped row/column index of coordinate ``x`` on the n x n grid over
+    the unit world (edge 1/n) — the oracle side of the grid layout."""
+    return f"GREATEST(0, LEAST({n - 1}, CAST(floor({x} / {fl(1.0 / n)}) AS BIGINT)))"
+
+
+def cell_of_point(x: str, y: str, n: int = W.NX) -> str:
+    """Row-major cell id ``j * n + i`` of the point (x, y)."""
+    return f"{cell_index(y, n)} * {n} + {cell_index(x, n)}"
+
+
+def cover_ctes(name: str, src: str, x0: str, y0: str, x1: str, y1: str,
+               keep: str = "*") -> str:
+    """CTE pair ``{name}_i``, ``{name}``: each ``src`` row (its ``keep``
+    columns) once per tiling cell of its clamped bbox cover, keyed
+    ``grid_id`` (DuckDB has no lateral table functions, so two chained
+    scalar unnests form the cross product)."""
+    return f"""{name}_i AS (
+  SELECT *, unnest(generate_series(i0, i1)) AS ci FROM (
+    SELECT {keep}, {cell_index(x0)} AS i0, {cell_index(x1)} AS i1,
+           {cell_index(y0)} AS j0, {cell_index(y1)} AS j1
+    FROM {src}
   )
 ),
-seg_cells AS (
-  SELECT *, unnest(generate_series(j0, j1)) * {W.NX} + ci AS grid_id
-  FROM seg_cells_i
-)""".strip()
+{name} AS (
+  SELECT {keep}, unnest(generate_series(j0, j1)) * {W.NX} + ci AS grid_id
+  FROM {name}_i
+)"""
+
+
+def cand_cells_ctes() -> str:
+    """``seg_cells``: each ``segs`` row once per cell of its bbox cover."""
+    return cover_ctes("seg_cells", "segs", "LEAST(ax, bx)", "LEAST(ay, by)",
+                      "GREATEST(ax, bx)", "GREATEST(ay, by)")

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import worldspec as W
-from ..functions import geometry as G
+from ..functions import cells, geometry as G
 
 # One-time materialization cache: at real scale the world IS the stored input
 # (an Iceberg documents table); deriving it per-query is test scaffolding, so
@@ -171,12 +171,8 @@ def grids(spark: SparkSession) -> DataFrame:
     sql/urban_pressure/07_classify_urban_class.sql, used by the flagship
     classification join).  Tiny dimension — always broadcast."""
     g = spark.range(W.NX * W.NY).select(F.col("id").alias("grid_id"))
-    i = (F.col("grid_id") % W.NX).cast("double")
-    j = F.floor(F.col("grid_id") / W.NX).cast("double")
-    x0 = i * L(W.CELL_DEG)
-    y0 = j * L(W.CELL_DEG)
-    cx = x0 + L(W.CELL_DEG / 2.0)
-    cy = y0 + L(W.CELL_DEG / 2.0)
+    x0, y0, x1, y1 = cells.cell_bounds(F.col("grid_id"))
+    cx, cy = cells.cell_center(F.col("grid_id"))
     ulo, uhi, slo, shi = W.grid_class_bounds()
     cls = (
         F.when((cx >= ulo) & (cx < uhi) & (cy >= ulo) & (cy < uhi), L("Urban"))
@@ -185,8 +181,7 @@ def grids(spark: SparkSession) -> DataFrame:
     )
     return g.select(
         "grid_id",
-        x0.alias("x0"), y0.alias("y0"),
-        (x0 + L(W.CELL_DEG)).alias("x1"), (y0 + L(W.CELL_DEG)).alias("y1"),
+        x0.alias("x0"), y0.alias("y0"), x1.alias("x1"), y1.alias("y1"),
         cls.alias("grid_class"),
     )
 

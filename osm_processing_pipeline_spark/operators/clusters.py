@@ -34,17 +34,8 @@ from ..functions import cells as C
 def cell_neighbors(cells: DataFrame) -> DataFrame:
     """(grid_id, nbr) 4-neighbor edges among the given cells (both ends must
     qualify) — neighbors are computed, never joined geometrically."""
-    i = F.col("grid_id") % W.NX
-    j = F.floor(F.col("grid_id") / W.NX).cast("long")
-    nbrs = F.array(
-        F.when(i > 0, F.col("grid_id") - 1),
-        F.when(i < W.NX - 1, F.col("grid_id") + 1),
-        F.when(j > 0, F.col("grid_id") - W.NX),
-        F.when(j < W.NY - 1, F.col("grid_id") + W.NX),
-    )
     edges = cells.select(
-        "grid_id",
-        F.explode(F.filter(nbrs, lambda c: c.isNotNull())).alias("nbr"))
+        "grid_id", F.explode(C.edge_neighbors(F.col("grid_id"))).alias("nbr"))
     # keep only edges whose far end is also a qualifying cell
     return edges.join(cells.select(F.col("grid_id").alias("nbr")), "nbr", "left_semi")
 
@@ -54,7 +45,9 @@ def connected_components(cells: DataFrame) -> DataFrame:
     min reachable cell id (exact).
 
     The 4-neighbors are derived in pure Python from the collected ids, so
-    the edge list costs no Spark job.  ``cells`` is persisted; the collect
+    the edge list costs no Spark job — the one place outside
+    ``functions/cells`` that steps a cell id by hand, because these ids are
+    driver-side ints, not Columns.  ``cells`` is persisted; the collect
     fills the cache, so a caller that reuses the same cell set (q48's
     ``cell_neighbors``) reads it back instead of recomputing it."""
     cells = cells.persist()
@@ -102,16 +95,6 @@ def _union_find(cells: DataFrame, ids: list[int],
     return cells.sparkSession.createDataFrame(rows, "grid_id long, component long")
 
 
-def _center(cid):
-    """Cell-center coordinates derived from the id — the same expression
-    tree as the oracle's grid CTE (x0 + CELL/2 with x0 = (id % NX) * CELL)."""
-    cx = (cid % F.lit(W.NX)).cast("double") * F.lit(W.CELL_DEG) \
-        + F.lit(W.CELL_DEG / 2.0)
-    cy = F.floor(cid / F.lit(W.NX)).cast("double") * F.lit(W.CELL_DEG) \
-        + F.lit(W.CELL_DEG / 2.0)
-    return cx, cy
-
-
 def eps_neighbors(cells: DataFrame, eps_deg_num: float,
                   eps_deg_den: float) -> DataFrame:
     """Directed (grid_id, nbr) pairs of qualifying cells whose centers are
@@ -125,8 +108,8 @@ def eps_neighbors(cells: DataFrame, eps_deg_num: float,
             .filter(F.col("nbr") != F.col("grid_id"))
             .join(cells.select(F.col("grid_id").alias("nbr")), "nbr",
                   "left_semi"))
-    ax, ay = _center(F.col("grid_id"))
-    bx, by = _center(F.col("nbr"))
+    ax, ay = C.cell_center(F.col("grid_id"))
+    bx, by = C.cell_center(F.col("nbr"))
     dx = ax - bx
     dy = ay - by
     return cand.filter(dx * dx + dy * dy <= eps * eps)

@@ -10,10 +10,13 @@ Here that contract is explicit and queryable: a stage's output is written one
 
 appended as one JSON line and fsynced before the next range starts (a
 record torn by a crash is ignored, so its range recomputes).  On restart,
-ranges whose manifest record exists with a matching lineage hash and the
-same [lo, hi) span are skipped — the exact analogue of the reference's
-committed chunks, but with lineage so a changed input or changed stage
-version invalidates stale checkpoints instead of silently reusing them.
+ranges whose LIVE manifest record (``live_records``) has a matching lineage
+hash and the same [lo, hi) span are skipped — the exact analogue of the
+reference's committed chunks, but with lineage so a changed input or changed
+stage version invalidates stale checkpoints instead of silently reusing
+them.  A record stops being live once a later record of its stage overlaps
+its span or rewrites its ``range=N`` directory, so a re-run with a
+different range count never skips or reads back the old layout's spans.
 
 The stage plan runs once per ``run_stage`` call, not once per range: with
 two or more ranges pending, the stage frame is persisted before the first
@@ -64,6 +67,28 @@ def read_manifest(out_dir: str) -> list[dict]:
     return recs
 
 
+def live_records(out_dir: str, stage: str | None = None,
+                 lineage: str | None = None) -> list[dict]:
+    """The records of ``stage``/``lineage`` (None: any) whose output is still
+    current, in manifest order.  A record is superseded by any LATER record
+    of its stage, under any lineage, whose [lo, hi) overlaps its span (the
+    rows were recomputed) or whose range_id is its own (the ``range=N``
+    directory was overwritten)."""
+    recs = read_manifest(out_dir)
+    live = []
+    for k, r in enumerate(recs):
+        if stage is not None and r["stage"] != stage:
+            continue
+        if lineage is not None and r["lineage"] != lineage:
+            continue
+        if not any(n["stage"] == r["stage"]
+                   and (n["range_id"] == r["range_id"]
+                        or (n["lo"] < r["hi"] and r["lo"] < n["hi"]))
+                   for n in recs[k + 1:]):
+            live.append(r)
+    return live
+
+
 def _cut_torn_tail(out_dir: str) -> None:
     """Drop an unterminated last line (a torn append) so the next record
     starts on a line of its own; its range has no record and recomputes."""
@@ -110,9 +135,10 @@ def run_stage(spark: SparkSession,
               lineage: str) -> dict:
     """Execute a stage range-by-range with skip-on-resume.
 
-    A range is done when the manifest holds a record for it with this stage,
-    lineage, range_id AND [lo, hi) span, and its directory has ``_SUCCESS``;
-    a re-run with a different range count recomputes every moved span.
+    A range is done when the manifest holds a live record for it with this
+    stage, lineage, range_id AND [lo, hi) span, and its directory has
+    ``_SUCCESS``; a re-run with a different range count recomputes every
+    moved span.
 
     ``df_fn()`` is called once.  With two or more pending ranges its frame
     is persisted before the first write, so the plan runs once and each
@@ -126,10 +152,8 @@ def run_stage(spark: SparkSession,
     """
     os.makedirs(out_dir, exist_ok=True)
     _cut_torn_tail(out_dir)
-    done = {
-        (r["range_id"], r["lo"], r["hi"]): r for r in read_manifest(out_dir)
-        if r["stage"] == stage and r["lineage"] == lineage
-    }
+    done = {(r["range_id"], r["lo"], r["hi"]): r
+            for r in live_records(out_dir, stage, lineage)}
     skipped, pending = [], []
     total = 0
     for rid, (lo, hi) in enumerate(ranges):
@@ -172,15 +196,12 @@ def load_stage(spark: SparkSession, out_dir: str,
                stage: str | None = None, lineage: str | None = None) -> DataFrame:
     """Read a stage's output back from the checkpoint store.
 
-    Reads ONLY the range directories recorded in the manifest for the given
-    stage/lineage — a shrunk range layout under a new lineage leaves stale
-    range=N directories on disk, and a bare glob would silently read them
-    back alongside fresh output.  Raises when no manifest record matches."""
-    recs = read_manifest(out_dir)
-    if stage is not None:
-        recs = [r for r in recs if r["stage"] == stage]
-    if lineage is not None:
-        recs = [r for r in recs if r["lineage"] == lineage]
+    Reads ONLY the range directories of the live records for the given
+    stage/lineage — a shrunk range layout leaves stale range=N directories
+    on disk, and a bare glob (or a superseded record) would silently read
+    them back alongside fresh output.  Raises when no live record
+    matches."""
+    recs = live_records(out_dir, stage, lineage)
     if not recs:
         raise FileNotFoundError(
             f"no manifest record for stage={stage!r} lineage={lineage!r} "

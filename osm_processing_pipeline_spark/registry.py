@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from . import worldspec as W
 from .datagen import oracle, oracle_geom as og, world
-from .functions import projection
+from .functions import cells, geometry as G, projection
 from .operators import classify, knn, spatial_join
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -102,12 +102,9 @@ def _apply_ladder(spark: SparkSession, df: DataFrame,
 def _reps_cte() -> str:
     """``reps``: each road's representative vertex (the middle one,
     ``k = nv // 2``; engine ``cells.rep_vertex``) and its grid cell."""
-    cd = oracle.fl(W.CELL_DEG)
     return f"""reps AS (
   SELECT osm_id, lon AS rep_lon, lat AS rep_lat,
-         GREATEST(0, LEAST({W.NY - 1}, CAST(floor(lat / {cd}) AS BIGINT))) * {W.NX}
-         + GREATEST(0, LEAST({W.NX - 1}, CAST(floor(lon / {cd}) AS BIGINT)))
-           AS rep_cell
+         {og.cell_of_point("lon", "lat")} AS rep_cell
   FROM verts WHERE k = nv // 2
 )"""
 
@@ -583,8 +580,7 @@ def _coast_sql_ctes() -> str:
     cover (coast, coast_cells_i, coast_cells)."""
     fl = oracle.fl
     W_ = W
-    n_, cd = W_.NX, fl(W_.CELL_DEG)
-    r = W_.BEACH_DIST_DEG
+    r = fl(W_.BEACH_DIST_DEG)
     yk = (f"({fl(W_.COAST_Y_BASE)} + CAST((k * {W_.COAST_Y_MUL}) "
           f"% {W_.COAST_Y_MOD} - {W_.COAST_Y_HALF} AS DOUBLE) "
           f"/ {fl(W_.COAST_Y_DEN)})")
@@ -597,20 +593,9 @@ def _coast_sql_ctes() -> str:
          CAST(k + 1 AS DOUBLE) / {fl(float(W_.COAST_N))} AS cx2, {yk1} AS cy2
   FROM (SELECT unnest(generate_series(0, {W_.COAST_N - 1})) AS k)
 ),
-coast_cells_i AS (
-  SELECT *, unnest(generate_series(i0, i1)) AS ci FROM (
-    SELECT *,
-      GREATEST(0, LEAST({n_ - 1}, CAST(floor((LEAST(cx1, cx2) - {fl(r)}) / {cd}) AS BIGINT))) AS i0,
-      GREATEST(0, LEAST({n_ - 1}, CAST(floor((GREATEST(cx1, cx2) + {fl(r)}) / {cd}) AS BIGINT))) AS i1,
-      GREATEST(0, LEAST({W_.NY - 1}, CAST(floor((LEAST(cy1, cy2) - {fl(r)}) / {cd}) AS BIGINT))) AS j0,
-      GREATEST(0, LEAST({W_.NY - 1}, CAST(floor((GREATEST(cy1, cy2) + {fl(r)}) / {cd}) AS BIGINT))) AS j1
-    FROM coast
-  )
-),
-coast_cells AS (
-  SELECT *, unnest(generate_series(j0, j1)) * {n_} + ci AS grid_id
-  FROM coast_cells_i
-)"""
+{og.cover_ctes("coast_cells", "coast",
+               f"(LEAST(cx1, cx2) - {r})", f"(LEAST(cy1, cy2) - {r})",
+               f"(GREATEST(cx1, cx2) + {r})", f"(GREATEST(cy1, cy2) + {r})")}"""
 
 
 def _coast_hits_cte(name: str) -> str:
@@ -917,8 +902,6 @@ def q06_kring_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     reinforced-pressure self-join (06_compute_reinforced_pressure_chunked.sql:4-16)
     re-expressed as a computable k-ring contribution join (no geometric
     self-join, no skew: contributions fan out 25x then hash-agg)."""
-    from .functions import cells as C
-
     r = world.roads_materialized(spark, sf_dir)
     s = world.segments(spark, sf_dir, r)
     g = world.grids(spark)
@@ -929,7 +912,7 @@ def q06_kring_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("grid_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("cnt"))
     )
     contrib = allcells.select(
-        F.explode(C.kring(F.col("grid_id"), 2)).alias("grid_id"),
+        F.explode(cells.kring(F.col("grid_id"), 2)).alias("grid_id"),
         F.col("cnt"),
     )
     smooth = contrib.groupBy("grid_id").agg(
@@ -1087,8 +1070,6 @@ def _endpoint_proximity_upgrade(r: DataFrame, cand: DataFrame,
     change a match.  Positions are dropped whole, never per-owner, so the
     min/max owner witnesses of every kept position are unchanged —
     exactness-preserving by construction."""
-    from .functions import geometry as G
-
     up = F.upper(F.col("ref"))
     hw_src = r.filter(F.col("ref").isNotNull()
                       & (up.contains("NH") | up.contains("SH")
@@ -1115,28 +1096,12 @@ def _endpoint_proximity_upgrade(r: DataFrame, cand: DataFrame,
         .agg(F.min("h_osm").alias("hmin"), F.max("h_osm").alias("hmax"))
     )
     d = W.ENDPOINT_DIST_DEG
-    M = int(round(1.0 / d))          # 512: d is an exact power-of-two fraction
-
-    def micro(lon: F.Column, lat: F.Column) -> tuple[F.Column, F.Column]:
-        mi = F.greatest(F.lit(0), F.least(F.lit(M - 1),
-                                          F.floor(lon / F.lit(d)).cast("long")))
-        mj = F.greatest(F.lit(0), F.least(F.lit(M - 1),
-                                          F.floor(lat / F.lit(d)).cast("long")))
-        return mi, mj
-
-    hi, hj = micro(F.col("hlon"), F.col("hlat"))
-    ring = F.flatten(F.transform(
-        F.sequence(F.lit(-1), F.lit(1)),
-        lambda dj: F.transform(
-            F.sequence(F.lit(-1), F.lit(1)),
-            lambda di: F.when(
-                (hi + di >= 0) & (hi + di < M) & (hj + dj >= 0) & (hj + dj < M),
-                (hj + dj) * M + (hi + di)))))
-    hn_cov = hn.withColumn(
-        "_mcell", F.explode(F.filter(ring, lambda c: c.isNotNull())))
+    m = cells.micro_grid_for_radius(d)     # 512: d is exactly one cell edge
+    hn_cov = hn.withColumn("_mcell", F.explode(
+        cells.kring_of_point(F.col("hlon"), F.col("hlat"), 1, m)))
     eps = _road_endpoints(cand)
-    ei, ej = micro(F.col("lon"), F.col("lat"))
-    eps = eps.withColumn("_mcell", ej * M + ei)
+    eps = eps.withColumn("_mcell",
+                         cells.cell_of_point(F.col("lon"), F.col("lat"), m))
     pairs = eps.join(hn_cov, "_mcell").filter(
         (F.col("hmin") != F.col("osm_id")) | (F.col("hmax") != F.col("osm_id")))
     d2 = G.point_dist2_deg(F.col("lon"), F.col("lat"), F.col("hlon"), F.col("hlat"))
@@ -1258,7 +1223,6 @@ def q11_raster_point_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7: ST_Value(rast, pt) at each road's representative vertex — point ->
     tile equi-join + vectorized pixel gather from binary tiles
     (hill_v2/03_compute_relief_from_raster.sql:17-56)."""
-    from .functions import cells
     from .operators import zonal
     from .sources.raster import raster_tiles
 
@@ -1997,8 +1961,6 @@ def q33_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     validation pack is for, so the exact variant stays the graded one."""
     from pyspark.sql import Window
 
-    from .functions import geometry as G
-
     s = world.segments(spark, sf_dir)
     totals = s.groupBy("osm_id").agg(
         F.min("highway").alias("highway"),
@@ -2096,22 +2058,20 @@ def q35_cluster_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     each cell's planar area scaled by cos(latitude at the cell center) via
     the shared trig-free Taylor tree (functions/geometry.cos_lat), floored
     per cell so the sum is order-free and engine-identical."""
-    from .functions import geometry as G
     from .operators import clusters
 
     comp = clusters.connected_components(_urban_cells(spark))
-    i = (F.col("grid_id") % W.NX).cast("long")
-    j = F.floor(F.col("grid_id") / W.NX).cast("long")
-    latc = (F.col("j").cast("double") + F.lit(0.5)) * F.lit(W.CELL_DEG)
-    cell_geo = F.floor(
-        F.lit((W.CELL_DEG * W.M_PER_DEG) ** 2) * G.cos_lat(latc)).cast("long")
-    return comp.select("component", i.alias("i"), j.alias("j")) \
+    i, j = cells.cell_ij(F.col("grid_id"))
+    _, latc = cells.cell_center(F.col("grid_id"))
+    cell_geo = F.floor(F.lit(W.CELL_M ** 2) * G.cos_lat(latc)).cast("long")
+    return comp.select("component", i.alias("i"), j.alias("j"),
+                       cell_geo.alias("cell_geo")) \
         .groupBy("component").agg(
         F.count("*").cast("long").alias("area_cells"),
         F.min("i").alias("bbox_i0"), F.max("i").alias("bbox_i1"),
         F.min("j").alias("bbox_j0"), F.max("j").alias("bbox_j1"),
         F.sum("i").alias("centroid_i_sum"), F.sum("j").alias("centroid_j_sum"),
-        F.sum(cell_geo).cast("long").alias("geo_area_m2"))
+        F.sum("cell_geo").cast("long").alias("geo_area_m2"))
 
 
 ORACLES["q35_cluster_dissolve"] = _q35_sql()
@@ -2434,13 +2394,9 @@ def q41_checkpoint_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ensure the stage ran (no-op resume when the manifest is complete)
     q38_checkpointed_pieces(spark, sf_dir).count()
     out_dir, lin, _ = _q38_store(sf_dir)
-    recs = [r for r in CP.read_manifest(out_dir)
-            if r["stage"] == _Q38_STAGE and r["lineage"] == lin]
-    latest = {}
-    for r in recs:
-        latest[r["range_id"]] = r
     rows = [(int(r["range_id"]), int(r["output_rows"]))
-            for r in latest.values() if r["output_rows"] > 0]
+            for r in CP.live_records(out_dir, _Q38_STAGE, lin)
+            if r["output_rows"] > 0]
     return spark.createDataFrame(rows, "range_id long, output_rows long")
 
 
@@ -2635,7 +2591,6 @@ def q44_hill_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     All signal math is int64 micro-units; the smoothing join is rural-only
     (the dense urban core is excluded BY THE SEMANTICS, so the micro-grid
     join cannot go quadratic in the hotspot)."""
-    from .functions import cells, geometry as G
     from .operators import zonal
     from .sources.raster import raster_tiles
 
@@ -2680,29 +2635,21 @@ def q44_hill_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CLAUDE.md), sig is one narrow row per road: localCheckpoint pays for
     # itself immediately (measured 13s -> 7.5s at sf0.1).
     sig = sig.localCheckpoint(eager=True)
-    inv = 1.0 / W.HILL_SMOOTH_DEG
+    m = cells.micro_grid_for_radius(W.HILL_SMOOTH_DEG)   # 64: one cell edge
     r2 = W.HILL_SMOOTH_DEG * W.HILL_SMOOTH_DEG
-    rural_pts = sig.filter("rural").select(
-        "osm_id", "rep_lon", "rep_lat", "signal_raw_micro",
-        F.floor(F.col("rep_lon") * F.lit(inv)).cast("long").alias("cx"),
-        F.floor(F.col("rep_lat") * F.lit(inv)).cast("long").alias("cy"))
-    ring = F.array(*[
-        F.struct((F.col("cx") + dx).alias("jx"), (F.col("cy") + dy).alias("jy"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
+    rural_pts = sig.filter("rural")
+    lon, lat = F.col("rep_lon"), F.col("rep_lat")
     a = rural_pts.select(
-        F.col("osm_id").alias("qa"), F.col("rep_lon").alias("qx"),
-        F.col("rep_lat").alias("qy"), F.explode(ring).alias("jc")
-    ).select("qa", "qx", "qy",
-             F.col("jc.jx").alias("jx"), F.col("jc.jy").alias("jy"))
+        F.col("osm_id").alias("qa"), lon.alias("qx"), lat.alias("qy"),
+        F.explode(cells.kring_of_point(lon, lat, 1, m)).alias("_cell"))
     b = rural_pts.select(
-        F.col("cx").alias("jx"), F.col("cy").alias("jy"),
-        F.col("rep_lon").alias("bx"), F.col("rep_lat").alias("by"),
-        "signal_raw_micro")
+        cells.cell_of_point(lon, lat, m).alias("_cell"),
+        lon.alias("bx"), lat.alias("by"), "signal_raw_micro")
     d2 = G.point_dist2_deg(F.col("qx"), F.col("qy"),
                            F.col("bx"), F.col("by"))
-    # equi-join on BOTH micro-cell coordinates: candidates are exactly the
-    # 3x3 ring, not a whole grid column
-    cand = a.join(b, ["jx", "jy"]).filter(d2 <= F.lit(r2))
+    # a partner within one cell edge lies in the 3x3 ring, so the
+    # candidates are exactly the ring's cells, joined on one key column
+    cand = a.join(b, "_cell").filter(d2 <= F.lit(r2))
     nbrs = cand.groupBy("qa").agg(
         F.sum("signal_raw_micro").cast("long").alias("sig_sum"),
         F.count("*").cast("long").alias("n_nbrs"))
@@ -2862,7 +2809,6 @@ def q46_persona_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     global min/max normalization (persona_v2_run.py:344-495,
     01_compute_parameter_scores.sql, 02_compute_persona_scores.sql,
     03_normalize_persona_scores.sql)."""
-    from .functions import cells
     from .operators import persona as P
     from .operators import scoring, zonal
     from .sources.raster import raster_tiles
@@ -2973,12 +2919,8 @@ def _q47_sql() -> str:
     cd = fl(W.CELL_DEG)
     cd2 = fl(W.CELL_DEG / 2.0)
     eps = f"({fl(W.DBSCAN_EPS_M)} / {fl(W.M_PER_DEG)})"
-    cell = (f"GREATEST(0, LEAST({W.NY - 1}, CAST(floor(cy / {cd}) AS BIGINT)))"
-            f" * {W.NX} + "
-            f"GREATEST(0, LEAST({W.NX - 1}, CAST(floor(cx / {cd}) AS BIGINT)))")
-    vcell = (f"GREATEST(0, LEAST({W.NY - 1}, CAST(floor(lat / {cd}) AS BIGINT)"
-             f")) * {W.NX} + "
-             f"GREATEST(0, LEAST({W.NX - 1}, CAST(floor(lon / {cd}) AS BIGINT)))")
+    cell = og.cell_of_point("cx", "cy")
+    vcell = og.cell_of_point("lon", "lat")
     return f"""WITH RECURSIVE {oracle.with_world('verts', 'feats')[5:]},
 vc AS (
   SELECT {vcell} AS grid_id, COUNT(*) AS cnt FROM verts GROUP BY 1
@@ -3053,7 +2995,6 @@ def q47_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped; deterministic labels (min core cell id)."""
     from pyspark.sql import Window
 
-    from .functions import cells
     from .operators import clusters
 
     wn = world.way_nodes(spark, sf_dir)
@@ -3071,11 +3012,11 @@ def q47_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(cells.cell_of_point(F.col("cx"), F.col("cy")).alias("pc")))
     # horizontal 5-cell line per pass: interior cells are core, the two tips
     # have a single eps-neighbor — genuine DBSCAN border cells
+    pi, _ = cells.cell_ij(F.col("pc"))
     clumps = (passes
               .select("pc", F.explode(F.sequence(F.lit(-2), F.lit(2)))
                       .alias("di"))
-              .filter((F.col("pc") % W.NX + F.col("di") >= 0)
-                      & (F.col("pc") % W.NX + F.col("di") < W.NX))
+              .filter((pi + F.col("di") >= 0) & (pi + F.col("di") < W.NX))
               .select((F.col("pc") + F.col("di")).alias("grid_id")))
     hills = (feats.filter(F.col("layer") == "hills_nodes")
              .select(cells.cell_of_point(F.col("cx"), F.col("cy"))
@@ -3354,8 +3295,6 @@ def q52_geodesic_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bit-identical metres.  Output per road: planar um, geodesic um, and
     the integer ppm ratio — a single map-side aggregation, no extra shuffle
     vs the planar-only query."""
-    from .functions import geometry as G
-
     s = world.segments(spark, sf_dir)
     planar = G.quantize_len_um(G.seg_len_m(
         F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")))
@@ -3400,8 +3339,6 @@ def q53_beach_scenery(spark: SparkSession, sf_dir: str) -> DataFrame:
     line-to-line DWithin semantics, distinct from lake/river polygon/point
     proximity.  The progressive 'exclude already-marked roads' filter of the
     reference is the EXISTS collapse here (distinct osm_id, order-free)."""
-    from .functions import cells
-
     r = world.roads_materialized(spark, sf_dir)
     s = world.segments(spark, sf_dir, r)
     coast = world.coastline_segments(spark)
@@ -3530,9 +3467,6 @@ def q55_geo_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame:
     and min(floor(sqrt(d2)*1000)) = floor(sqrt(min d2)*1000) because floor
     and a correctly-rounded sqrt are monotone — values identical to the
     oracle's per-candidate form."""
-    from .functions import cells
-    from .functions import geometry as G
-
     s = world.segments(spark, sf_dir)
     pts = (world.features(spark, sf_dir)
            .filter(F.col("layer") == "hills_nodes")
@@ -3648,8 +3582,6 @@ ORACLES["q56_mollweide_grid"] = _grid_area_sql(projection.mollweide_steps,
 # --------------------------------------------------------------------- q57
 def _q57_sql() -> str:
     fl = oracle.fl
-    cd = fl(W.CELL_DEG)
-    n_ = W.NX
     cross = og.point_in_poly_crossing("p.rep_lon", "p.rep_lat",
                                       "e.x1", "e.y1", "e.x2", "e.y2")
     corner = og.point_in_poly_crossing("g.x0", "g.y0",
@@ -3689,20 +3621,8 @@ road_extra AS (
          MAX(CASE WHEN layer = 'shrub' THEN 1 ELSE 0 END) AS shr
   FROM extra_hits GROUP BY osm_id
 ),
-admin_cells_i AS (
-  SELECT *, unnest(generate_series(i0, i1)) AS ci FROM (
-    SELECT admin_id, level,
-      GREATEST(0, LEAST({n_ - 1}, CAST(floor((cx - r) / {cd}) AS BIGINT))) AS i0,
-      GREATEST(0, LEAST({n_ - 1}, CAST(floor((cx + r) / {cd}) AS BIGINT))) AS i1,
-      GREATEST(0, LEAST({W.NY - 1}, CAST(floor((cy - r) / {cd}) AS BIGINT))) AS j0,
-      GREATEST(0, LEAST({W.NY - 1}, CAST(floor((cy + r) / {cd}) AS BIGINT))) AS j1
-    FROM admin
-  )
-),
-admin_cells AS (
-  SELECT admin_id, level, unnest(generate_series(j0, j1)) * {n_} + ci AS grid_id
-  FROM admin_cells_i
-),
+{og.cover_ctes("admin_cells", "admin", "(cx - r)", "(cy - r)",
+               "(cx + r)", "(cy + r)", keep="admin_id, level")},
 cell_admin AS (
   SELECT g.grid_id, ac.level
   FROM admin_cells ac
@@ -3748,8 +3668,6 @@ def q57_admin_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     against them is a cell-cover equi-join that broadcasts; shrub/protected
     are O(sf) features joined through the same two-phase cell-cover PIP as
     q03.  One osm_id shuffle for each rollup; no pair distinct anywhere."""
-    from .functions import cells, geometry as G
-
     r = world.roads_materialized(spark, sf_dir)
     rep = cells.rep_vertex()
     reps = r.select("osm_id", rep["lon"].alias("lon"), rep["lat"].alias("lat"))
@@ -3914,7 +3832,6 @@ def q58_persona_v1_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_persona_road_branches`` builder both composites call); the only new
     work is the formula ladder, pure Catalyst CASE expressions.  Scenery
     flags are existence semi-joins, no pair distinct."""
-    from .functions import cells, geometry as G
     from .operators import persona as P
 
     sfl = P.spark_fl
@@ -4105,8 +4022,6 @@ def q59_mercator_endpoint_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame
     emitted only for endpoints within the radius, where min over any
     complete candidate superset is identical in both engines;
     min(floor(sqrt(d2))) = floor(sqrt(min d2)) by monotonicity."""
-    from .functions import cells
-    from .functions import geometry as G
     r = world.roads_materialized(spark, sf_dir)
     rt = classify.road_type(F.col("ref"), F.col("highway"))
     bik = F.col("highway").isin(W.BIKABLE)
@@ -4133,15 +4048,15 @@ def q59_mercator_endpoint_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame
     # endpoint within dd (< cell edge) of a segment is within dd of its
     # bbox, so the bbox's covering cell is inside the endpoint's ring.
     cover_deg = W.MERC_DWITHIN_M / W.MERC_M_PER_DEG
-    M = cells.micro_grid_for_radius(cover_deg)
+    m = cells.micro_grid_for_radius(cover_deg)
     scov = hsegs.withColumn(
-        "_cell", F.explode(cells.micro_bbox_cover(
+        "_cell", F.explode(cells.bbox_cover(
             F.least("ax", "bx"), F.least("ay", "by"),
-            F.greatest("ax", "bx"), F.greatest("ay", "by"), M))) \
+            F.greatest("ax", "bx"), F.greatest("ay", "by"), m))) \
         .select("_cell", "pa_x", "pa_y", "pb_x", "pb_y")
     ecov = eps.withColumn(
-        "_cell", F.explode(cells.micro_kring_of_point(
-            F.col("lon"), F.col("lat"), M))) \
+        "_cell", F.explode(cells.kring_of_point(
+            F.col("lon"), F.col("lat"), 1, m))) \
         .select("_cell", "osm_id", "ep", "pe_x", "pe_y")
     d2 = G.seg_point_dist2_deg(F.col("pa_x"), F.col("pa_y"),
                                F.col("pb_x"), F.col("pb_y"),

@@ -8,11 +8,32 @@ twin of the batch q25 (tests assert equality via availableNow + memory sink).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                  "event_type string, value double, props string")
+
+
+def _drain(spark: SparkSession, events_dir: str,
+           build: Callable[[DataFrame], DataFrame], mode: str,
+           sink_table: str) -> DataFrame:
+    """Every availableNow job's scaffold: read the events parquet as a
+    stream of one file per trigger, apply ``build``, write it to the
+    in-memory ``sink_table`` in output ``mode``, drain to the end and return
+    the sink table."""
+    stream = (spark.readStream.schema(EVENTS_SCHEMA)
+              .option("maxFilesPerTrigger", 1)
+              .parquet(events_dir))
+    (build(stream).writeStream.format("memory")
+     .queryName(sink_table)
+     .outputMode(mode)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+    return spark.table(sink_table)
 
 
 def windowed_event_aggregation(stream: DataFrame) -> DataFrame:
@@ -35,21 +56,8 @@ def run_events_stream_available_now(spark: SparkSession, events_dir: str,
                                     sink_table: str = "stream_agg") -> DataFrame:
     """Drain the events parquet as a bounded stream (availableNow) into an
     in-memory sink; returns the final aggregate table."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    agg = windowed_event_aggregation(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(spark, events_dir, windowed_event_aggregation, "complete",
+                  sink_table)
 
 
 # ----------------------------------------------------------- late-data drop
@@ -151,20 +159,7 @@ def run_sliding_late_available_now(spark: SparkSession, stage_dir: str,
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
-        q = (
-            sliding_late_aggregation(stream)
-            .writeStream.format("memory")
-            .queryName(sink_table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return _drain(spark, stage_dir, sliding_late_aggregation, "append",
+                      sink_table)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink_table)

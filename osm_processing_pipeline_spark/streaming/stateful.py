@@ -73,21 +73,11 @@ def run_first_seen_available_now(spark, events_dir: str,
     """Drain events as a bounded multi-batch stream (one file per trigger);
     state carries across micro-batches.  Returns the final per-user rows
     (last update emitted per key)."""
-    from .jobs import EVENTS_SCHEMA
+    from .jobs import _drain
 
-    stream = (spark.readStream.schema(EVENTS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(events_dir))
-    q = (streaming_first_seen(stream)
-         .writeStream.format("memory")
-         .queryName(sink_table)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    t = _drain(spark, events_dir, streaming_first_seen, "update", sink_table)
     # update mode appends one row per (key, batch); keep each key's last
     # emission = the min-merged state (first_ts monotonically improves)
-    t = spark.table(sink_table)
     return batch_first_seen(
         t.select("user_id", F.col("first_ts").alias("ts"),
                  F.col("first_event").alias("event_type")))

@@ -89,7 +89,8 @@ def test_load_stage_ignores_stale_ranges_of_shrunk_layout(spark):
     got = CP.load_stage(spark, OUT, "pieces", lin_b)
     assert got.count() < total
     assert got.select(F.max("grid_id")).first()[0] < (NX * NY) // 2
-    # unfiltered, every recorded range is read — prove the stale dirs exist
+    # unfiltered, the live records of both lineages are read: layout A's
+    # second half is still on disk, its first half is superseded by B
     assert CP.load_stage(spark, OUT).count() > got.count()
     shutil.rmtree(OUT, ignore_errors=True)
 
@@ -223,6 +224,37 @@ def test_resume_with_a_different_range_count_recomputes_moved_spans(spark, tmp_p
     lin = CP.lineage_hash("ids", ["x"])
     back = CP.load_stage(spark, out, "ids", lin)
     assert back.count() == 64 == back.distinct().count()
+
+
+def _ids_back(spark, out):
+    return CP.load_stage(spark, out, "ids", CP.lineage_hash("ids", ["x"]))
+
+
+def test_shrinking_the_range_count_reads_back_only_the_new_layout(spark, tmp_path):
+    """8 then 4 ranges under one lineage: the 4-range records supersede the
+    8-range ones they overlap, so the stale range=4..7 directories are not
+    read back on top of the new layout (96 rows for 64 ids)."""
+    out = str(tmp_path / "ckpt")
+    _ids_stage(spark, out, n_ranges=8)
+    res = _ids_stage(spark, out, n_ranges=4)
+    assert res["computed"] == [0, 1, 2, 3] and res["rows"] == 64
+    back = _ids_back(spark, out)
+    assert back.count() == 64 == back.distinct().count()
+
+
+def test_growing_back_recomputes_the_spans_a_shrunk_run_overwrote(spark, tmp_path):
+    """8, then 4, then 8 ranges under one lineage: after the second run
+    range=0..3 hold the 4-range spans, so the first run's records are dead
+    and the third run recomputes all 8 ranges instead of skipping them."""
+    out = str(tmp_path / "ckpt")
+    _ids_stage(spark, out, n_ranges=8)
+    _ids_stage(spark, out, n_ranges=4)
+    res = _ids_stage(spark, out, n_ranges=8)
+    assert res["computed"] == list(range(8)) and not res["skipped"]
+    assert res["rows"] == 64
+    back = _ids_back(spark, out)
+    assert back.count() == 64 == back.distinct().count()
+    assert [r["range_id"] for r in CP.live_records(out, "ids")] == list(range(8))
 
 
 def _counted_ids(spark, n=64):

@@ -17,21 +17,32 @@ def _cell_at(x: float, y: float) -> int:
 
 
 def test_kring_complete_and_unique(spark):
+    """kring and the point-centred kring_of_point on every grid size in use
+    (the tiling grid, hill smoothing's 64, HAdj's 512), corners included;
+    the point is each cell's centre, so both rings must be the same set."""
     rng = np.random.default_rng(11)
-    ids = [int(v) for v in rng.integers(0, W.NX * W.NY, 20)]
-    for r in (1, 2, 8):
-        df = spark.createDataFrame([(c,) for c in ids], "cid long")
-        rows = df.select("cid", cells.kring(F.col("cid"), r).alias("ring")).collect()
-        for row in rows:
-            i0, j0 = row.cid % W.NX, row.cid // W.NX
-            expect = {
-                j * W.NX + i
-                for i in range(max(0, i0 - r), min(W.NX, i0 + r + 1))
-                for j in range(max(0, j0 - r), min(W.NY, j0 + r + 1))
-            }
-            got = list(row.ring)
-            assert len(got) == len(set(got)), "duplicate ring cells"
-            assert set(got) == expect, f"ring mismatch at {row.cid} r={r}"
+    for m in (W.NX, 64, 512):
+        ids = [int(v) for v in rng.integers(0, m * m, 20)] \
+            + [0, m - 1, m * m - m, m * m - 1]
+        df = spark.createDataFrame(
+            [(c, (c % m + 0.5) / m, (c // m + 0.5) / m) for c in ids],
+            "cid long, x double, y double")
+        for r in (1, 2, 8):
+            rows = df.select(
+                "cid", cells.kring(F.col("cid"), r, m).alias("ring"),
+                cells.kring_of_point(F.col("x"), F.col("y"), r, m)
+                .alias("pring")).collect()
+            for row in rows:
+                i0, j0 = row.cid % m, row.cid // m
+                expect = {
+                    j * m + i
+                    for i in range(max(0, i0 - r), min(m, i0 + r + 1))
+                    for j in range(max(0, j0 - r), min(m, j0 + r + 1))
+                }
+                for got in (list(row.ring), list(row.pring)):
+                    assert len(got) == len(set(got)), "duplicate ring cells"
+                    assert set(got) == expect, \
+                        f"ring mismatch at {row.cid} r={r} m={m}"
 
 
 def test_landmark_grid_classes(spark):

@@ -4,7 +4,10 @@ level-grouping property that keeps both engines' plans linear."""
 
 import math
 
+from pyspark.sql import functions as F
+
 from osm_processing_pipeline_spark import worldspec as W
+from osm_processing_pipeline_spark.functions import cells
 from osm_processing_pipeline_spark.functions import projection as P
 
 
@@ -144,12 +147,13 @@ def test_mercator_kernel_accuracy_sub_um():
             < 1e-6, (lon, lat)
 
 
-def test_micro_cover_ring_completeness():
+def test_micro_cover_ring_completeness(spark):
     """q59's candidate generation: a point within cover_deg (< 1/M) of a
     segment must share a micro-cell between its 3x3 ring and the segment's
     UNexpanded bbox cover.  Python mirror of the clamped floor arithmetic
-    in functions/cells.micro_* over a deterministic sweep of near-threshold
-    geometries (including world-border clamps)."""
+    of functions/cells (kring_of_point, bbox_cover at m = M) over a
+    deterministic sweep of near-threshold geometries (including world-border
+    clamps); the real Column functions must return the mirror's sets."""
     M = 512
 
     def clamp(v):
@@ -181,11 +185,26 @@ def test_micro_cover_ring_completeness():
             if 0.0 <= px <= 1.0 and 0.0 <= py <= 1.0:
                 cases.append((ax, ay, bx, by, px, py))
     cases += [(0.0, 0.0, 0.001, 0.0, 0.0005, 0.0005),      # border clamp
+              (0.0, 0.0, 0.001, 0.0, -0.0005, 0.0005),     # outside, clamped
               (0.9995, 0.9995, 1.0, 1.0, 0.9999, 0.9993)]
     assert len(cases) > 1000
+    want = []
     for ax, ay, bx, by, px, py in cases:
         s = bbox_cover(min(ax, bx), min(ay, by), max(ax, bx), max(ay, by))
         assert ring(px, py) & s, (ax, ay, bx, by, px, py)
+        want.append((ring(px, py), s))
+
+    c = F.col
+    got = spark.createDataFrame(
+        cases, "ax double, ay double, bx double, by double, "
+               "px double, py double").select(
+        cells.kring_of_point(c("px"), c("py"), 1, M).alias("ring"),
+        cells.bbox_cover(F.least("ax", "bx"), F.least("ay", "by"),
+                         F.greatest("ax", "bx"), F.greatest("ay", "by"),
+                         M).alias("cover")).collect()
+    for case, (ring_want, cover_want), row in zip(cases, want, got):
+        assert len(row.ring) == len(set(row.ring)), case
+        assert (set(row.ring), set(row.cover)) == (ring_want, cover_want), case
 
 
 def test_step_levels_linear_not_exponential():
