@@ -135,9 +135,9 @@ def cell_index(x: str, n: int = W.NX) -> str:
     return f"GREATEST(0, LEAST({n - 1}, CAST(floor({x} / {fl(1.0 / n)}) AS BIGINT)))"
 
 
-def cell_of_point(x: str, y: str, n: int = W.NX) -> str:
-    """Row-major cell id ``j * n + i`` of the point (x, y)."""
-    return f"{cell_index(y, n)} * {n} + {cell_index(x, n)}"
+def cell_of_point(x: str, y: str) -> str:
+    """Row-major tiling cell id ``j * NX + i`` of the point (x, y)."""
+    return f"{cell_index(y)} * {W.NX} + {cell_index(x)}"
 
 
 def cover_ctes(name: str, src: str, x0: str, y0: str, x1: str, y1: str,

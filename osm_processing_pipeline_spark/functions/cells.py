@@ -27,8 +27,9 @@ use, one per grid:
 No other engine module builds or decomposes a cell id or floors a
 coordinate onto one of these grids (``tests/test_grid_layout.py`` enforces
 it, allowing only a numpy kernel and a driver-side loop over plain ints);
-the DuckDB oracles have one twin, ``datagen/oracle_geom`` (``cell_index``,
-``cell_of_point``, ``cover_ctes``), which shares no text with this module.
+the DuckDB oracles have one twin, ``datagen/oracle_geom`` (``cell_index``
+on the tiling grid and q44's 64 grid, ``cell_of_point``, ``cover_ctes``),
+which shares no text with this module.
 
 Everything in this module is a pure Catalyst column expression (whole-stage
 codegen; no Python in the hot path).
@@ -70,9 +71,9 @@ def cell_id(i: Column, j: Column, m: int = NX) -> Column:
     return (j * F.lit(m) + i).cast("long")
 
 
-def cell_ij(cid: Column, m: int = NX) -> tuple[Column, Column]:
-    """(i, j) of a cell id — the inverse of ``cell_id``."""
-    return cid % F.lit(m), F.floor(cid / F.lit(m)).cast("long")
+def cell_ij(cid: Column) -> tuple[Column, Column]:
+    """(i, j) of a tiling cell id — the inverse of ``cell_id``."""
+    return cid % F.lit(NX), F.floor(cid / F.lit(NX)).cast("long")
 
 
 def cell_of_point(lon: Column, lat: Column, m: int = NX) -> Column:
@@ -170,24 +171,24 @@ def _ring(i: Column, j: Column, r: int, m: int) -> Column:
     return F.filter(ring, lambda c: c.isNotNull())
 
 
-def kring(cid: Column, r: int, m: int = NX) -> Column:
-    """array<long> of the (2r+1)^2 neighborhood of a cell, clipped to the
-    world border.
+def kring(cid: Column, r: int) -> Column:
+    """array<long> of the (2r+1)^2 neighborhood of a tiling cell, clipped to
+    the world border.
 
     This is the kNN / distance-join expansion primitive (north-rule kNN via
     k-ring) and the neighborhood-smoothing join key
     (sql/urban_pressure/06_compute_reinforced_pressure_chunked.sql:4-16).
     """
-    i, j = cell_ij(cid, m)
-    return _ring(i, j, r, m)
+    i, j = cell_ij(cid)
+    return _ring(i, j, r, NX)
 
 
-def kring_of_point(lon: Column, lat: Column, r: int, m: int = NX) -> Column:
-    """``kring(cell_of_point(lon, lat, m), r, m)`` without the round trip
-    through the id — the point-side key of a radius-sized micro-grid join:
-    with r = 1 and a radius of at most one cell edge, every partner's cell
-    (or every cell of its exact bbox cover) lies in the ring."""
-    return _ring(_index(lon, m), _index(lat, m), r, m)
+def kring_of_point(lon: Column, lat: Column, m: int) -> Column:
+    """The 3x3 ring around the point's cell on the m x m grid, clipped to
+    the world border — the point-side key of a radius-sized micro-grid
+    join: with a radius of at most one cell edge, every partner's cell (or
+    every cell of its exact bbox cover) lies in the ring."""
+    return _ring(_index(lon, m), _index(lat, m), 1, m)
 
 
 def disk_cover_of_point(lon: Column, lat: Column, radius_deg: float) -> Column:
@@ -204,5 +205,6 @@ def micro_grid_for_radius(radius_deg: float) -> int:
     fraction of CELL_DEG on the tiling cells makes the dense urban core
     quadratic (thousands of rows per hot cell); a micro-grid sized to the
     radius bounds each bucket by the true collision neighborhood (the q09
-    lesson).  Pass the result as ``m`` to the functions above."""
+    lesson).  Pass the result as ``m`` to ``cell_of_point``,
+    ``bbox_cover`` and ``kring_of_point``."""
     return 1 << int(math.floor(math.log2(1.0 / radius_deg)))

@@ -15,8 +15,10 @@ hash and the same [lo, hi) span are skipped — the exact analogue of the
 reference's committed chunks, but with lineage so a changed input or changed
 stage version invalidates stale checkpoints instead of silently reusing
 them.  A record stops being live once a later record of its stage overlaps
-its span or rewrites its ``range=N`` directory, so a re-run with a
-different range count never skips or reads back the old layout's spans.
+its span, or a later record of any stage rewrites its ``range=N``
+directory, so a re-run with a different range count never skips or reads
+back the old layout's spans, and two stages sharing one ``out_dir`` never
+read each other's rows.
 
 The stage plan runs once per ``run_stage`` call, not once per range: with
 two or more ranges pending, the stage frame is persisted before the first
@@ -71,9 +73,10 @@ def live_records(out_dir: str, stage: str | None = None,
                  lineage: str | None = None) -> list[dict]:
     """The records of ``stage``/``lineage`` (None: any) whose output is still
     current, in manifest order.  A record is superseded by any LATER record
-    of its stage, under any lineage, whose [lo, hi) overlaps its span (the
-    rows were recomputed) or whose range_id is its own (the ``range=N``
-    directory was overwritten)."""
+    whose range_id is its own, of any stage or lineage (the ``range=N``
+    directory, which carries no stage, was overwritten), or by a later
+    record of its own stage, under any lineage, whose [lo, hi) overlaps its
+    span (the rows were recomputed)."""
     recs = read_manifest(out_dir)
     live = []
     for k, r in enumerate(recs):
@@ -81,9 +84,9 @@ def live_records(out_dir: str, stage: str | None = None,
             continue
         if lineage is not None and r["lineage"] != lineage:
             continue
-        if not any(n["stage"] == r["stage"]
-                   and (n["range_id"] == r["range_id"]
-                        or (n["lo"] < r["hi"] and r["lo"] < n["hi"]))
+        if not any(n["range_id"] == r["range_id"]
+                   or (n["stage"] == r["stage"]
+                       and n["lo"] < r["hi"] and r["lo"] < n["hi"])
                    for n in recs[k + 1:]):
             live.append(r)
     return live

@@ -1098,7 +1098,7 @@ def _endpoint_proximity_upgrade(r: DataFrame, cand: DataFrame,
     d = W.ENDPOINT_DIST_DEG
     m = cells.micro_grid_for_radius(d)     # 512: d is exactly one cell edge
     hn_cov = hn.withColumn("_mcell", F.explode(
-        cells.kring_of_point(F.col("hlon"), F.col("hlat"), 1, m)))
+        cells.kring_of_point(F.col("hlon"), F.col("hlat"), m)))
     eps = _road_endpoints(cand)
     eps = eps.withColumn("_mcell",
                          cells.cell_of_point(F.col("lon"), F.col("lat"), m))
@@ -2466,7 +2466,7 @@ def _q44_sql() -> str:
     pop = (f"(px*37 + py*73) % 100 + CASE WHEN px >= {lo} AND px < {hi} "
            f"AND py >= {lo} AND py < {hi} THEN {W.URBAN_POP_BOOST} ELSE 0 END")
     built = "(px*91 + py*17) % 50"
-    inv = 1.0 / W.HILL_SMOOTH_DEG
+    k = int(1.0 / W.HILL_SMOOTH_DEG)     # the smoothing grid: edge = radius
     r2 = W.HILL_SMOOTH_DEG * W.HILL_SMOOTH_DEG
     semi = _semi_sql()
     d2 = og.point_dist2("a.rep_lon", "a.rep_lat", "b.rep_lon", "b.rep_lat")
@@ -2541,8 +2541,8 @@ sig AS (
 ),
 rural_pts AS (
   SELECT osm_id, rep_lon, rep_lat, signal_raw_micro,
-         CAST(floor(rep_lon * {fl(inv)}) AS BIGINT) AS cx,
-         CAST(floor(rep_lat * {fl(inv)}) AS BIGINT) AS cy
+         {og.cell_index("rep_lon", k)} AS cx,
+         {og.cell_index("rep_lat", k)} AS cy
   FROM sig WHERE rural
 ),
 nbrs AS (
@@ -2641,7 +2641,7 @@ def q44_hill_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     lon, lat = F.col("rep_lon"), F.col("rep_lat")
     a = rural_pts.select(
         F.col("osm_id").alias("qa"), lon.alias("qx"), lat.alias("qy"),
-        F.explode(cells.kring_of_point(lon, lat, 1, m)).alias("_cell"))
+        F.explode(cells.kring_of_point(lon, lat, m)).alias("_cell"))
     b = rural_pts.select(
         cells.cell_of_point(lon, lat, m).alias("_cell"),
         lon.alias("bx"), lat.alias("by"), "signal_raw_micro")
@@ -4056,7 +4056,7 @@ def q59_mercator_endpoint_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("_cell", "pa_x", "pa_y", "pb_x", "pb_y")
     ecov = eps.withColumn(
         "_cell", F.explode(cells.kring_of_point(
-            F.col("lon"), F.col("lat"), 1, m))) \
+            F.col("lon"), F.col("lat"), m))) \
         .select("_cell", "osm_id", "ep", "pe_x", "pe_y")
     d2 = G.seg_point_dist2_deg(F.col("pa_x"), F.col("pa_y"),
                                F.col("pb_x"), F.col("pb_y"),

@@ -257,6 +257,25 @@ def test_growing_back_recomputes_the_spans_a_shrunk_run_overwrote(spark, tmp_pat
     assert [r["range_id"] for r in CP.live_records(out, "ids")] == list(range(8))
 
 
+def test_stages_sharing_a_directory_never_read_each_others_ranges(spark, tmp_path):
+    """Range directories carry no stage name: when a second stage writes
+    range=0..1 into the same out_dir, the first stage's records for those
+    ranges are dead, so its read-back holds only its own surviving rows and
+    its re-run recomputes the overwritten ranges."""
+    out = str(tmp_path / "ckpt")
+    _ids_stage(spark, out, n_ranges=4)
+    lin = CP.lineage_hash("big", ["x"])
+    CP.run_stage(spark, "big", lambda: spark.range(1000, 1064), "id",
+                 CP.make_ranges(1000, 1064, 2), out, lin)
+    assert [r["range_id"] for r in CP.live_records(out, "ids")] == [2, 3]
+    ids = [r.id for r in _ids_back(spark, out).collect()]
+    assert sorted(ids) == list(range(32, 64))
+    res = _ids_stage(spark, out, n_ranges=4)
+    assert res["computed"] == [0, 1] and res["skipped"] == [2, 3]
+    assert res["rows"] == 64
+    assert sorted(r.id for r in _ids_back(spark, out).collect()) == list(range(64))
+
+
 def _counted_ids(spark, n=64):
     """A 64-id stage whose every evaluation adds the rows it produced to an
     accumulator (the mapInPandas is opaque, so the range filters stay above

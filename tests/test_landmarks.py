@@ -17,32 +17,41 @@ def _cell_at(x: float, y: float) -> int:
 
 
 def test_kring_complete_and_unique(spark):
-    """kring and the point-centred kring_of_point on every grid size in use
-    (the tiling grid, hill smoothing's 64, HAdj's 512), corners included;
-    the point is each cell's centre, so both rings must be the same set."""
+    """kring at several radii on the tiling grid, and the point-centred 3x3
+    kring_of_point on every grid size in use (the tiling grid, hill
+    smoothing's 64, HAdj's 512), corners included; the point is each cell's
+    centre, so at r = 1 both rings must be the same set."""
     rng = np.random.default_rng(11)
-    for m in (W.NX, 64, 512):
-        ids = [int(v) for v in rng.integers(0, m * m, 20)] \
+
+    def ids(m):
+        return [int(v) for v in rng.integers(0, m * m, 20)] \
             + [0, m - 1, m * m - m, m * m - 1]
+
+    def expect(cid, r, m):
+        i0, j0 = cid % m, cid // m
+        return {j * m + i
+                for i in range(max(0, i0 - r), min(m, i0 + r + 1))
+                for j in range(max(0, j0 - r), min(m, j0 + r + 1))}
+
+    def check(got, want, what):
+        assert len(got) == len(set(got)), f"duplicate ring cells: {what}"
+        assert set(got) == want, f"ring mismatch: {what}"
+
+    df = spark.createDataFrame([(c,) for c in ids(W.NX)], "cid long")
+    for r in (1, 2, 8):
+        for row in df.select("cid", cells.kring(F.col("cid"), r)
+                             .alias("ring")).collect():
+            check(list(row.ring), expect(row.cid, r, W.NX),
+                  f"kring {row.cid} r={r}")
+    for m in (W.NX, 64, 512):
         df = spark.createDataFrame(
-            [(c, (c % m + 0.5) / m, (c // m + 0.5) / m) for c in ids],
+            [(c, (c % m + 0.5) / m, (c // m + 0.5) / m) for c in ids(m)],
             "cid long, x double, y double")
-        for r in (1, 2, 8):
-            rows = df.select(
-                "cid", cells.kring(F.col("cid"), r, m).alias("ring"),
-                cells.kring_of_point(F.col("x"), F.col("y"), r, m)
-                .alias("pring")).collect()
-            for row in rows:
-                i0, j0 = row.cid % m, row.cid // m
-                expect = {
-                    j * m + i
-                    for i in range(max(0, i0 - r), min(m, i0 + r + 1))
-                    for j in range(max(0, j0 - r), min(m, j0 + r + 1))
-                }
-                for got in (list(row.ring), list(row.pring)):
-                    assert len(got) == len(set(got)), "duplicate ring cells"
-                    assert set(got) == expect, \
-                        f"ring mismatch at {row.cid} r={r} m={m}"
+        rows = df.select("cid", cells.kring_of_point(
+            F.col("x"), F.col("y"), m).alias("pring")).collect()
+        for row in rows:
+            check(list(row.pring), expect(row.cid, 1, m),
+                  f"kring_of_point {row.cid} m={m}")
 
 
 def test_landmark_grid_classes(spark):

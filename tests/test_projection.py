@@ -198,7 +198,7 @@ def test_micro_cover_ring_completeness(spark):
     got = spark.createDataFrame(
         cases, "ax double, ay double, bx double, by double, "
                "px double, py double").select(
-        cells.kring_of_point(c("px"), c("py"), 1, M).alias("ring"),
+        cells.kring_of_point(c("px"), c("py"), M).alias("ring"),
         cells.bbox_cover(F.least("ax", "bx"), F.least("ay", "by"),
                          F.greatest("ax", "bx"), F.greatest("ay", "by"),
                          M).alias("cover")).collect()
