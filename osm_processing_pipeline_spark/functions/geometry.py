@@ -35,6 +35,16 @@ def vertex_pairs() -> Column:
     )
 
 
+def envelope_overlaps(window: tuple) -> Column:
+    """Whether a road's vertex envelope overlaps the rectangle ``window``
+    (x0, y0, x1, y1) — the bbox test of an ST_MakeEnvelope scope."""
+    x0, y0, x1, y1 = window
+    lons = F.transform("vertices", lambda v: v["lon"])
+    lats = F.transform("vertices", lambda v: v["lat"])
+    return ((F.array_max(lons) >= D(x0)) & (F.array_min(lons) <= D(x1))
+            & (F.array_max(lats) >= D(y0)) & (F.array_min(lats) <= D(y1)))
+
+
 def seg_rect_t_interval(ax: Column, ay: Column, bx: Column, by: Column,
                         x0: Column, y0: Column, x1: Column, y1: Column,
                         ) -> tuple[Column, Column]:

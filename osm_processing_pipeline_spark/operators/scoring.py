@@ -51,11 +51,26 @@ def parse_lanes(lanes: Column) -> Column:
     )
 
 
+def total_len_um() -> Column:
+    """Aggregate: a road's total length in exact int64 micrometres, summed
+    over its segments."""
+    return F.sum(G.quantize_len_um(
+        G.seg_len_m(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
+    )).alias("total_len_um")
+
+
 def _way_lengths(segs: DataFrame) -> DataFrame:
-    return segs.groupBy("osm_id").agg(
-        F.sum(G.quantize_len_um(
-            G.seg_len_m(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
-        )).alias("total_len_um"))
+    return segs.groupBy("osm_id").agg(total_len_um())
+
+
+def node_way_edges(way_nodes: DataFrame) -> DataFrame:
+    """(node_id, way_id, highway, mid): way_nodes deduped to one row per
+    (node, way), with ``mid`` = 1 when the way passes through the node at an
+    interior vertex."""
+    return way_nodes.groupBy("node_id", "way_id").agg(
+        F.min("highway").alias("highway"),
+        F.max(F.when((F.col("seq") > 0) & (F.col("seq") < F.col("nv") - 1), 1)
+              .otherwise(0)).alias("mid"))
 
 
 def intersection_degradation(way_nodes: DataFrame, segs: DataFrame,
@@ -83,10 +98,7 @@ def intersection_degradation(way_nodes: DataFrame, segs: DataFrame,
     # branch (stats, type pivot, way-node pairs) derives from this ONE
     # subtree, so its exchange is computed once and reused (ReusedExchange)
     # instead of re-exploding the vertex arrays three times.
-    per_edge = way_nodes.groupBy("node_id", "way_id").agg(
-        F.min("highway").alias("highway"),
-        F.max(F.when((F.col("seq") > 0) & (F.col("seq") < F.col("nv") - 1), 1)
-              .otherwise(0)).alias("mid"))
+    per_edge = node_way_edges(way_nodes)
     # W3 pivot folded into the node-stats aggregate: the distinct road types
     # at a node are a tiny set (<= |W.HIERARCHY|), so the hierarchy-ranked
     # top-2 is sort_array(collect_set(struct(-rank, highway)))[0..1] —

@@ -948,13 +948,11 @@ def q07_intersection_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: shared-node intersection detection + categorization
     (01_find_and_categorize_intersections_v2.sql:52-73): >=2 distinct ways AND
     (>=3 ways OR >=2 road types OR a mid-way crossing)."""
-    wn = world.way_nodes(spark, sf_dir)
+    from .operators import scoring
+
     # two-phase: dedup (node, way) first -> single distinct at node level
     # (no Expand; see operators/scoring.intersection_degradation)
-    per_edge = wn.groupBy("node_id", "way_id").agg(
-        F.min("highway").alias("highway"),
-        F.max(F.when((F.col("seq") > 0) & (F.col("seq") < F.col("nv") - 1), 1)
-              .otherwise(0)).alias("mid"))
+    per_edge = scoring.node_way_edges(world.way_nodes(spark, sf_dir))
     stats = per_edge.groupBy("node_id").agg(
         F.count("*").alias("n_ways"),
         F.countDistinct("highway").alias("n_types"),
@@ -1075,18 +1073,14 @@ def _endpoint_proximity_upgrade(r: DataFrame, cand: DataFrame,
                       & (up.contains("NH") | up.contains("SH")
                          | up.contains("MDR")))
     if hw_window is not None:
-        wx0, wy0, wx1, wy1 = hw_window
-        hlons = F.transform("vertices", lambda v: v["lon"])
-        hlats = F.transform("vertices", lambda v: v["lat"])
-        hw_src = hw_src.filter(
-            (F.array_max(hlons) >= F.lit(wx0)) & (F.array_min(hlons) <= F.lit(wx1))
-            & (F.array_max(hlats) >= F.lit(wy0)) & (F.array_min(hlats) <= F.lit(wy1)))
+        hw_src = hw_src.filter(G.envelope_overlaps(hw_window))
     hverts = (
         hw_src
         .select(F.col("osm_id").alias("h_osm"), F.explode("vertices").alias("v"))
         .select("h_osm", F.col("v.lon").alias("hlon"), F.col("v.lat").alias("hlat"))
     )
     if hw_window is not None:
+        wx0, wy0, wx1, wy1 = hw_window
         hverts = hverts.filter(
             (F.col("hlon") >= F.lit(wx0)) & (F.col("hlon") <= F.lit(wx1))
             & (F.col("hlat") >= F.lit(wy0)) & (F.col("hlat") <= F.lit(wy1)))
@@ -1642,15 +1636,16 @@ GROUP BY 1, 2"""
 def q25_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window event aggregation (the batch twin of the streaming
     windowed agg in streaming/jobs.py)."""
+    from .streaming.jobs import event_sums
+
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    n_events, sum_value_milli = event_sums()
     return (
         e.groupBy(
             F.expr("CAST(unix_timestamp(ts) DIV 3600 AS BIGINT)").alias("hour_bucket"),
             "event_type")
-        .agg(F.count("*").cast("long").alias("n_events"),
-             F.countDistinct("user_id").cast("long").alias("n_users"),
-             F.sum(F.floor(F.col("value") * F.lit(1000.0)).cast("long"))
-              .cast("long").alias("sum_value_milli"))
+        .agg(n_events, F.countDistinct("user_id").cast("long").alias("n_users"),
+             sum_value_milli)
     )
 
 
@@ -1961,12 +1956,11 @@ def q33_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     validation pack is for, so the exact variant stays the graded one."""
     from pyspark.sql import Window
 
+    from .operators import scoring
+
     s = world.segments(spark, sf_dir)
-    totals = s.groupBy("osm_id").agg(
-        F.min("highway").alias("highway"),
-        F.sum(G.quantize_len_um(
-            G.seg_len_m(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
-        )).alias("total_len_um"))
+    totals = s.groupBy("osm_id").agg(F.min("highway").alias("highway"),
+                                     scoring.total_len_um())
     w = Window.partitionBy("highway").orderBy("total_len_um", "osm_id")
     wc = Window.partitionBy("highway")
     ranked = totals.select(
@@ -3151,24 +3145,33 @@ FROM (
 ) WHERE rn = 1"""
 
 
-@register("q50_streaming_first_seen")
-def q50_streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful STREAMING operator as a graded row: first-seen dedup
-    via applyInPandasWithState over a bounded multi-file stream (one file
-    per micro-batch, state carried across batches; streaming/stateful.py).
-    The streamed result equals the batch min per key exactly, so it has a
-    full SQL oracle — the streaming==batch methodology made hash-checked."""
+def _q50_stream_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The events staged as q50's stream: four files, one per micro-batch,
+    split by event so every user's events spread over all four batches and
+    the first-seen state really merges across them."""
     import os
 
-    from .streaming import stateful
-
-    d = f"{world.CACHE_DIR}/{world.cache_key(sf_dir)}/events_stream.parquet"
+    d = (f"{world.CACHE_DIR}/{world.cache_key(sf_dir)}"
+         f"/events_stream_by_event.parquet")
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         (spark.read.parquet(f"{sf_dir}/events.parquet")
-         .repartition(4, "user_id")
+         .repartition(4, "event_id")
          .write.mode("overwrite").parquet(d))
+    return d
+
+
+@register("q50_streaming_first_seen")
+def q50_streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stateful STREAMING aggregation as a graded row: first-seen per user
+    over a bounded multi-file stream (one file per micro-batch, state carried
+    across batches in Spark's state store; streaming/stateful.py).  The
+    streamed result equals the batch min per key exactly, so it has a full
+    SQL oracle — the streaming==batch methodology made hash-checked."""
+    from .streaming import stateful
+
     out = stateful.run_first_seen_available_now(
-        spark, d, sink_table=_sink_name("q50", sf_dir))
+        spark, _q50_stream_dir(spark, sf_dir),
+        sink_table=_sink_name("q50", sf_dir))
     return out.select("user_id",
                       F.unix_micros("first_ts").alias("first_ts_us"),
                       "first_event")
@@ -3838,11 +3841,7 @@ def q58_persona_v1_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = world.roads_materialized(spark, sf_dir)
     feats = world.features(spark, sf_dir)
 
-    lons = F.transform("vertices", lambda v: v["lon"])
-    lats = F.transform("vertices", lambda v: v["lat"])
     x0, y0, x1, y1 = W.V1_BBOX
-    bbox_ok = ((F.array_max(lons) >= F.lit(x0)) & (F.array_min(lons) <= F.lit(x1))
-               & (F.array_max(lats) >= F.lit(y0)) & (F.array_min(lats) <= F.lit(y1)))
     # The reference scopes EVERY v1 statement to the bbox
     # (01_compute_persona_base_scores_simplified.sql:28-31), so the gate is
     # pushed into every branch subtree here too: each branch is per-osm_id
@@ -3853,7 +3852,8 @@ def q58_persona_v1_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lesson holds — each branch re-filters from the columnar scan (cheap,
     # OS-cached, stays in codegen) faster than a 3 s blocking materialize
     # of 190k wide rows (measured both ways at sf0.1).
-    r_bbox = r.filter(F.col("highway").isin(W.BIKABLE) & bbox_ok)
+    r_bbox = r.filter(F.col("highway").isin(W.BIKABLE)
+                      & G.envelope_overlaps(W.V1_BBOX))
     s = world.segments(spark, sf_dir, r_bbox)
     wn = world.way_nodes(spark, sf_dir, r_bbox)
     rep = cells.rep_vertex()

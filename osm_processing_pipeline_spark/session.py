@@ -13,7 +13,7 @@ import sys
 from pyspark.sql import SparkSession
 
 RUNTIME_CONFS = {
-    # AQE: runtime coalesce + skew-join mitigation on top of our explicit salting
+    # AQE: runtime coalesce + skew-join mitigation (no query salts its keys)
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

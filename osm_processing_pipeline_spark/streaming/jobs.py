@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
@@ -36,15 +36,21 @@ def _drain(spark: SparkSession, events_dir: str,
     return spark.table(sink_table)
 
 
+def event_sums() -> tuple[Column, Column]:
+    """The per-group event aggregates (n_events, sum_value_milli): a row
+    count and a value sum milli-quantized to ints (exact, order-free)."""
+    return (F.count("*").cast("long").alias("n_events"),
+            F.sum(F.floor(F.col("value") * F.lit(1000.0)).cast("long"))
+             .cast("long").alias("sum_value_milli"))
+
+
 def windowed_event_aggregation(stream: DataFrame) -> DataFrame:
     """1-hour tumbling windows per event_type with a 1-hour watermark for
-    late data; value sums are milli-quantized ints (exact, order-free)."""
+    late data, aggregated by ``event_sums``."""
     return (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").cast("long").alias("n_events"),
-             F.sum(F.floor(F.col("value") * F.lit(1000.0)).cast("long"))
-              .cast("long").alias("sum_value_milli"))
+        .agg(*event_sums())
         .select(
             F.expr("CAST(unix_timestamp(w.start) DIV 3600 AS BIGINT)")
              .alias("hour_bucket"),
@@ -130,14 +136,12 @@ def stage_late_batches(spark: SparkSession, sf_dir: str, stage_dir: str) -> str:
 
 
 def sliding_late_aggregation(stream: DataFrame) -> DataFrame:
-    """2h windows sliding hourly per event_type, 45-minute watermark; value
-    sums milli-quantized (exact, order-free)."""
+    """2h windows sliding hourly per event_type, 45-minute watermark,
+    aggregated by ``event_sums``."""
     return (
         stream.withWatermark("ts", "45 minutes")
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").cast("long").alias("n_events"),
-             F.sum(F.floor(F.col("value") * F.lit(1000.0)).cast("long"))
-              .cast("long").alias("sum_value_milli"))
+        .agg(*event_sums())
         .select(F.col("w.start").cast("long").alias("win_start_s"),
                 "event_type", "n_events", "sum_value_milli")
     )

@@ -15,8 +15,8 @@ timestamps; same discipline as gen_sf1_docs.py):
   ~2.5M rows each while the windowed state stays at the seed's ~745
   sliding windows x 5 types (state is span-bound, throughput is
   row-bound — exactly the split a production watermark job shows).
-- user_id grows 100x with the rows (1.5k -> 150k): q50's
-  applyInPandasWithState state is keyed per user, so its state store
+- user_id grows 100x with the rows (1.5k -> 150k): q50's streaming
+  first-seen aggregation keeps its state per user, so its state store
   DOES grow 100x — the complementary stress.
 - ts strictly ascending in event_id (seed property; uniform gaps with a
   hash jitter), value 0.00-560.21, five uniform event types, the seed's

@@ -4,7 +4,10 @@ builders and the shared oracle chains.
 
 Every SQL execution a query runs — its eager ``localCheckpoint``s while it is
 built, then the final plan — is read back from the driver's SQL status
-store, so operators hidden behind a checkpoint are linted too.  No join
+store, so operators hidden behind a checkpoint are linted too, and so is
+every micro-batch of the streaming queries (q50, q54): per-key Python state
+(``FlatMapGroupsInPandasWithState``) is forbidden there, the built-in
+streaming aggregation keeps state in the JVM.  No join
 condition may contain ``array_intersect(``: folded into a join, it runs
 interpreted per candidate pair and again in the projection that keeps it
 (q16's ``_mid`` barrier keeps its filter out).  The driver
@@ -28,11 +31,14 @@ SHAPED = ["q01_road_grid_classification", "q02_tile_assignment",
           "q32_vector_tiles", "q33_length_percentiles",
           "q37_embedding_neardup", "q39_ivf_ann", "q42_fourlane",
           "q44_hill_composite", "q45_buffer_histogram", "q46_persona_v2",
-          "q51_analysis_summary", "q53_beach_scenery", "q56_mollweide_grid",
+          "q50_streaming_first_seen", "q51_analysis_summary",
+          "q53_beach_scenery", "q54_streaming_late_windows",
+          "q56_mollweide_grid",
           "q57_admin_bounds", "q58_persona_v1_simplified",
           "q59_mercator_endpoint_dwithin", "q60_mollweide_ellipsoidal",
           "q61_utm_grid_areas"]
-FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
+FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython",
+             "FlatMapGroupsInPandasWithState")
 # Spark jobs run while BUILDING each query with the world cache warm:
 # parquet schema reads, eager checkpoints, q46's bounds aggregate, and the
 # driver collect that feeds q27's union-find.  The persona pins hold the

@@ -118,7 +118,8 @@ def test_hot_cells_flags_urban_core(spark):
 
 
 def test_stateful_streaming_first_seen_matches_batch(spark, tmp_path):
-    """applyInPandasWithState dedup: multi-batch streaming state == batch twin."""
+    """First-seen state merged across micro-batches == the same builder
+    over the batch table."""
     import shutil
 
     from osm_processing_pipeline_spark.streaming import stateful
@@ -136,13 +137,26 @@ def test_stateful_streaming_first_seen_matches_batch(spark, tmp_path):
     for i in range(3):
         shutil.rmtree(d / f"chunk{i}")
     streamed = stateful.run_first_seen_available_now(spark, str(d)).toPandas()
-    batch = stateful.batch_first_seen(ev).toPandas()
+    batch = stateful.first_seen(ev).toPandas()
     s = streamed.sort_values("user_id").reset_index(drop=True)
     b = batch.sort_values("user_id").reset_index(drop=True)
     assert len(s) == len(b)
     assert (s["user_id"].values == b["user_id"].values).all()
     assert (s["first_ts"].values == b["first_ts"].values).all()
     assert (s["first_event"].values == b["first_event"].values).all()
+
+
+def test_q50_users_span_micro_batches(spark):
+    """q50 stages its stream split by event, one file per micro-batch, so a
+    user's events land in several batches and first-seen state really
+    merges across them (split by user, no user ever spans two)."""
+    from osm_processing_pipeline_spark import registry
+    d = registry._q50_stream_dir(spark, SF_SMOKE)
+    per_user = (spark.read.parquet(d)
+                .select("user_id", F.input_file_name().alias("batch"))
+                .groupBy("user_id")
+                .agg(F.countDistinct("batch").alias("n_batches")))
+    assert per_user.filter(F.col("n_batches") >= 2).count() > 0
 
 
 def test_late_window_stream_drops_and_withholds(spark, tmp_path):
