@@ -27,7 +27,7 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 HEADLINE = [
     "q01_road_grid_classification",
@@ -127,7 +127,7 @@ def run_suite(emit=print) -> dict:
     return out
 
 
-SCALE_COPIES = int(os.environ.get("SPARK_GRAFT_SCALE_COPIES", "16"))
+SCALE_COPIES = int(os.environ.get("SPARK_GRAFT_SCALE_COPIES", "4"))
 
 
 def run_flagship_scaled() -> dict:
@@ -148,17 +148,14 @@ def run_flagship_scaled() -> dict:
     # The scaled input is materialized once as a real table (untimed): at the
     # target scale the documents table IS stored input, and the job under
     # test reads it — replication preserves the urban-core skew exactly.
-    from osm_processing_pipeline_spark.datagen.world import CACHE_DIR
-    path = f"{CACHE_DIR}/scaled_{SCALE_COPIES}x_{_sf(SF_DIR)}"
-    # an interrupted write leaves a partial dataset without _SUCCESS — only
-    # reuse a cache that finished committing
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (base
-         .withColumn("copy", F.explode(F.sequence(F.lit(0), F.lit(SCALE_COPIES - 1))))
-         .withColumn("osm_id", F.col("osm_id") * SCALE_COPIES + F.col("copy"))
-         .drop("copy")
-         .repartition(256, "osm_id")
-         .write.mode("overwrite").parquet(path))
+    path = world.cached(
+        f"scaled_{SCALE_COPIES}x_{_sf(SF_DIR)}",
+        lambda p: base
+        .withColumn("copy", F.explode(F.sequence(F.lit(0), F.lit(SCALE_COPIES - 1))))
+        .withColumn("osm_id", F.col("osm_id") * SCALE_COPIES + F.col("copy"))
+        .drop("copy")
+        .repartition(256, "osm_id")
+        .write.mode("overwrite").parquet(p))
     r = spark.read.parquet(path)
     n_docs = r.count()
     g = world.grids(spark)
@@ -196,7 +193,7 @@ def run_scaling(levels=(1, 4), curve=(1, 2, 4, 8, 16, 32)) -> dict:
     table shows the saturation explicitly."""
     def run_level(n: int) -> dict:
         env = dict(os.environ, SPARK_GRAFT_CPUS=str(n), SPARK_GRAFT_SF_DIR=SF_DIR,
-                   SPARK_GRAFT_SCALE_COPIES=os.environ.get("SPARK_GRAFT_SCALE_COPIES", "4"))
+                   SPARK_GRAFT_SCALE_COPIES=str(SCALE_COPIES))
         p = subprocess.run([sys.executable, __file__, "--flagship-scaled"],
                            env=env, capture_output=True, text=True, check=True)
         line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")][-1]
@@ -234,7 +231,7 @@ def run_scaling(levels=(1, 4), curve=(1, 2, 4, 8, 16, 32)) -> dict:
 SENTINEL = "<!-- generated-head-end -->"
 
 
-def write_bench_md(summary: dict, suite: dict | None = None) -> None:
+def write_bench_md(summary: dict) -> None:
     lo, hi = summary["levels"]
     r = summary["results"]
     lines = [
@@ -277,24 +274,7 @@ def write_bench_md(summary: dict, suite: dict | None = None) -> None:
         "partitioning design targets.",
         "",
     ]
-    if suite is not None:
-        lines += [
-            f"## Per-query latency (suite at local[{suite['cpus']}], "
-            f"sf={suite['sf']}, steady-state, best-of-2 — the shared-host VM "
-            "shows 3-8x single-run spikes)",
-            "",
-            "| query | seconds |",
-            "|---|---|",
-        ]
-        for q in HEADLINE:
-            lines.append(f"| {q} | {suite['queries'][q]} |")
-        lines += [
-            "",
-            f"Flagship q01 throughput: {suite['value']} docs/sec "
-            f"({suite['docs']} docs).",
-            "",
-        ]
-    # Rewrite ONLY the generated head (scaling + per-query tables); preserve
+    # Rewrite ONLY the generated head (the scaling tables); preserve
     # every hand-curated section after the explicit sentinel — a --scaling
     # run must not clobber the round notes / sf1 rehearsal evidence.  Without
     # the sentinel there is no safe splice point, so refuse to write.
@@ -321,7 +301,7 @@ if __name__ == "__main__":
         # separately (element-wise best of multiple suite epochs) and
         # preserved by write_bench_md's tail splice
         s = run_scaling()
-        write_bench_md(s, None)
+        write_bench_md(s)
         print(json.dumps({k: v for k, v in s.items() if k != "results"}))
     else:
         res = run_suite()

@@ -14,6 +14,8 @@ chains are built with higher-order array functions, not windows).
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,7 +26,7 @@ from ..functions import cells, geometry as G
 # One-time materialization cache: at real scale the world IS the stored input
 # (an Iceberg documents table); deriving it per-query is test scaffolding, so
 # we write it once per sf_dir and read parquet afterwards.  Values are fully
-# deterministic, so caching cannot change results.
+# deterministic, so caching cannot change results.  Only ``cached`` names it.
 CACHE_DIR = os.environ.get("SPARK_GRAFT_WORLD_CACHE", "/tmp/osm_world_cache")
 
 L = F.lit
@@ -117,20 +119,37 @@ def roads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cache_key(sf_dir: str) -> str:
-    """The per-sf_dir directory name under CACHE_DIR (and in other
+    """The per-sf_dir directory name under the cache (and in other
     per-input scratch paths): the path with its slashes flattened."""
     return sf_dir.strip("/").replace("/", "_")
 
 
+def cached(rel: str, write: Callable[[str], None]) -> str:
+    """The path of the derived input ``rel`` under the cache of the current
+    ``DATA_VERSION``, written by ``write(path)`` unless it is complete.
+
+    Every derived input (world roads, raster tiles, stream replays, the
+    bench's scaled table) lives here, so a version bump re-derives all of
+    them and nothing reads a stale copy.  A directory counts as complete
+    only once it carries ``_SUCCESS``, which is set after ``write`` returns;
+    an interrupted write is cleared and redone on the next call."""
+    path = f"{CACHE_DIR}/v{W.DATA_VERSION}/{rel}"
+    marker = os.path.join(path, "_SUCCESS")
+    if not os.path.exists(marker):
+        shutil.rmtree(path, ignore_errors=True)
+        write(path)
+        open(marker, "a").close()
+    return path
+
+
 def roads_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """roads() materialized once per sf_dir under CACHE_DIR (parquet)."""
-    path = f"{CACHE_DIR}/{cache_key(sf_dir)}/roads.parquet"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # Write with enough files that a fresh scan parallelizes: parquet
-        # row groups don't split below the file level, so file count bounds
-        # the task count of every downstream narrow pipeline.
-        roads(spark, sf_dir).repartition(64, "osm_id") \
-            .write.mode("overwrite").parquet(path)
+    """roads() materialized once per sf_dir in the cache (parquet)."""
+    # Write with enough files that a fresh scan parallelizes: parquet row
+    # groups don't split below the file level, so file count bounds the task
+    # count of every downstream narrow pipeline.
+    path = cached(f"{cache_key(sf_dir)}/roads.parquet",
+                  lambda p: roads(spark, sf_dir).repartition(64, "osm_id")
+                  .write.mode("overwrite").parquet(p))
     return spark.read.parquet(path)
 
 

@@ -42,8 +42,7 @@ instead of exponential under Newton-iteration substitution.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from .. import worldspec as W
 from ..datagen.oracle import fl
@@ -95,16 +94,6 @@ def ref(name: str) -> E:
 
 def lit(v: float) -> E:
     return E("lit", float(v))
-
-
-def to_column(e: E) -> Column:
-    k = e.kind
-    if k == "lit":
-        return F.lit(e.args[0])
-    if k == "ref":
-        return F.col(e.args[0])
-    a, b = to_column(e.args[0]), to_column(e.args[1])
-    return {"add": a + b, "sub": a - b, "mul": a * b, "div": a / b}[k]
 
 
 def to_sql(e: E) -> str:

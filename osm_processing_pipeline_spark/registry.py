@@ -3145,33 +3145,22 @@ FROM (
 ) WHERE rn = 1"""
 
 
-def _q50_stream_dir(spark: SparkSession, sf_dir: str) -> str:
-    """The events staged as q50's stream: four files, one per micro-batch,
-    split by event so every user's events spread over all four batches and
-    the first-seen state really merges across them."""
-    import os
-
-    d = (f"{world.CACHE_DIR}/{world.cache_key(sf_dir)}"
-         f"/events_stream_by_event.parquet")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        (spark.read.parquet(f"{sf_dir}/events.parquet")
-         .repartition(4, "event_id")
-         .write.mode("overwrite").parquet(d))
-    return d
-
-
 @register("q50_streaming_first_seen")
 def q50_streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful STREAMING aggregation as a graded row: first-seen per user
     over a bounded multi-file stream (one file per micro-batch, state carried
     across batches in Spark's state store; streaming/stateful.py).  The
-    streamed result equals the batch min per key exactly, so it has a full
-    SQL oracle — the streaming==batch methodology made hash-checked."""
-    from .streaming import stateful
+    events are staged by ``event_id % N_BATCHES``, so every user's events
+    spread over the batches and the first-seen state really merges across
+    them.  The streamed result equals the batch min per key exactly, so it
+    has a full SQL oracle — the streaming==batch methodology made
+    hash-checked."""
+    from .streaming import jobs as SJ, stateful
 
+    stage = SJ.stage_batches(spark, sf_dir, "events_by_event",
+                             F.col("event_id") % SJ.N_BATCHES)
     out = stateful.run_first_seen_available_now(
-        spark, _q50_stream_dir(spark, sf_dir),
-        sink_table=_sink_name("q50", sf_dir))
+        spark, stage, sink_table=_sink_name("q50", sf_dir))
     return out.select("user_id",
                       F.unix_micros("first_ts").alias("first_ts_us"),
                       "first_event")
@@ -3363,7 +3352,7 @@ ORACLES["q53_beach_scenery"] = _q53_sql()
 # --------------------------------------------------------------------- q54
 def _q54_sql() -> str:
     from .streaming import jobs as SJ
-    nb1 = SJ.LATE_N_BATCHES - 1
+    nb1 = SJ.N_BATCHES - 1
     return f"""
 WITH e AS (
   SELECT event_id, epoch_us(ts) AS tus,
@@ -3400,7 +3389,8 @@ def q54_streaming_late_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode watermarked sliding windows with REAL late-data drop — the
     streaming semantic q25/q50 never exercise.  Events replay as four
     deterministic time-ordered micro-batches (8-day buckets; every 16th event
-    held back two batches), aggregated into 2h/1h sliding windows under a
+    held back two batches; staged once by ``jobs.stage_batches``),
+    aggregated into 2h/1h sliding windows under a
     45-minute watermark.  Each window is emitted exactly once when the
     watermark passes its end; two-batch stragglers are dropped by the
     late-row filter; windows still open at end-of-stream are withheld.  The
@@ -3410,8 +3400,8 @@ def q54_streaming_late_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001 and sf0.01)."""
     from .streaming import jobs as SJ
 
-    stage = f"{world.CACHE_DIR}/{world.cache_key(sf_dir)}/events_late_stream"
-    SJ.stage_late_batches(spark, sf_dir, stage)
+    stage = SJ.stage_batches(spark, sf_dir, "events_late_stream",
+                             SJ.late_batch_id())
     return SJ.run_sliding_late_available_now(
         spark, stage, sink_table=_sink_name("q54", sf_dir))
 

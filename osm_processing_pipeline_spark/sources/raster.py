@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import worldspec as W
+from ..datagen import world
 
 
 def _pixel_blocks(tx: np.ndarray, ty: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -45,13 +46,9 @@ def built_values(px: np.ndarray, py: np.ndarray) -> np.ndarray:
 def raster_tiles(spark: SparkSession) -> DataFrame:
     """(tile_id, tx, ty, pop_data binary, built_data binary) — materialized
     once (the tile table is input data, an Iceberg table at scale)."""
-    import os
-
-    from ..datagen.world import CACHE_DIR
-
-    path = f"{CACHE_DIR}/raster_tiles.parquet"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _raster_tiles_gen(spark).write.mode("overwrite").parquet(path)
+    path = world.cached("raster_tiles.parquet",
+                        lambda p: _raster_tiles_gen(spark).write
+                        .mode("overwrite").parquet(p))
     return spark.read.parquet(path)
 
 

@@ -4,17 +4,27 @@ The reference is strictly batch (SURVEY.md §1.3), so streaming here covers the
 engine-side surface a continuously-ingested document/event feed needs:
 watermarked tumbling-window aggregation whose results are the exact streaming
 twin of the batch q25 (tests assert equality via availableNow + memory sink).
+Every job drains through ``_drain``.  A replay that needs a fixed micro-batch
+sequence (q50 split by event, q54 by late batch) is staged once per
+``DATA_VERSION`` in the world cache by ``stage_batches``.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..datagen import world
+
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                  "event_type string, value double, props string")
+N_BATCHES = 4                           # micro-batches of every staged replay
+_STAGE_MTIME0 = 1600000000              # fixed ascending mtimes pin file order
 
 
 def _drain(spark: SparkSession, events_dir: str,
@@ -23,17 +33,57 @@ def _drain(spark: SparkSession, events_dir: str,
     """Every availableNow job's scaffold: read the events parquet as a
     stream of one file per trigger, apply ``build``, write it to the
     in-memory ``sink_table`` in output ``mode``, drain to the end and return
-    the sink table."""
-    stream = (spark.readStream.schema(EVENTS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(events_dir))
-    (build(stream).writeStream.format("memory")
-     .queryName(sink_table)
-     .outputMode(mode)
-     .trigger(availableNow=True)
-     .start()
-     .awaitTermination())
+    the sink table.
+
+    At these state sizes a drain's wall is micro-batch ORCHESTRATION more
+    than plan work: every trigger commits every state-store partition to
+    the checkpoint dir.  The state partition count is fixed from
+    spark.sql.shuffle.partitions at the first batch, so it is pinned to 4
+    for the drain (plenty for these state sizes; partitioning never changes
+    aggregate values) and restored after: 32 partitions spend ~8x the
+    commit I/O for zero parallelism benefit."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        stream = (spark.readStream.schema(EVENTS_SCHEMA)
+                  .option("maxFilesPerTrigger", 1)
+                  .parquet(events_dir))
+        (build(stream).writeStream.format("memory")
+         .queryName(sink_table)
+         .outputMode(mode)
+         .trigger(availableNow=True)
+         .start()
+         .awaitTermination())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink_table)
+
+
+def stage_batches(spark: SparkSession, sf_dir: str, name: str,
+                  batch: Column) -> str:
+    """The events of ``sf_dir`` staged in the world cache under ``name`` as
+    N_BATCHES single-file parquet batches, batch k holding the events whose
+    ``batch`` is k, with strictly ascending mtimes, so FileStreamSource
+    (which orders by modification time) replays exactly batch 0..N-1 one
+    file per trigger.
+
+    This staging is TEST SCAFFOLDING for a deterministic replay: coalesce(1)
+    pins one file per micro-batch so the oracle can model the replay
+    exactly.  A production ingest keeps its natural many-file batches (the
+    operators under test are file-layout-agnostic; only the replay
+    determinism needs single files)."""
+    def write(path: str) -> None:
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        for k in range(N_BATCHES):
+            # underscore-prefixed paths are invisible to the file source
+            tmp = os.path.join(path, f"_tmp{k}")
+            ev.filter(batch == k).coalesce(1).write.parquet(tmp)
+            dst = os.path.join(path, f"batch-{k:05d}.parquet")
+            shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
+            shutil.rmtree(tmp)
+            os.utime(dst, (_STAGE_MTIME0 + 10 * k,) * 2)
+
+    return world.cached(f"{world.cache_key(sf_dir)}/{name}", write)
 
 
 def event_sums() -> tuple[Column, Column]:
@@ -77,11 +127,9 @@ def run_events_stream_available_now(spark: SparkSession, events_dir: str,
 LATE_DELAY_MS = 45 * 60 * 1000          # withWatermark("ts", "45 minutes")
 LATE_WIN_S = 7200                       # window("ts", "2 hours", "1 hour")
 LATE_SLIDE_S = 3600
-LATE_N_BATCHES = 4
 LATE_BATCH_S = 8 * 86400                # 8-day ingestion buckets
 LATE_EPOCH0_S = 1704067200              # 2024-01-01 (events table start)
 LATE_STRAGGLER_MOD = 16                 # every 16th event arrives two batches late
-_LATE_STAGE_MTIME0 = 1600000000         # fixed ascending mtimes pin file order
 
 
 def late_batch_id() -> "F.Column":
@@ -93,46 +141,10 @@ def late_batch_id() -> "F.Column":
     so a one-batch straggler always lands while its window is still live in
     state — only a two-batch straggler is genuinely late-dropped."""
     tsec = F.unix_timestamp("ts")
-    base = F.least(F.lit(LATE_N_BATCHES - 1),
+    base = F.least(F.lit(N_BATCHES - 1),
                    F.floor((tsec - F.lit(LATE_EPOCH0_S)) / F.lit(LATE_BATCH_S)))
     return F.when(F.col("event_id") % LATE_STRAGGLER_MOD == 0,
-                  F.least(F.lit(LATE_N_BATCHES - 1), base + 2)).otherwise(base)
-
-
-def stage_late_batches(spark: SparkSession, sf_dir: str, stage_dir: str) -> str:
-    """Materialize the events table as LATE_N_BATCHES single-file parquet
-    batches with strictly ascending mtimes, so FileStreamSource (which
-    orders by modification time) replays exactly batch 0..N-1 one file per
-    trigger.  Idempotent via a _STAGED marker (underscore-prefixed files are
-    invisible to the file source).
-
-    This staging is TEST SCAFFOLDING for a deterministic replay: coalesce(1)
-    pins one file per micro-batch so the oracle can model the watermark
-    progression exactly.  A production ingest keeps its natural many-file
-    batches (the operator under test — sliding_late_aggregation — is
-    file-layout-agnostic; only the replay determinism needs single files)."""
-    import glob
-    import os
-    import shutil
-
-    marker = os.path.join(stage_dir, "_STAGED")
-    if os.path.exists(marker):
-        return stage_dir
-    if os.path.exists(stage_dir):
-        shutil.rmtree(stage_dir)
-    os.makedirs(stage_dir)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    b = late_batch_id()
-    for k in range(LATE_N_BATCHES):
-        tmp = f"{stage_dir}.tmp{k}"
-        ev.filter(b == k).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        dst = os.path.join(stage_dir, f"batch-{k:05d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (_LATE_STAGE_MTIME0 + 10 * k,) * 2)
-    open(marker, "w").close()
-    return stage_dir
+                  F.least(F.lit(N_BATCHES - 1), base + 2)).otherwise(base)
 
 
 def sliding_late_aggregation(stream: DataFrame) -> DataFrame:
@@ -151,19 +163,6 @@ def run_sliding_late_available_now(spark: SparkSession, stage_dir: str,
                                    sink_table: str = "stream_late") -> DataFrame:
     """Drain the staged batches one file per trigger in append mode: each
     emitted row is a window finalized by the watermark; windows still open at
-    end-of-stream are withheld (append-mode semantics).
-
-    The wall here is micro-batch ORCHESTRATION, not plan work: 5 trigger
-    rounds, each committing every state-store partition to the checkpoint
-    dir.  State partition count is pinned from spark.sql.shuffle.partitions
-    at the first batch, so it is dropped to 4 for this query (plenty for
-    the O(100) live window keys; partitioning never changes aggregate
-    values) and restored after — 32 partitions spend ~8x the commit I/O
-    for zero parallelism benefit at this state size."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        return _drain(spark, stage_dir, sliding_late_aggregation, "append",
-                      sink_table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    end-of-stream are withheld (append-mode semantics)."""
+    return _drain(spark, stage_dir, sliding_late_aggregation, "append",
+                  sink_table)

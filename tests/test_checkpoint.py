@@ -119,10 +119,13 @@ def test_job_checkpointed_lineage_follows_data_version(spark, tmp_path,
                                                        monkeypatch, capsys):
     """``job.py --checkpointed`` hashes the world's DATA_VERSION into its
     lineage: after a version bump every range recomputes instead of
-    resuming output computed from the old world."""
+    resuming output computed from the old world, and recomputes it from
+    roads materialized for the new version."""
     from osm_processing_pipeline_spark import job
     from osm_processing_pipeline_spark import worldspec as W
 
+    cache = tmp_path / "cache"
+    monkeypatch.setattr(world, "CACHE_DIR", str(cache))
     argv = ["--checkpointed", "--sf-dir", SF_SMOKE,
             "--out-dir", str(tmp_path / "ckpt"), "--ranges", "4"]
     assert job.main(argv) == 0
@@ -130,8 +133,12 @@ def test_job_checkpointed_lineage_follows_data_version(spark, tmp_path,
     assert job.main(argv) == 0
     assert "computed=0 skipped=4" in capsys.readouterr().err
     monkeypatch.setattr(W, "DATA_VERSION", W.DATA_VERSION + "-bumped")
+    roads = (cache / f"v{W.DATA_VERSION}" / world.cache_key(SF_SMOKE)
+             / "roads.parquet" / "_SUCCESS")
+    assert not roads.exists()
     assert job.main(argv) == 0
     assert "computed=4 skipped=0" in capsys.readouterr().err
+    assert roads.exists()
 
 
 def _ids_stage(spark, out, n_ranges=4):

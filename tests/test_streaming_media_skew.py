@@ -150,8 +150,8 @@ def test_q50_users_span_micro_batches(spark):
     """q50 stages its stream split by event, one file per micro-batch, so a
     user's events land in several batches and first-seen state really
     merges across them (split by user, no user ever spans two)."""
-    from osm_processing_pipeline_spark import registry
-    d = registry._q50_stream_dir(spark, SF_SMOKE)
+    d = SJ.stage_batches(spark, SF_SMOKE, "events_by_event",
+                         F.col("event_id") % SJ.N_BATCHES)
     per_user = (spark.read.parquet(d)
                 .select("user_id", F.input_file_name().alias("batch"))
                 .groupBy("user_id")
@@ -159,11 +159,55 @@ def test_q50_users_span_micro_batches(spark):
     assert per_user.filter(F.col("n_batches") >= 2).count() > 0
 
 
-def test_late_window_stream_drops_and_withholds(spark, tmp_path):
+def test_q50_drain_commits_four_state_partitions(spark):
+    """``_drain`` pins every stream's state store to 4 partitions, whatever
+    the session's shuffle partitions, and restores the session conf."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from osm_processing_pipeline_spark import registry
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.parts, self.done = [], False
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.parts += [op.numShufflePartitions
+                           for op in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done = True
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != "4"
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        registry.QUERIES["q50_streaming_first_seen"](spark, SF_SMOKE).collect()
+        deadline = time.time() + 30
+        while not listener.done and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.done
+    assert listener.parts and set(listener.parts) == {4}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_late_window_stream_drops_and_withholds(spark, tmp_path, monkeypatch):
     """Append-mode watermarking must (a) drop two-batch stragglers, (b)
     withhold windows the final watermark never closed, and (c) emit every
     window exactly once."""
-    stage = SJ.stage_late_batches(spark, SF_SMOKE, str(tmp_path / "late_stage"))
+    monkeypatch.setattr(world, "CACHE_DIR", str(tmp_path))
+    stage = SJ.stage_batches(spark, SF_SMOKE, "events_late_stream",
+                             SJ.late_batch_id())
     out = SJ.run_sliding_late_available_now(spark, stage, "t_late").toPandas()
     total_row_windows = 2 * spark.read.parquet(
         f"{SF_SMOKE}/events.parquet").count()
