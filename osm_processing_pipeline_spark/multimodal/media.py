@@ -1,16 +1,15 @@
-"""Multimodal columns: opaque binary media with typed metadata.
+"""Multimodal columns: opaque binary media decoded by an Arrow-batched kernel.
 
-Image/audio/video payloads are ``binary`` columns + a typed metadata struct;
-decode / feature-extract / resize run as Arrow-batched kernels over
-``mapInPandas``.  The actual codec libraries (PIL/ffmpeg/librosa) are NOT in
-this container, so the codec step is STUBBED: ``_decode_real`` raises
-NotImplementedError unless the library import succeeds, and tests exercise
-the deterministic fake-codec path.  The Spark-side plumbing — schema,
-partitioning, UDF signature, Arrow batch shape — is real and tested.
+``media_table`` explodes each document's ``media_refs`` into one row per
+image with a binary ``payload``; ``image_features`` decodes every payload
+and extracts its size, mean pixel and pixel checksum.  Both run as
+``mapInPandas`` kernels, so the Python work is batched over Arrow and no
+per-row UDF is planned.
 
-Fake image format (deterministic): 8-byte header = width:int32 LE,
-height:int32 LE, followed by width*height uint8 pixels generated from the
-media_ref hash.
+Payloads are synthesized deterministically from the ``media_ref`` hash (it
+stands in for an object-store fetch), so q49's DuckDB twin can rebuild every
+pixel.  Format: 8-byte header = width:int32 LE, height:int32 LE, followed by
+width*height uint8 pixels.
 """
 
 from __future__ import annotations
@@ -22,12 +21,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # pragma: no cover - PIL is absent in this container by design
-    from PIL import Image  # type: ignore
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
 
 
 def _ref_seed(ref: str) -> int:
@@ -45,7 +38,7 @@ def synthesize_payload(ref: str) -> bytes:
 
 
 def media_table(docs_with_media: DataFrame) -> DataFrame:
-    """documents -> media rows (doc_id, media_ref, payload, meta struct).
+    """documents -> media rows (doc_id, media_ref, payload).
     Payload synthesis is Arrow-batched (stands in for an object-store fetch)."""
     refs = docs_with_media.select(
         "doc_id", F.explode("media_refs").alias("media_ref"))
@@ -59,20 +52,10 @@ def media_table(docs_with_media: DataFrame) -> DataFrame:
                 "doc_id": pdf["doc_id"],
                 "media_ref": pdf["media_ref"],
                 "payload": payloads,
-                "format": ["fake-img"] * len(pdf),
             })
 
     return refs.mapInPandas(
-        gen, schema="doc_id string, media_ref string, payload binary, format string")
-
-
-def _decode_real(payload: bytes):  # pragma: no cover
-    """Real codec path — requires PIL, absent here by design."""
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "image codec not available in this environment; "
-            "use the fake-img path (format='fake-img')")
-    return Image.open(payload)
+        gen, schema="doc_id string, media_ref string, payload binary")
 
 
 def decode_fake(payload: bytes) -> tuple[int, int, np.ndarray]:
@@ -91,10 +74,8 @@ def image_features(media: DataFrame) -> DataFrame:
             if len(pdf) == 0:
                 continue
             rows = []
-            for doc_id, ref, payload, fmt in zip(
-                    pdf["doc_id"], pdf["media_ref"], pdf["payload"], pdf["format"]):
-                if fmt != "fake-img":
-                    _decode_real(payload)  # raises NotImplementedError
+            for doc_id, ref, payload in zip(
+                    pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
                 w, h, px = decode_fake(payload)
                 rows.append((doc_id, ref, w, h,
                              int(px.astype(np.int64).sum() * 1000) // (w * h),
@@ -107,27 +88,3 @@ def image_features(media: DataFrame) -> DataFrame:
         kernel, schema=("doc_id string, media_ref string, width int, "
                         "height int, mean_px_milli long, px_checksum long"))
 
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Resize plumbing (nearest-neighbor on the fake codec; real codecs would
-    slot into the same kernel).  Output schema mirrors the input media table."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for doc_id, ref, payload in zip(
-                    pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-                w, h, px = decode_fake(payload)
-                yi = (np.arange(out_h) * h // out_h)
-                xi = (np.arange(out_w) * w // out_w)
-                rp = px[yi][:, xi]
-                blob = (np.int32(out_w).tobytes() + np.int32(out_h).tobytes()
-                        + rp.tobytes())
-                out.append((doc_id, ref, blob, "fake-img"))
-            yield pd.DataFrame(out, columns=["doc_id", "media_ref",
-                                             "payload", "format"])
-
-    return media.mapInPandas(
-        kernel, schema="doc_id string, media_ref string, payload binary, format string")

@@ -42,6 +42,14 @@ def _tmpfs_ok() -> bool:
         return False
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical RAM (MemTotal), capped at 24 GiB: the
+    driver heap must fit in the host beside the Python workers."""
+    with open("/proc/meminfo") as f:
+        total_kb = int(f.readline().split()[1])
+    return f"{min(24 * 1024, total_kb // 2048)}m"
+
+
 def get_spark(app_name: str = "osm-spark-engine",
               cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -53,7 +61,8 @@ def get_spark(app_name: str = "osm-spark-engine",
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

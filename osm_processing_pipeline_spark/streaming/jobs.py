@@ -67,21 +67,31 @@ def stage_batches(spark: SparkSession, sf_dir: str, name: str,
     (which orders by modification time) replays exactly batch 0..N-1 one
     file per trigger.
 
-    This staging is TEST SCAFFOLDING for a deterministic replay: coalesce(1)
-    pins one file per micro-batch so the oracle can model the replay
-    exactly.  A production ingest keeps its natural many-file batches (the
-    operators under test are file-layout-agnostic; only the replay
-    determinism needs single files)."""
+    One write stages every batch: repartitioned on the batch id, each batch
+    lands whole in one task, whose one file under ``_b=k`` becomes
+    ``batch-0000k.parquet``.  A batch with no file or with several would
+    replay a different micro-batch sequence, so it raises.
+
+    This staging is TEST SCAFFOLDING for a deterministic replay: one file
+    per micro-batch lets the oracle model the replay exactly.  A production
+    ingest keeps its natural many-file batches (the operators under test
+    are file-layout-agnostic; only the replay determinism needs single
+    files)."""
     def write(path: str) -> None:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        # underscore-prefixed paths are invisible to the file source
+        tmp = os.path.join(path, "_parts")
+        (spark.read.parquet(f"{sf_dir}/events.parquet")
+         .withColumn("_b", batch).repartition(N_BATCHES, "_b")
+         .write.partitionBy("_b").parquet(tmp))
         for k in range(N_BATCHES):
-            # underscore-prefixed paths are invisible to the file source
-            tmp = os.path.join(path, f"_tmp{k}")
-            ev.filter(batch == k).coalesce(1).write.parquet(tmp)
+            parts = glob.glob(f"{tmp}/_b={k}/part-*.parquet")
+            if len(parts) != 1:
+                raise RuntimeError(f"stage {name}: batch {k} has "
+                                   f"{len(parts)} files, expected 1")
             dst = os.path.join(path, f"batch-{k:05d}.parquet")
-            shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
-            shutil.rmtree(tmp)
+            shutil.move(parts[0], dst)
             os.utime(dst, (_STAGE_MTIME0 + 10 * k,) * 2)
+        shutil.rmtree(tmp)
 
     return world.cached(f"{world.cache_key(sf_dir)}/{name}", write)
 

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for the flagship operators,
-with the plan properties that matter at scale (pushdown, broadcast, codegen
-spans, shuffle count) called out.  Run: python scripts/dump_plans.py"""
+"""Regenerate PLANS.md: formatted physical plans of the flagship queries as
+the registry builds them, with the plan properties that matter at scale
+(pushdown, broadcast, codegen spans, shuffle count) called out.
+Run: python scripts/dump_plans.py"""
 
 from __future__ import annotations
 
@@ -42,24 +43,18 @@ def props(plan: str, simple: str) -> str:
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
-    from osm_processing_pipeline_spark.datagen import world
-    from osm_processing_pipeline_spark.operators import classify, knn, spatial_join
+    from osm_processing_pipeline_spark import registry
     from osm_processing_pipeline_spark.session import get_spark
 
     spark = get_spark("plans", cores=8)
     # AQE hides codegen/strategy annotations in explain (isFinalPlan=false);
     # disable it for plan DUMPING only — runtime keeps AQE on (session.py)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    r = world.roads_materialized(spark, SF)
-    s = world.segments(spark, SF, r)
-    g = world.grids(spark)
 
     sections = []
 
-    def add(title, note, df):
-        p, simple = plan_of(df)
+    def add(title, note, name):
+        p, simple = plan_of(registry.QUERIES[name](spark, SF))
         sections.append(
             f"## {title}\n\n{note}\n\n{props(p, simple)}\n\n```\n"
             + "\n".join(p.splitlines()[:60]) + "\n```\n")
@@ -68,40 +63,33 @@ def main() -> None:
         "Cover explode -> broadcast grid join -> exact refine -> single wide "
         "agg; road totals folded narrowly over the vertex array (no second "
         "shuffle); final left join on uniform osm_id.",
-        classify.classify_roads(r, s, g))
+        "q01_road_grid_classification")
 
     add("q02 tile assignment",
         "Representative-point path is pure arithmetic (no join); min-cell "
         "path reuses the cover join with an associative MIN.",
-        classify.tile_assignment(r, s, g))
+        "q02_tile_assignment")
 
     add("q04 distance join (full/partial split)",
         "Feature disks classified per cell: interior cells match road-cell "
         "presence with no geometry; only boundary cells hit the per-segment "
-        "refine.",
-        spatial_join.distance_pairs_full_partial(
-            s, spatial_join.road_cells(s),
-            world.features(spark, SF).filter(F.col("layer") == "hills_nodes")
-            .select("feature_id", "cx", "cy"), 0.027))
+        "refine.  The hill pairs and the big-radius pass semi-join read one "
+        "checkpointed road-cell presence table.",
+        "q04_distance_join_scenery")
 
     add("q05 kNN (k-ring escalation)",
         "Ring-2 candidates -> window top-k -> completeness bound -> ring-8 "
         "escalation -> exhaustive final ring (still a cell equi-join, no "
         "cartesian).  All joins cell-equi; broadcast by size at these "
         "cardinalities.",
-        knn.knn_join(world.query_points(spark, SF),
-                     world.way_nodes(spark, SF, r)
-                     .select(F.col("node_id"), "lon", "lat").distinct(), 3))
-
-    from osm_processing_pipeline_spark import registry
-    from osm_processing_pipeline_spark.operators import similarity, zonal
+        "q05_knn")
 
     add("q09 endpoint proximity (radius-sized micro-grid)",
         "The join keys on a 512x512 micro-grid sized to the 1/512-deg "
         "radius: bucket density is bounded by the true collision "
         "neighborhood, so the dense urban core cannot go quadratic the way "
         "full-cell buckets do (measured 41 s -> ~9 s at sf0.1).",
-        registry.QUERIES["q09_endpoint_proximity_upgrade"](spark, SF))
+        "q09_endpoint_proximity_upgrade")
 
     add("q28 intersection degradation (single-shuffle node pivot)",
         "The node-level top-2 road-type pivot lives INSIDE the node-stats "
@@ -109,7 +97,7 @@ def main() -> None:
         "row_number window, no distinct subtree, no stats-top join, and no "
         "countDistinct Expand; per_edge shuffles once by node_id and once "
         "by way for the rollup (measured 8.1s -> 3.4s at sf0.1).",
-        registry.QUERIES["q28_intersection_degradation"](spark, SF))
+        "q28_intersection_degradation")
 
     add("q21 sharded-index brute-force top-k",
         "No driver collect and NO index broadcast: both sides packed into "
@@ -119,8 +107,7 @@ def main() -> None:
         "Arrow kernel, window re-rank over the k*n_shards partials.  Data "
         "moved is O(N*chunks + N*shards) block bytes, never O(N^2) pair "
         "rows.",
-        similarity.brute_force_topk(
-            spark.read.parquet(f"{SF}/embeddings.parquet"), 3))
+        "q21_embedding_topk")
 
     add("q39 trained-IVF ANN (GEMM assign/train/refine)",
         "FAISS-style IVF where every dense pass is an exact int64 Arrow "
@@ -133,7 +120,7 @@ def main() -> None:
         "candidate plus a full window sort and measured 100-218 s at 20k "
         "vectors vs 5.6 s here (the Catalyst pair survives as the "
         "equivalence oracle in tests).",
-        registry.QUERIES["q39_ivf_ann"](spark, SF))
+        "q39_ivf_ann")
 
     add("q16 MinHash+LSH dedup (carry-through verify)",
         "Signature -> band buckets -> candidate pairs -> exact-Jaccard "
@@ -145,7 +132,7 @@ def main() -> None:
         "x-set-size fan-out; Catalyst's size gate broadcasts the array "
         "dim while it fits and shuffle-joins beyond (measured 64 -> 20 s "
         "at sf0.1).",
-        registry.QUERIES["q16_minhash_lsh_dedup"](spark, SF))
+        "q16_minhash_lsh_dedup")
 
     add("q44 hill_v2 composite (sampling+signal+smoothing)",
         "Cumulative segment lengths and the per-sample segment locate are "
@@ -156,13 +143,13 @@ def main() -> None:
         "Arrow stage that decodes 4096 tile rows (the prior per-point "
         "tile-blob join moved gigabytes through Arrow for a 1 MiB raster; "
         "measured 12-17s -> 2-4s at sf0.1).",
-        registry.QUERIES["q44_hill_composite"](spark, SF))
+        "q44_hill_composite")
 
     add("q45 buffered pixel histogram",
         "Sample-window candidate pixels -> exact point-to-segment refine -> "
         "distinct (road, pixel) -> one wide rollup; all membership math in "
         "whole-stage codegen.",
-        zonal.buffer_class_histogram(s))
+        "q45_buffer_histogram")
 
     add("q32 global-tolerance Douglas-Peucker",
         "True DP (global tolerance vs the ORIGINAL line) runs as ONE "
@@ -170,7 +157,7 @@ def main() -> None:
         "— both zooms per pass, zero joins, zero shuffles before the "
         "per-zoom union.  The Catalyst-HOF phrasing of the same algorithm "
         "is CodegenFallback and measured 60 s at sf0.1 vs 1.7 s here.",
-        registry.QUERIES["q32_vector_tiles"](spark, SF))
+        "q32_vector_tiles")
 
     add("q55 geography-mode DWithin (kernel inside the aggregate)",
         "The exact cos-lat metre kernel evaluates INSIDE "
@@ -179,13 +166,13 @@ def main() -> None:
         "per candidate (measured 128 s at sf0.1 vs 3 s here); the "
         "pair-level min also absorbs duplicate shared-cell candidates so "
         "COUNT(DISTINCT) collapses to a plain count.",
-        registry.QUERIES["q55_geo_dwithin"](spark, SF))
+        "q55_geo_dwithin")
 
     add("q53 beach scenery (line-to-line DWithin)",
         "The coastline is an O(1)-size dimension: its radius-expanded cell "
         "cover is BROADCAST to the road-segment cover; exact seg-seg "
         "DWithin refine; existence collapse to distinct osm_id.",
-        registry.QUERIES["q53_beach_scenery"](spark, SF))
+        "q53_beach_scenery")
 
     add("q59 EPSG:3857 endpoint DWithin (projection before the join)",
         "The Web-Mercator forward series evaluates ONCE per endpoint / per "
@@ -195,13 +182,13 @@ def main() -> None:
         "q55 lesson).  Sub-cell radius, so the join keys on a radius-sized "
         "micro-grid: single-cell 3x3 ring on the point side, unexpanded "
         "bbox cover on the fat segment side.",
-        registry.QUERIES["q59_mercator_endpoint_dwithin"](spark, SF))
+        "q59_mercator_endpoint_dwithin")
 
     add("q47 DBSCAN (eps-ring + CC)",
         "eps-neighborhood via k-ring candidates + exact center distance "
         "(never a self cross-join); core filter; CC over the core graph; "
         "border attach by min core-neighbor component.",
-        registry.QUERIES["q47_dbscan_clusters"](spark, SF))
+        "q47_dbscan_clusters")
 
     sections.append(
         "## q54 streaming late windows (append-mode watermark)\n\n"

@@ -15,10 +15,12 @@ with zipfile.ZipFile('$ZIP', 'w') as z:
                 p = os.path.join(root, f)
                 z.write(p, p)
 "
+# session.get_spark's sizing rule: the process's CPU affinity (nproc, which
+# would otherwise read OMP_NUM_THREADS) and at least 8 shuffle partitions
+CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 exec spark-submit \
-  --master "local[${SPARK_GRAFT_CPUS:-32}]" \
-  --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_CPUS:-32}" \
-  --conf spark.sql.adaptive.enabled=true \
+  --master "local[$CPUS]" \
+  --conf spark.sql.shuffle.partitions="$(( CPUS > 8 ? CPUS : 8 ))" \
   --conf spark.ui.enabled=false \
   --py-files "$ZIP" \
   osm_processing_pipeline_spark/job.py "$@"

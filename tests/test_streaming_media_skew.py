@@ -1,12 +1,14 @@
-"""Streaming twin, multimodal plumbing, and salting equivalence tests."""
+"""Streaming twins, multimodal plumbing, and the world's urban-core skew."""
 
-import numpy as np
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from osm_processing_pipeline_spark import worldspec as W
 from osm_processing_pipeline_spark.datagen import world
+from osm_processing_pipeline_spark.functions import cells
 from osm_processing_pipeline_spark.multimodal import media as M
-from osm_processing_pipeline_spark.operators import skew, spatial_join
 from osm_processing_pipeline_spark.sources import documents as D
 from osm_processing_pipeline_spark.streaming import jobs as SJ
 from tests.conftest import SF_SMOKE
@@ -50,71 +52,24 @@ def test_media_pipeline_plumbing(spark):
     b = f2.sort_values("media_ref").reset_index(drop=True)
     assert (a.px_checksum.values == b.px_checksum.values).all()
 
-    resized = M.resize_images(media, 4, 4).toPandas()
-    w = np.frombuffer(resized.payload.iloc[0][:4], "<i4")[0]
-    h = np.frombuffer(resized.payload.iloc[0][4:8], "<i4")[0]
-    assert (w, h) == (4, 4)
-    assert len(resized.payload.iloc[0]) == 8 + 16
-
-
-def test_real_codec_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        M._decode_real(b"\x00")
-
-
-def test_salted_distinct_count_equals_naive(spark):
-    r = world.roads_materialized(spark, SF_SMOKE)
-    s = world.segments(spark, SF_SMOKE, r)
-    g = world.grids(spark)
-    pieces = spatial_join.segment_cell_pieces(s, g).select("grid_id", "osm_id")
-    naive = pieces.groupBy("grid_id").agg(
-        F.countDistinct("osm_id").cast("long").alias("n_distinct")).toPandas()
-    salted = skew.salted_distinct_count(pieces, "grid_id", "osm_id").toPandas()
-    a = naive.sort_values("grid_id").reset_index(drop=True)
-    b = salted.sort_values("grid_id").reset_index(drop=True)
-    assert len(a) == len(b) > 0
-    assert (a.n_distinct.values == b.n_distinct.values).all()
-
-
-def test_salted_join_equals_naive(spark):
-    import pyspark.sql.functions as F
-
-    from osm_processing_pipeline_spark.datagen import world
-    from osm_processing_pipeline_spark.functions import cells
-    from tests.conftest import SF_SMOKE
-    r = world.roads_materialized(spark, SF_SMOKE)
-    s = world.segments(spark, SF_SMOKE, r)
-    g = world.grids(spark)
-    cand = s.withColumn(
-        "grid_id",
-        F.explode(cells.segment_cover(s.ax, s.ay, s.bx, s.by)))
-    naive = cand.join(g, "grid_id").groupBy("grid_id").count().toPandas()
-    salted = skew.salted_join(cand, g, "grid_id", salt_src="osm_id") \
-        .groupBy("grid_id").count().toPandas()
-    a = naive.sort_values("grid_id").reset_index(drop=True)
-    b = salted.sort_values("grid_id").reset_index(drop=True)
-    assert a.equals(b)
-
 
 def test_hot_cells_flags_urban_core(spark):
-    from osm_processing_pipeline_spark.datagen import world
-    from osm_processing_pipeline_spark import worldspec as W
-    from tests.conftest import SF_SMOKE
-    from osm_processing_pipeline_spark.functions import cells
-    import pyspark.sql.functions as F
+    """The world plants dense-urban-cell skew: at least 3/4 of the
+    urban-core cells hold more than 20x the mean vertices per cell
+    (world-edge cells may be dense too: coordinate clamping piles boundary
+    vertices there)."""
     r = world.roads_materialized(spark, SF_SMOKE)
-    pts = r.select(F.explode("vertices").alias("v")).select(
-        cells.cell_of_point(F.col("v.lon"), F.col("v.lat")).alias("cell"))
-    n = pts.count()
-    hot = set(skew.hot_cells(pts, "cell", threshold_rows=n // (W.NX * W.NY) * 20))
-    assert hot, "urban core must trip the density threshold"
-    # the urban-core cells must be flagged (world-edge cells may also be hot:
-    # coordinate clamping piles boundary vertices there — equally real skew)
+    per_cell = (r.select(F.explode("vertices").alias("v"))
+                .groupBy(cells.cell_of_point(F.col("v.lon"), F.col("v.lat"))
+                         .alias("cell"))
+                .count().toPandas())
+    mean = per_cell["count"].sum() / (W.NX * W.NY)
+    hot = set(per_cell.cell[per_cell["count"] > 20 * mean])
     ulo = int(W.URBAN_LO / W.CELL_DEG)
     uhi = int(W.URBAN_HI / W.CELL_DEG)
     core = {j * W.NX + i for i in range(ulo, uhi) for j in range(ulo, uhi)}
     assert len(core & hot) >= len(core) * 3 // 4, \
-        f"only {len(core & hot)}/{len(core)} urban-core cells flagged hot"
+        f"only {len(core & hot)}/{len(core)} urban-core cells above 20x the mean"
 
 
 def test_stateful_streaming_first_seen_matches_batch(spark, tmp_path):
@@ -157,6 +112,24 @@ def test_q50_users_span_micro_batches(spark):
                 .groupBy("user_id")
                 .agg(F.countDistinct("batch").alias("n_batches")))
     assert per_user.filter(F.col("n_batches") >= 2).count() > 0
+
+
+def test_stage_batches_one_file_per_batch(spark, tmp_path, monkeypatch):
+    """A replay is staged as N_BATCHES single files with ascending mtimes;
+    a batch id that leaves a batch empty raises instead of staging a
+    shorter replay."""
+    monkeypatch.setattr(world, "CACHE_DIR", str(tmp_path))
+    d = SJ.stage_batches(spark, SF_SMOKE, "events_late_stream",
+                         SJ.late_batch_id())
+    files = [f"batch-{k:05d}.parquet" for k in range(SJ.N_BATCHES)]
+    assert sorted(os.listdir(d)) == ["_SUCCESS"] + files
+    mtimes = [os.path.getmtime(os.path.join(d, f)) for f in files]
+    assert mtimes == sorted(set(mtimes))
+    assert spark.read.parquet(d).count() == spark.read.parquet(
+        f"{SF_SMOKE}/events.parquet").count()
+    with pytest.raises(RuntimeError, match="batch 1 has 0 files"):
+        SJ.stage_batches(spark, SF_SMOKE, "one_batch", F.lit(0))
+    assert not list(tmp_path.rglob("one_batch/_SUCCESS"))
 
 
 def test_q50_drain_commits_four_state_partitions(spark):
