@@ -14,6 +14,7 @@ chains are built with higher-order array functions, not windows).
 from __future__ import annotations
 
 import os
+import re
 import shutil
 from collections.abc import Callable
 
@@ -132,10 +133,16 @@ def cached(rel: str, write: Callable[[str], None]) -> str:
     bench's scaled table) lives here, so a version bump re-derives all of
     them and nothing reads a stale copy.  A directory counts as complete
     only once it carries ``_SUCCESS``, which is set after ``write`` returns;
-    an interrupted write is cleared and redone on the next call."""
+    an interrupted write is cleared and redone on the next call.  A write
+    also removes the trees of other versions (``v<digit>...`` beside the
+    current one); no other name under the env-settable ``CACHE_DIR`` is
+    touched."""
     path = f"{CACHE_DIR}/v{W.DATA_VERSION}/{rel}"
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
+        for d in os.listdir(CACHE_DIR) if os.path.isdir(CACHE_DIR) else []:
+            if re.fullmatch(r"v\d.*", d) and d != f"v{W.DATA_VERSION}":
+                shutil.rmtree(os.path.join(CACHE_DIR, d), ignore_errors=True)
         shutil.rmtree(path, ignore_errors=True)
         write(path)
         open(marker, "a").close()

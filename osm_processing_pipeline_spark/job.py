@@ -4,8 +4,8 @@
         --query q01_road_grid_classification --sf-dir /root/testdata/sf0.01 \
         [--out /path/parquet] [--checkpointed --out-dir /ckpt --ranges 32]
 
-Runs a registered query (or the full pipeline stage-by-stage with
-per-partition checkpointing) on the cluster the session provides.  The
+Runs a registered query (or q38's pieces stage with per-range
+checkpointing) on the cluster the session provides.  The
 package is pure-Python + Arrow, so --py-files of the zipped package is the
 complete deployment unit (the reference's single-machine runner scripts,
 scripts/dev-runs/*, become this one parameterized job).
@@ -24,7 +24,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--out", default=None, help="write result parquet here")
     ap.add_argument("--checkpointed", action="store_true",
-                    help="run the flagship pieces stage with per-range checkpoints")
+                    help="run q38's pieces stage with per-range checkpoints")
     ap.add_argument("--out-dir", default="/tmp/osm_engine_ckpt")
     ap.add_argument("--ranges", type=int, default=32)
     args = ap.parse_args(argv)
@@ -38,20 +38,14 @@ def main(argv: list[str] | None = None) -> int:
     apply_runtime_confs(spark)
 
     if args.checkpointed:
-        from osm_processing_pipeline_spark.datagen import world
-        from osm_processing_pipeline_spark.operators import spatial_join
-        from osm_processing_pipeline_spark.plans import checkpoint as CP
         from osm_processing_pipeline_spark import worldspec as W
+        from osm_processing_pipeline_spark.plans import checkpoint as CP
+        from osm_processing_pipeline_spark.queries.roads import (
+            PIECES_STAGE, pieces_rollup)
 
-        def df_fn():
-            r = world.roads_materialized(spark, args.sf_dir)
-            s = world.segments(spark, args.sf_dir, r)
-            g = world.grids(spark)
-            return spatial_join.segment_cell_pieces(s, g) \
-                .select("osm_id", "grid_id", "piece_um")
-
-        lin = CP.lineage_hash("pieces", [args.sf_dir], version=W.DATA_VERSION)
-        res = CP.run_stage(spark, "pieces", df_fn, "grid_id",
+        lin = CP.lineage_hash(PIECES_STAGE, [args.sf_dir], version=W.DATA_VERSION)
+        res = CP.run_stage(spark, PIECES_STAGE,
+                           lambda: pieces_rollup(spark, args.sf_dir), "grid_id",
                            CP.make_ranges(0, W.NX * W.NY, args.ranges),
                            args.out_dir, lin)
         print(f"checkpointed stage: computed={len(res['computed'])} "

@@ -42,12 +42,16 @@ def _tmpfs_ok() -> bool:
         return False
 
 
-def _default_driver_mem() -> str:
-    """Half the host's physical RAM (MemTotal), capped at 24 GiB: the
-    driver heap must fit in the host beside the Python workers."""
+def mem_total_mib() -> int:
+    """The host's physical RAM (``/proc/meminfo`` MemTotal) in MiB."""
     with open("/proc/meminfo") as f:
-        total_kb = int(f.readline().split()[1])
-    return f"{min(24 * 1024, total_kb // 2048)}m"
+        return int(f.readline().split()[1]) // 1024
+
+
+def _default_driver_mem() -> str:
+    """Half the host's physical RAM, capped at 24 GiB: the driver heap must
+    fit in the host beside the Python workers."""
+    return f"{min(24 * 1024, mem_total_mib() // 2)}m"
 
 
 def get_spark(app_name: str = "osm-spark-engine",

@@ -14,7 +14,7 @@ import duckdb
 sys.path.insert(0, ".")
 
 from osm_processing_pipeline_spark import registry  # noqa: E402
-from osm_processing_pipeline_spark.session import get_spark  # noqa: E402
+from osm_processing_pipeline_spark.session import get_spark, mem_total_mib  # noqa: E402
 from tests.conftest import TABLES  # noqa: E402
 from tests.util import assert_frames_exact  # noqa: E402
 
@@ -26,7 +26,9 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark()
-    duck = duckdb.connect()
+    # the driver heap takes half the host (session._default_driver_mem), so
+    # DuckDB gets a quarter instead of its default 80%
+    duck = duckdb.connect(config={"memory_limit": f"{mem_total_mib() // 4}MiB"})
     for t in TABLES:
         duck.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "

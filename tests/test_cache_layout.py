@@ -76,3 +76,23 @@ def test_hand_rolled_cache_is_found(tmp_path):
         "osm_processing_pipeline_spark/a.py:8",
         "osm_processing_pipeline_spark/a.py:9",
         "bench.py:1", "bench.py:1"]
+
+
+def test_a_write_sweeps_only_other_versions(tmp_path, monkeypatch):
+    """A cache miss removes the trees ``cached`` wrote under other
+    versions (``v<digit>...``) and leaves every other name alone: the
+    current version's inputs, and whatever else the env-settable dir
+    holds."""
+    from osm_processing_pipeline_spark import worldspec as W
+    from osm_processing_pipeline_spark.datagen import world
+
+    monkeypatch.setattr(world, "CACHE_DIR", str(tmp_path))
+    current = f"v{W.DATA_VERSION}"
+    for d in ("v1/old", f"{current}/kept", "vscode-x", "notes"):
+        (tmp_path / d).mkdir(parents=True)
+    path = world.cached("new", lambda p: pathlib.Path(p).mkdir(parents=True))
+    assert path == f"{tmp_path}/{current}/new"
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(
+        [current, "notes", "vscode-x"])
+    assert sorted(p.name for p in (tmp_path / current).iterdir()) == [
+        "kept", "new"]

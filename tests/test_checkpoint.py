@@ -120,9 +120,11 @@ def test_job_checkpointed_lineage_follows_data_version(spark, tmp_path,
     """``job.py --checkpointed`` hashes the world's DATA_VERSION into its
     lineage: after a version bump every range recomputes instead of
     resuming output computed from the old world, and recomputes it from
-    roads materialized for the new version."""
-    from osm_processing_pipeline_spark import job
+    roads materialized for the new version.  The job writes q38's stage,
+    so its rows are q38's rows."""
+    from osm_processing_pipeline_spark import job, registry
     from osm_processing_pipeline_spark import worldspec as W
+    from osm_processing_pipeline_spark.queries.roads import PIECES_STAGE
 
     cache = tmp_path / "cache"
     monkeypatch.setattr(world, "CACHE_DIR", str(cache))
@@ -132,6 +134,10 @@ def test_job_checkpointed_lineage_follows_data_version(spark, tmp_path,
     assert "computed=4 skipped=0" in capsys.readouterr().err
     assert job.main(argv) == 0
     assert "computed=0 skipped=4" in capsys.readouterr().err
+    lin = CP.lineage_hash(PIECES_STAGE, [SF_SMOKE], version=W.DATA_VERSION)
+    q38 = registry.QUERIES["q38_checkpointed_pieces"](spark, SF_SMOKE)
+    rows = CP.load_stage(spark, str(tmp_path / "ckpt"), PIECES_STAGE, lin)
+    assert sorted(rows.select(*q38.columns).collect()) == sorted(q38.collect())
     monkeypatch.setattr(W, "DATA_VERSION", W.DATA_VERSION + "-bumped")
     roads = (cache / f"v{W.DATA_VERSION}" / world.cache_key(SF_SMOKE)
              / "roads.parquet" / "_SUCCESS")

@@ -50,7 +50,7 @@ def test_apply_ladder_sql_matches_loop(spark):
     """_apply_ladder's one-SQL CTE chain must be column-for-column identical
     to the per-stage selectExpr loop it replaced, with and without the
     folded ``final`` projection (q58's shape)."""
-    from osm_processing_pipeline_spark.registry import _apply_ladder
+    from osm_processing_pipeline_spark.queries.composites import _apply_ladder
 
     df = spark.createDataFrame(
         [(1, 10, 3), (2, 7, -4), (3, 0, 0)], "id long, a long, b long")
