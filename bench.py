@@ -86,7 +86,7 @@ def run_suite(emit=print) -> dict:
     from osm_processing_pipeline_spark.datagen import world
     from osm_processing_pipeline_spark.session import get_spark
 
-    spark = get_spark("bench", cores=CPUS, shuffle_partitions=max(CPUS, 8))
+    spark = get_spark("bench")
     # warm the input materialization (input data, not query work)
     n_docs = world.roads_materialized(spark, SF_DIR).count()
     world.roads_materialized(spark, WARM_DIR).count()
@@ -142,7 +142,7 @@ def run_flagship_scaled() -> dict:
     from osm_processing_pipeline_spark.operators import classify
     from osm_processing_pipeline_spark.session import get_spark
 
-    spark = get_spark("bench-scaled", cores=CPUS, shuffle_partitions=max(CPUS, 8))
+    spark = get_spark("bench-scaled")
     base = world.roads_materialized(spark, SF_DIR)
 
     # The scaled input is materialized once as a real table (untimed): at the

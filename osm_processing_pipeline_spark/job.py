@@ -38,16 +38,9 @@ def main(argv: list[str] | None = None) -> int:
     apply_runtime_confs(spark)
 
     if args.checkpointed:
-        from osm_processing_pipeline_spark import worldspec as W
-        from osm_processing_pipeline_spark.plans import checkpoint as CP
-        from osm_processing_pipeline_spark.queries.roads import (
-            PIECES_STAGE, pieces_rollup)
+        from osm_processing_pipeline_spark.queries.roads import run_pieces_stage
 
-        lin = CP.lineage_hash(PIECES_STAGE, [args.sf_dir], version=W.DATA_VERSION)
-        res = CP.run_stage(spark, PIECES_STAGE,
-                           lambda: pieces_rollup(spark, args.sf_dir), "grid_id",
-                           CP.make_ranges(0, W.NX * W.NY, args.ranges),
-                           args.out_dir, lin)
+        res, _ = run_pieces_stage(spark, args.sf_dir, args.out_dir, args.ranges)
         print(f"checkpointed stage: computed={len(res['computed'])} "
               f"skipped={len(res['skipped'])} rows={res['rows']}", file=sys.stderr)
         return 0

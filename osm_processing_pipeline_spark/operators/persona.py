@@ -18,14 +18,34 @@ tree (via F.expr) and the DuckDB tree are structurally identical — each
 IEEE op is correctly rounded on identical operands, hence bit-identical
 results.  POWER() is avoided (not correctly rounded): cubes/squares are
 written as explicit products.  Outputs are quantized to integer micro-units.
+
+The stages run as a ladder (each stage's columns read the previous
+stage's), rendered once by ``ladder_ctes``; ``v2_ladder`` / ``v1_ladder``
+name each composite's stages and ``v2_outputs`` / ``v1_outputs`` its output
+columns, so the Spark builders and their DuckDB twins share all four.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 
 def spark_fl(x: float) -> str:
     """Spark SQL double literal (the ``D`` suffix avoids DECIMAL parsing)."""
     return repr(float(x)) + "D"
+
+
+def ladder_ctes(stages: tuple[dict[str, str], ...], base: str
+                ) -> tuple[str, str]:
+    """The ladder as one CTE chain over relation ``base``:
+    ``_s0 AS (SELECT *, e AS c FROM base)``, then ``_s1`` over ``_s0`` and
+    so on.  Returns the chain's text and the name of its last stage."""
+    ctes, prev = [], base
+    for i, stage in enumerate(stages):
+        cols = ",\n       ".join(f"{e} AS {c}" for c, e in stage.items())
+        ctes.append(f"_s{i} AS (SELECT *,\n       {cols}\nFROM {prev})")
+        prev = f"_s{i}"
+    return ",\n".join(ctes), prev
 
 
 # Parameter-score CASE tables over the engine's road_type_v2 vocabulary
@@ -196,6 +216,37 @@ PARAM_COLS = ["score_urban_gate", "score_cruise_road", "score_offroad",
 PERSONA_COLS = ["mm", "cc", "tb", "tt"]
 
 
+def v2_ladder(fl) -> tuple[dict[str, str], ...]:
+    """The v2 stages in order: derived inputs, parameter scores, the
+    flow/remoteness products, personas."""
+    return (derived_exprs(fl), param_exprs(fl), param2_exprs(fl),
+            persona_exprs(fl))
+
+
+def bound_aggs() -> list[str]:
+    """Each persona's global MIN and MAX as ``<c>_mn`` / ``<c>_mx``."""
+    return [f"{agg}({c}) AS {c}_{sfx}" for c in PERSONA_COLS
+            for agg, sfx in (("MIN", "mn"), ("MAX", "mx"))]
+
+
+def v2_outputs(fl, bound: Callable[[str], str]) -> list[str]:
+    """The v2 output columns as ``expr AS name``: parameter scores drop
+    ``score_`` / ``scenic_`` and gain ``_micro``; personas gain ``_micro``
+    and, normalized, ``_norm_micro``.  ``bound`` spells a ``bound_aggs``
+    column: a literal collected on the driver, or a column of the twin's
+    bounds row."""
+    def norm(c: str) -> str:
+        return norm_expr(fl, c, bound(f"{c}_mn"), bound(f"{c}_mx"))
+
+    return (["osm_id", "road_type_v2", "fourlane"]
+            + [f"{quant(fl, c)} AS "
+               f"{c.replace('score_', '').replace('scenic_', '')}_micro"
+               for c in PARAM_COLS]
+            + [f"{quant(fl, c)} AS {c}_micro" for c in PERSONA_COLS]
+            + [f"{quant(fl, norm(c))} AS {c}_norm_micro"
+               for c in PERSONA_COLS])
+
+
 # ---------------------------------------------------------------- v1 simplified
 # The Phase-1 "simplified framework" (sql/road_persona/
 # 01_compute_persona_base_scores_simplified.sql): 2-3 factors per persona,
@@ -321,3 +372,17 @@ V1_FACTOR_COLS = ["f_road_quality", "f_straightness", "f_low_stress",
                   "f_scenery", "f_moderate_roads"]
 V1_PERSONA_COLS = ["v1_milemuncher", "v1_cornercraver", "v1_trailblazer",
                    "v1_tranquiltraveller"]
+
+
+def v1_ladder(fl) -> tuple[dict[str, str], ...]:
+    """The v1 stages in order: factors, gated raw personas, 0-100 bases."""
+    return v1_factor_exprs(fl), v1_raw_exprs(fl), v1_base_exprs(fl)
+
+
+def v1_outputs(fl) -> list[str]:
+    """The v1 output columns as ``expr AS name``: factors drop ``f_``,
+    bases drop ``v1_``; both gain ``_micro``."""
+    return (["osm_id", "road_type_i1", "CAST(n_scenery AS BIGINT) AS n_scenery"]
+            + [f"{quant(fl, c)} AS {c[2:]}_micro" for c in V1_FACTOR_COLS]
+            + [f"{quant(fl, f'{c}_base')} AS {c.replace('v1_', '')}_base_micro"
+               for c in V1_PERSONA_COLS])

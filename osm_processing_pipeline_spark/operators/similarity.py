@@ -346,17 +346,23 @@ def train_ivf_centroids(embeddings: DataFrame,
 
     q = (_quantized(embeddings).filter(F.col("nrm") > 0)
          .select("vec_id", "qv").localCheckpoint(eager=True))
-    seeds = q.orderBy("vec_id").limit(n_lists).collect()
-    cents = [list(r["qv"]) for r in seeds]
-    for _ in range(IVF_KMEANS_ITERS):
-        stats = (_centroid_partials(q, cents)
-                 .groupBy("j", "i")
-                 .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                 .collect())
-        nxt = [list(c) for c in cents]          # empty cluster keeps old
-        for r in stats:
-            nxt[r["j"]][r["i"]] = math.floor(r["s"] / r["n"])
-        cents = nxt
+    try:
+        seeds = q.orderBy("vec_id").limit(n_lists).collect()
+        cents = [list(r["qv"]) for r in seeds]
+        for _ in range(IVF_KMEANS_ITERS):
+            stats = (_centroid_partials(q, cents)
+                     .groupBy("j", "i")
+                     .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+                     .collect())
+            nxt = [list(c) for c in cents]          # empty cluster keeps old
+            for r in stats:
+                nxt[r["j"]][r["i"]] = math.floor(r["s"] / r["n"])
+            cents = nxt
+    finally:
+        # the centroids are driver-side lists now; release the checkpoint's
+        # blocks (DataFrame.unpersist leaves a localCheckpoint's RDD cached,
+        # so unpersist the RDD under its plan)
+        q._jdf.queryExecution().logical().rdd().unpersist(False)
     return cents
 
 

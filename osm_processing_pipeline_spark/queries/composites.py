@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from .. import worldspec as W
 from ..datagen import oracle, oracle_geom as og, world
 from ..functions import cells, geometry as G
-from ..operators import classify, spatial_join
+from ..operators import classify, persona as P, spatial_join
 from .shared import (
     _FOURLANE_SQL, _cl_sql_ctes, _coast_hits_cte, _coast_sql_ctes,
     _curvature_rollup, _dg_sql_ctes, _dist_hits_cte,
@@ -47,14 +47,9 @@ def _apply_ladder(spark: SparkSession, df: DataFrame,
     # race if two runs of the same query share one SparkSession
     view = f"{view}_{uuid.uuid4().hex[:8]}"
     df.createOrReplaceTempView(view)
-    ctes, prev = [], view
-    for i, stage in enumerate(stages):
-        cols = ",\n       ".join(f"{e} AS {c}" for c, e in stage.items())
-        ctes.append(f"_s{i} AS (SELECT *,\n       {cols}\nFROM {prev})")
-        prev = f"_s{i}"
+    ctes, last = P.ladder_ctes(stages, view)
     tail = ",\n       ".join(final) if final else "*"
-    out = spark.sql("WITH " + ",\n".join(ctes)
-                    + f"\nSELECT {tail}\nFROM {prev}")
+    out = spark.sql(f"WITH {ctes}\nSELECT {tail}\nFROM {last}")
     # Dataset analysis is eager, so the view's plan is already inlined —
     # drop it to keep the session catalog clean across repeated runs
     spark.catalog.dropTempView(view)
@@ -94,6 +89,31 @@ def _persona_road_branches(r: DataFrame, sub: DataFrame, s: DataFrame,
             dist_flag("rivers", W.DIST_RIVER_DEG, "_river"))
 
 
+def _persona_branch_sql() -> tuple[str, str, str]:
+    """The DuckDB twin of ``_persona_road_branches``: (CTEs, select
+    fragment, joins) for hadj, classification/setting, twistiness and the
+    hill/river hits over a spine aliased ``b``.  The joins open with
+    ``USING (osm_id)`` and end with ``ON`` joins, so a caller puts its own
+    ``USING`` joins before them (DuckDB rejects ``USING`` once a second
+    ``osm_id`` is in scope)."""
+    ctes = f"""{_hadj_sql_ctes()},
+{_cl_sql_ctes()},
+{_tw_sql_ctes()},
+{_dist_hits_cte('hl', 'hills_nodes', W.DIST_HILL_DEG)},
+{_dist_hits_cte('rv', 'rivers', W.DIST_RIVER_DEG)}"""
+    cols = f"""COALESCE(h.hadj_upgrade, FALSE) AS hadj_upgrade,
+         {_setting_sql()} AS road_setting,
+         COALESCE(tw_p.twist_permille, 0) AS twist_permille,
+         hl.osm_id IS NOT NULL AS near_hill,
+         rv.osm_id IS NOT NULL AS near_river"""
+    joins = """LEFT JOIN h_per h USING (osm_id)
+  LEFT JOIN cl_per c USING (osm_id)
+  LEFT JOIN tw_p USING (osm_id)
+  LEFT JOIN hl ON hl.osm_id = b.osm_id
+  LEFT JOIN rv ON rv.osm_id = b.osm_id"""
+    return ctes, cols, joins
+
+
 # --------------------------------------------------------------------- q29
 def _q29_sql() -> str:
     return f"""{oracle.with_world('roads_base')},
@@ -113,32 +133,13 @@ def q29_persona_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------- q46
 def _q46_sql() -> str:
-    from ..operators import persona as P
-
     fl = oracle.fl
     bik = oracle.str_list(W.BIKABLE)
-    drv = ",\n         ".join(f"{e} AS {c}"
-                              for c, e in P.derived_exprs(fl).items())
-    par = ",\n         ".join(f"{e} AS {c}"
-                              for c, e in P.param_exprs(fl).items())
-    par2 = ",\n         ".join(f"{e} AS {c}"
-                               for c, e in P.param2_exprs(fl).items())
-    per = ",\n         ".join(f"{e} AS {c}"
-                              for c, e in P.persona_exprs(fl).items())
-    bounds = ", ".join(f"MIN({c}) AS {c}_mn, MAX({c}) AS {c}_mx"
-                       for c in P.PERSONA_COLS)
-    out_params = ",\n       ".join(
-        f"{P.quant(fl, c)} AS {c.replace('score_', '').replace('scenic_', '')}"
-        f"_micro" for c in P.PARAM_COLS)
-    out_pers = ",\n       ".join(f"{P.quant(fl, c)} AS {c}_micro"
-                                 for c in P.PERSONA_COLS)
-    out_norms = ",\n       ".join(
-        f"{P.quant(fl, P.norm_expr(fl, c, f'pb.{c}_mn', f'pb.{c}_mx'))} "
-        f"AS {c}_norm_micro" for c in P.PERSONA_COLS)
+    br_ctes, br_cols, br_joins = _persona_branch_sql()
+    ladder, last = P.ladder_ctes(P.v2_ladder(fl), "inputs")
+    outs = ",\n       ".join(P.v2_outputs(fl, lambda k: f"pb.{k}"))
     return f"""{oracle.with_world('segs', 'grid', 'verts', 'feat_edges')},
-{_hadj_sql_ctes()},
-{_cl_sql_ctes()},
-{_tw_sql_ctes()},
+{br_ctes},
 {_dg_sql_ctes()},
 {_pressure_sql_ctes()},
 {_reps_cte()},
@@ -147,31 +148,21 @@ pr AS (
   FROM reps r JOIN pressures p ON p.grid_id = r.rep_cell
 ),
 {_pip_hits_cte('lk', 'lakes')},
-{_dist_hits_cte('hl', 'hills_nodes', W.DIST_HILL_DEG)},
-{_dist_hits_cte('rv', 'rivers', W.DIST_RIVER_DEG)},
 {_wc_sql_ctes()},
 inraw AS (
   SELECT b.osm_id, b.highway, b.ref, b.lanes, b.oneway,
-         COALESCE(h.hadj_upgrade, FALSE) AS hadj_upgrade,
-         {_setting_sql()} AS road_setting,
-         COALESCE(tw_p.twist_permille, 0) AS twist_permille,
+         {br_cols},
          dg.final_red_ppm,
          COALESCE(pr.pressure_micro, 0) AS pressure_micro,
-         hl.osm_id IS NOT NULL AS near_hill,
-         rv.osm_id IS NOT NULL AS near_river,
          lk.osm_id IS NOT NULL AS in_lake,
          CAST(COALESCE(wc.forest_px, 0) AS BIGINT) AS forest_px,
          CAST(COALESCE(wc.field_px, 0) AS BIGINT) AS field_px,
          CAST(COALESCE(wc.forest_px, 0) + COALESCE(wc.field_px, 0) AS BIGINT)
            AS total_px
   FROM (SELECT * FROM roads_base WHERE highway IN ({bik})) b
-  LEFT JOIN h_per h USING (osm_id)
-  LEFT JOIN cl_per c USING (osm_id)
-  LEFT JOIN tw_p USING (osm_id)
   LEFT JOIN dg USING (osm_id)
   LEFT JOIN pr USING (osm_id)
-  LEFT JOIN hl ON hl.osm_id = b.osm_id
-  LEFT JOIN rv ON rv.osm_id = b.osm_id
+  {br_joins}
   LEFT JOIN lk ON lk.osm_id = b.osm_id
   LEFT JOIN wc ON wc.osm_id = b.osm_id
 ),
@@ -183,32 +174,10 @@ inputs AS (
          near_hill, near_river, in_lake, forest_px, field_px, total_px
   FROM inraw
 ),
-drv AS (
-  SELECT *,
-         {drv}
-  FROM inputs
-),
-par AS (
-  SELECT *,
-         {par}
-  FROM drv
-),
-par2 AS (
-  SELECT *,
-         {par2}
-  FROM par
-),
-per AS (
-  SELECT *,
-         {per}
-  FROM par2
-),
-pb AS (SELECT {bounds} FROM per)
-SELECT osm_id, road_type_v2, fourlane,
-       {out_params},
-       {out_pers},
-       {out_norms}
-FROM per, pb"""
+{ladder},
+pb AS (SELECT {", ".join(P.bound_aggs())} FROM {last})
+SELECT {outs}
+FROM {last}, pb"""
 
 
 @register("q46_persona_v2", _q46_sql())
@@ -221,7 +190,6 @@ def q46_persona_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     global min/max normalization (persona_v2_run.py:344-495,
     01_compute_parameter_scores.sql, 02_compute_persona_scores.sql,
     03_normalize_persona_scores.sql)."""
-    from ..operators import persona as P
     from ..operators import scoring, zonal
     from ..sources.raster import raster_tiles
 
@@ -296,61 +264,30 @@ def q46_persona_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(scoring.FOURLANE).alias("fourlane"))
     # the whole 4-stage ladder as ONE analyzed statement (see _apply_ladder:
     # a per-stage selectExpr loop re-analyzes the deep join tree per stage)
-    d = _apply_ladder(spark, inputs,
-                      (P.derived_exprs(sfl), P.param_exprs(sfl),
-                       P.param2_exprs(sfl), P.persona_exprs(sfl)),
-                      "_q46_inputs")
+    d = _apply_ladder(spark, inputs, P.v2_ladder(sfl), "_q46_inputs")
     # two-pass normalization: materialize once (lineage truncation), collect
     # global bounds on the driver, fold back as literals
     # (persona_v2_run.py:264-339)
     d = d.localCheckpoint(eager=True)
-    aggs = []
-    for c in P.PERSONA_COLS:
-        aggs += [F.min(c).alias(f"{c}_mn"), F.max(c).alias(f"{c}_mx")]
-    b = d.agg(*aggs).first()
-    out_cols = [F.col("osm_id"), F.col("road_type_v2"), F.col("fourlane")]
-    for c in P.PARAM_COLS:
-        name = c.replace("score_", "").replace("scenic_", "") + "_micro"
-        out_cols.append(F.expr(P.quant(sfl, c)).alias(name))
-    for c in P.PERSONA_COLS:
-        out_cols.append(F.expr(P.quant(sfl, c)).alias(f"{c}_micro"))
-    for c in P.PERSONA_COLS:
-        mn, mx = sfl(b[f"{c}_mn"]), sfl(b[f"{c}_mx"])
-        out_cols.append(
-            F.expr(P.quant(sfl, P.norm_expr(sfl, c, mn, mx)))
-            .alias(f"{c}_norm_micro"))
-    return d.select(*out_cols)
+    b = d.agg(*map(F.expr, P.bound_aggs())).first()
+    return d.selectExpr(*P.v2_outputs(sfl, lambda k: sfl(b[k])))
 
 
 # --------------------------------------------------------------------- q58
 def _q58_sql() -> str:
-    from ..operators import persona as P
-
     fl = oracle.fl
     x0, y0, x1, y1 = W.V1_BBOX
     bik = oracle.str_list(W.BIKABLE)
-    facs = ",\n         ".join(f"{e} AS {c}"
-                               for c, e in P.v1_factor_exprs(fl).items())
-    raws = ",\n         ".join(f"{e} AS {c}"
-                               for c, e in P.v1_raw_exprs(fl).items())
-    bases = ",\n         ".join(f"{e} AS {c}"
-                                for c, e in P.v1_base_exprs(fl).items())
-    out_facs = ",\n       ".join(
-        f"{P.quant(fl, c)} AS {c[2:]}_micro" for c in P.V1_FACTOR_COLS)
-    out_bases = ",\n       ".join(
-        f"{P.quant(fl, f'{c}_base')} AS {c.replace('v1_', '')}_base_micro"
-        for c in P.V1_PERSONA_COLS)
+    br_ctes, br_cols, br_joins = _persona_branch_sql()
+    ladder, last = P.ladder_ctes(P.v1_ladder(fl), "in58")
+    outs = ",\n       ".join(P.v1_outputs(fl))
     return f"""{oracle.with_world('verts', 'segs', 'grid', 'feat_edges')},
-{_hadj_sql_ctes()},
-{_cl_sql_ctes()},
-{_tw_sql_ctes()},
+{br_ctes},
 {_coast_sql_ctes()},
 {_coast_hits_cte('bc')},
 {_pip_hits_cte('fo', 'forest')},
 {_pip_hits_cte('lk', 'lakes')},
 {_pip_hits_cte('fd', 'fields')},
-{_dist_hits_cte('hl', 'hills_nodes', W.DIST_HILL_DEG)},
-{_dist_hits_cte('rv', 'rivers', W.DIST_RIVER_DEG)},
 gl AS (
   SELECT osm_id, SUM({og.quantize_um(og.seg_len_geo_m())}) AS geo_len_um
   FROM segs GROUP BY osm_id
@@ -363,9 +300,7 @@ bb AS (
 ),
 inraw AS (
   SELECT b.osm_id, b.highway, b.ref, b.lanes, b.surface,
-         COALESCE(h.hadj_upgrade, FALSE) AS hadj_upgrade,
-         {_setting_sql()} AS road_setting,
-         COALESCE(tw_p.twist_permille, 0) AS twist_permille,
+         {br_cols},
          COALESCE(gl.geo_len_um, 0) AS geo_len_um,
          (CASE WHEN fo.osm_id IS NOT NULL THEN 1 ELSE 0 END
           + CASE WHEN hl.osm_id IS NOT NULL THEN 1 ELSE 0 END
@@ -377,15 +312,11 @@ inraw AS (
   FROM (SELECT * FROM roads_base WHERE highway IN ({bik})) b
   JOIN bb USING (osm_id)
   JOIN reps p USING (osm_id)
-  LEFT JOIN h_per h USING (osm_id)
-  LEFT JOIN cl_per c USING (osm_id)
-  LEFT JOIN tw_p USING (osm_id)
   LEFT JOIN gl USING (osm_id)
+  {br_joins}
   LEFT JOIN fo ON fo.osm_id = b.osm_id
   LEFT JOIN lk ON lk.osm_id = b.osm_id
   LEFT JOIN fd ON fd.osm_id = b.osm_id
-  LEFT JOIN hl ON hl.osm_id = b.osm_id
-  LEFT JOIN rv ON rv.osm_id = b.osm_id
   LEFT JOIN bc ON bc.osm_id = b.osm_id
 ),
 in58 AS (
@@ -396,26 +327,9 @@ in58 AS (
          surface, road_setting, twist_permille, geo_len_um, n_scenery
   FROM inraw
 ),
-f58 AS (
-  SELECT *,
-         {facs}
-  FROM in58
-),
-r58 AS (
-  SELECT *,
-         {raws}
-  FROM f58
-),
-b58 AS (
-  SELECT *,
-         {bases}
-  FROM r58
-)
-SELECT osm_id, road_type_i1,
-       CAST(n_scenery AS BIGINT) AS n_scenery,
-       {out_facs},
-       {out_bases}
-FROM b58"""
+{ladder}
+SELECT {outs}
+FROM {last}"""
 
 
 @register("q58_persona_v1_simplified", _q58_sql())
@@ -435,8 +349,6 @@ def q58_persona_v1_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_persona_road_branches`` builder both composites call); the only new
     work is the formula ladder, pure Catalyst CASE expressions.  Scenery
     flags are existence semi-joins, no pair distinct."""
-    from ..operators import persona as P
-
     sfl = P.spark_fl
     r = world.roads_materialized(spark, sf_dir)
     feats = world.features(spark, sf_dir)
@@ -517,14 +429,5 @@ def q58_persona_v1_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 3-stage ladder AND the output projection as ONE analyzed
     # statement (the q46 note applies; a trailing .select() would
     # re-analyze the full 8-join tree once more)
-    out_cols = ["osm_id", "road_type_i1",
-                "CAST(n_scenery AS BIGINT) AS n_scenery"]
-    for c in P.V1_FACTOR_COLS:
-        out_cols.append(f"{P.quant(sfl, c)} AS {c[2:]}_micro")
-    for c in P.V1_PERSONA_COLS:
-        out_cols.append(f"{P.quant(sfl, f'{c}_base')} "
-                        f"AS {c.replace('v1_', '')}_base_micro")
-    return _apply_ladder(spark, inputs,
-                         (P.v1_factor_exprs(sfl), P.v1_raw_exprs(sfl),
-                          P.v1_base_exprs(sfl)),
-                         "_q58_inputs", final=out_cols)
+    return _apply_ladder(spark, inputs, P.v1_ladder(sfl), "_q58_inputs",
+                         final=P.v1_outputs(sfl))

@@ -681,7 +681,8 @@ GROUP BY c.osm_id, c.grid_id"""
 
 # Shared q38/q41 checkpoint-store parameters: ONE derivation for the stage
 # name, output dir, lineage hash, range list and range width, so the metrics
-# query (q41) and its oracle can never drift from the stage writer (q38).
+# query (q41), its oracle and ``job.py --checkpointed`` can never drift from
+# the stage writer (q38).
 PIECES_STAGE = "pieces_rollup"
 _Q38_N_RANGES = 16
 
@@ -700,16 +701,29 @@ def pieces_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count("*").alias("n_segs")))
 
 
-def _q38_store(sf_dir: str) -> tuple[str, str, list[tuple[int, int]]]:
-    import tempfile
-
+def run_pieces_stage(spark: SparkSession, sf_dir: str, out_dir: str,
+                     n_ranges: int) -> tuple[dict, str]:
+    """Write ``pieces_rollup`` into ``out_dir`` in ``n_ranges`` grid_id
+    ranges, resuming ranges already done under the same lineage (the stage
+    name, ``sf_dir`` and the world's DATA_VERSION).  Returns
+    ``checkpoint.run_stage``'s result and the lineage."""
     from ..plans import checkpoint as CP
+
+    lin = CP.lineage_hash(PIECES_STAGE, [sf_dir], version=W.DATA_VERSION)
+    res = CP.run_stage(spark, PIECES_STAGE, lambda: pieces_rollup(spark, sf_dir),
+                       "grid_id", CP.make_ranges(0, W.NX * W.NY, n_ranges),
+                       out_dir, lin)
+    return res, lin
+
+
+def _q38_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Run the stage into q38/q41's store (a no-op resume once every range
+    is done); returns the store's directory and lineage."""
+    import tempfile
 
     out_dir = (f"{tempfile.gettempdir()}/osm_engine_ckpt_q38_"
                f"{world.cache_key(sf_dir)}")
-    lin = CP.lineage_hash(PIECES_STAGE, [sf_dir], version=W.DATA_VERSION)
-    ranges = CP.make_ranges(0, W.NX * W.NY, _Q38_N_RANGES)
-    return out_dir, lin, ranges
+    return out_dir, run_pieces_stage(spark, sf_dir, out_dir, _Q38_N_RANGES)[1]
 
 
 def _q38_range_width() -> int:
@@ -729,9 +743,7 @@ def q38_checkpointed_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..plans import checkpoint as CP
 
-    out_dir, lin, ranges = _q38_store(sf_dir)
-    CP.run_stage(spark, PIECES_STAGE, lambda: pieces_rollup(spark, sf_dir),
-                 "grid_id", ranges, out_dir, lin)
+    out_dir, lin = _q38_store(spark, sf_dir)
     out = CP.load_stage(spark, out_dir, PIECES_STAGE, lin)
     return out.select("osm_id", "grid_id",
                       F.col("piece_um").cast("long").alias("piece_um"),
@@ -762,9 +774,7 @@ def q41_checkpoint_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lineage manifest itself is part of the graded contract (3.4)."""
     from ..plans import checkpoint as CP
 
-    # ensure the stage ran (no-op resume when the manifest is complete)
-    q38_checkpointed_pieces(spark, sf_dir).count()
-    out_dir, lin, _ = _q38_store(sf_dir)
+    out_dir, lin = _q38_store(spark, sf_dir)
     rows = [(int(r["range_id"]), int(r["output_rows"]))
             for r in CP.live_records(out_dir, PIECES_STAGE, lin)
             if r["output_rows"] > 0]

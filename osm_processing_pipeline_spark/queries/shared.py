@@ -39,11 +39,11 @@ def register(name: str, oracle_sql: str):
 #   _urban_comp_sql_ctes               q27 q35 q48
 #   _dg_sql_ctes (degradation)         q28 q46
 #   _wc_sql_ctes (WorldCover buffer)   q45 q46
-#   _cl_sql_ctes (classification)      q01 q46 q58
-#   _hadj_sql_ctes (HAdj upgrade)      q09 q46 q58
-#   _tw_sql_ctes (twistiness)          q08 q46 q58
-#   _setting_sql (road setting)        q01 q46 q58
-#   _dist_hits_cte                     q46 q58
+#   _cl_sql_ctes (classification)      q01, q46 q58 via _persona_branch_sql
+#   _hadj_sql_ctes (HAdj upgrade)      q09, q46 q58 via _persona_branch_sql
+#   _tw_sql_ctes (twistiness)          q08, q46 q58 via _persona_branch_sql
+#   _setting_sql (road setting)        q01, q46 q58 via _persona_branch_sql
+#   _dist_hits_cte                     q46 q58 via _persona_branch_sql
 #   _pip_hits_cte                      q46 q58
 #   _coast_sql_ctes, _coast_hits_cte   q53 q58
 #   _isect_cte (intersection nodes)    q07 q28 q46

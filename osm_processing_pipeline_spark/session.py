@@ -55,10 +55,8 @@ def _default_driver_mem() -> str:
 
 
 def get_spark(app_name: str = "osm-spark-engine",
-              cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS",
-                                        len(os.sched_getaffinity(0))))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = os.environ.get("SPARK_MASTER", f"local[{cores}]")
     shuffle = shuffle_partitions or max(cores, 8)
     builder = (

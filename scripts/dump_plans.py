@@ -46,7 +46,7 @@ def main() -> None:
     from osm_processing_pipeline_spark import registry
     from osm_processing_pipeline_spark.session import get_spark
 
-    spark = get_spark("plans", cores=8)
+    spark = get_spark("plans")
     # AQE hides codegen/strategy annotations in explain (isFinalPlan=false);
     # disable it for plan DUMPING only — runtime keeps AQE on (session.py)
     spark.conf.set("spark.sql.adaptive.enabled", "false")

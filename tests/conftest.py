@@ -1,3 +1,5 @@
+import tempfile
+
 import duckdb
 import pytest
 
@@ -10,9 +12,17 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _session_tempdir(tmp_path_factory):
+    """Code that stores under ``tempfile.gettempdir()`` (q38/q41's checkpoint
+    store) writes under this session's own directory, so two test runs on
+    one host never share it."""
+    tempfile.tempdir = str(tmp_path_factory.mktemp("tmp"))
+
+
 @pytest.fixture(scope="session")
 def spark():
-    return get_spark("osm-spark-tests", cores=8, shuffle_partitions=8)
+    return get_spark("osm-spark-tests")
 
 
 def duck(sf_dir: str = SF_SMOKE) -> duckdb.DuckDBPyConnection:

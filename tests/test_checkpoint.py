@@ -13,8 +13,6 @@ from osm_processing_pipeline_spark.plans import checkpoint as CP
 from osm_processing_pipeline_spark.worldspec import NX, NY
 from tests.conftest import SF_SMOKE
 
-OUT = "/tmp/osm_ckpt_test"
-
 
 def _pieces_fn(spark):
     def fn():
@@ -26,32 +24,32 @@ def _pieces_fn(spark):
     return fn
 
 
-def test_checkpoint_resume_and_invalidate(spark):
-    shutil.rmtree(OUT, ignore_errors=True)
+def test_checkpoint_resume_and_invalidate(spark, tmp_path):
+    out = str(tmp_path / "ckpt")
     ranges = CP.make_ranges(0, NX * NY, 8)
     lin = CP.lineage_hash("pieces", [SF_SMOKE], version="1")
 
     r1 = CP.run_stage(spark, "pieces", _pieces_fn(spark), "grid_id",
-                      ranges, OUT, lin)
+                      ranges, out, lin)
     assert len(r1["computed"]) == 8 and not r1["skipped"]
-    first_pd = CP.load_stage(spark, OUT).toPandas() \
+    first_pd = CP.load_stage(spark, out).toPandas() \
         .sort_values(["osm_id", "grid_id"]).reset_index(drop=True)
     n1 = len(first_pd)
     assert n1 == r1["rows"] > 0
 
     # resume: everything skipped, nothing recomputed, same data
     r2 = CP.run_stage(spark, "pieces", _pieces_fn(spark), "grid_id",
-                      ranges, OUT, lin)
+                      ranges, out, lin)
     assert len(r2["skipped"]) == 8 and not r2["computed"]
     assert r2["rows"] == n1
 
     # partial failure: wipe two ranges -> only those recompute
-    shutil.rmtree(f"{OUT}/range=3")
-    shutil.rmtree(f"{OUT}/range=5")
+    shutil.rmtree(f"{out}/range=3")
+    shutil.rmtree(f"{out}/range=5")
     r3 = CP.run_stage(spark, "pieces", _pieces_fn(spark), "grid_id",
-                      ranges, OUT, lin)
+                      ranges, out, lin)
     assert sorted(r3["computed"]) == [3, 5] and len(r3["skipped"]) == 6
-    after_pd = CP.load_stage(spark, OUT).toPandas() \
+    after_pd = CP.load_stage(spark, out).toPandas() \
         .sort_values(["osm_id", "grid_id"]).reset_index(drop=True)
     # bit-identical content after resume
     assert len(after_pd) == n1
@@ -60,59 +58,56 @@ def test_checkpoint_resume_and_invalidate(spark):
     # lineage change invalidates all checkpoints
     lin2 = CP.lineage_hash("pieces", [SF_SMOKE], version="2")
     r4 = CP.run_stage(spark, "pieces", _pieces_fn(spark), "grid_id",
-                      ranges, OUT, lin2)
+                      ranges, out, lin2)
     assert len(r4["computed"]) == 8
 
     # manifest carries per-range metrics
-    man = CP.read_manifest(OUT)
+    man = CP.read_manifest(out)
     assert all({"stage", "range_id", "output_rows", "wall_s", "lineage"}
                <= set(m) for m in man)
-    shutil.rmtree(OUT, ignore_errors=True)
 
 
-def test_load_stage_ignores_stale_ranges_of_shrunk_layout(spark):
+def test_load_stage_ignores_stale_ranges_of_shrunk_layout(spark, tmp_path):
     """A re-run under a new lineage with FEWER ranges must not silently read
     the old layout's leftover range=N directories back in."""
-    shutil.rmtree(OUT, ignore_errors=True)
+    out = str(tmp_path / "ckpt")
     wide = CP.make_ranges(0, NX * NY, 8)
     lin_a = CP.lineage_hash("pieces", [SF_SMOKE], version="A")
     CP.run_stage(spark, "pieces", _pieces_fn(spark), "grid_id",
-                 wide, OUT, lin_a)
-    total = CP.load_stage(spark, OUT, "pieces", lin_a).count()
+                 wide, out, lin_a)
+    total = CP.load_stage(spark, out, "pieces", lin_a).count()
 
     # new lineage, 2 ranges covering only the first half of the key space:
     # ranges 2..7 from layout A stay on disk but must NOT be read
     narrow = CP.make_ranges(0, (NX * NY) // 2, 2)
     lin_b = CP.lineage_hash("pieces", [SF_SMOKE], version="B")
     CP.run_stage(spark, "pieces", _pieces_fn(spark), "grid_id",
-                 narrow, OUT, lin_b)
-    got = CP.load_stage(spark, OUT, "pieces", lin_b)
+                 narrow, out, lin_b)
+    got = CP.load_stage(spark, out, "pieces", lin_b)
     assert got.count() < total
     assert got.select(F.max("grid_id")).first()[0] < (NX * NY) // 2
     # unfiltered, the live records of both lineages are read: layout A's
     # second half is still on disk, its first half is superseded by B
-    assert CP.load_stage(spark, OUT).count() > got.count()
-    shutil.rmtree(OUT, ignore_errors=True)
+    assert CP.load_stage(spark, out).count() > got.count()
 
 
-def test_load_stage_without_manifest_record_raises(spark):
+def test_load_stage_without_manifest_record_raises(spark, tmp_path):
     """A stage or lineage with no manifest record is an error naming both —
     never a glob over whatever range=N directories happen to be on disk."""
-    shutil.rmtree(OUT, ignore_errors=True)
+    out = str(tmp_path / "ckpt")
     lin = CP.lineage_hash("ids", ["x"])
     CP.run_stage(spark, "ids", lambda: spark.range(64), "id",
-                 CP.make_ranges(0, 64, 4), OUT, lin)
-    assert CP.load_stage(spark, OUT, "ids", lin).count() == 64
+                 CP.make_ranges(0, 64, 4), out, lin)
+    assert CP.load_stage(spark, out, "ids", lin).count() == 64
     for stage, lineage in (("ids", "stale"), ("other", lin), ("other", None)):
         with pytest.raises(FileNotFoundError,
                            match=f"stage={stage!r} lineage={lineage!r}"):
-            CP.load_stage(spark, OUT, stage, lineage)
+            CP.load_stage(spark, out, stage, lineage)
     # stale range dirs with no manifest at all are not read either
-    os.remove(CP._manifest_path(OUT))
-    assert os.path.isdir(f"{OUT}/range=0")
+    os.remove(CP._manifest_path(out))
+    assert os.path.isdir(f"{out}/range=0")
     with pytest.raises(FileNotFoundError, match="stage=None lineage=None"):
-        CP.load_stage(spark, OUT)
-    shutil.rmtree(OUT, ignore_errors=True)
+        CP.load_stage(spark, out)
 
 
 def test_job_checkpointed_lineage_follows_data_version(spark, tmp_path,

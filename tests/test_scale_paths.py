@@ -73,6 +73,19 @@ def test_apply_ladder_sql_matches_loop(spark):
     assert got_f.collect() == want_f.collect()
 
 
+def test_ivf_training_releases_its_checkpoint(spark):
+    """train_ivf_centroids returns driver-side lists, so no RDD it
+    checkpointed stays persisted after it returns."""
+    from osm_processing_pipeline_spark.operators import similarity as sim
+
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.getPersistentRDDs().size()
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    cents = sim.train_ivf_centroids(emb, n_lists=8)
+    assert len(cents) == 8
+    assert sc.getPersistentRDDs().size() == before
+
+
 def test_ivf_arrow_kernels_match_catalyst_pair(spark):
     """The vectorized IVF kernels (_assign_lists, _centroid_partials) must
     be integer-identical to the Catalyst _score_cols/_argmin2 pair they

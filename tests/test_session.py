@@ -16,3 +16,10 @@ def test_driver_memory_fits_the_host(spark):
         total = int(f.readline().split()[1]) * 1024
     assert to_bytes(asked) <= total, \
         f"driver asks for {asked}, host has {total / 2 ** 30:.1f} GiB"
+
+
+def test_parallelism_follows_the_host(spark):
+    """The session runs on SPARK_GRAFT_CPUS cores, or on the process's CPU
+    affinity when that is unset."""
+    want = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    assert spark.sparkContext.defaultParallelism == want
